@@ -3,9 +3,11 @@
 Reference: QuestDB n-dim DOUBLE arrays (``cairo/arr/``,
 ``functions/array/`` — 49 files: slice/flatten/transpose, elementwise ops,
 dot product, matmul, cumsum, insertion_point, per-array aggregations).
-Spark-side: 1-D ops are higher-order functions (codegen); matmul/transpose
-on nested arrays use a vectorized Pandas UDF (numpy) — the documented
-slow path, used only where HOFs genuinely can't express the op.
+Spark-side: ops are higher-order functions (codegen); transpose on nested
+arrays uses a vectorized Pandas UDF (numpy) — the documented slow path,
+used only where HOFs genuinely can't express the op.  The 1-D array
+functions the dialect exposes are lowered to SQL text in
+``sqlfront/engine.py``.
 """
 
 from __future__ import annotations
@@ -21,183 +23,9 @@ def array_sum(a: Column) -> Column:
     return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def array_avg(a: Column) -> Column:
-    return array_sum(a) / F.size(a)
-
-
-def array_min_(a: Column) -> Column:
-    return F.array_min(a)
-
-
-def array_max_(a: Column) -> Column:
-    return F.array_max(a)
-
-
-def array_cum_sum(a: Column) -> Column:
-    """Running-sum array (QuestDB array_cum_sum)."""
-    idx = F.sequence(F.lit(1), F.size(a))
-    return F.transform(
-        idx,
-        lambda i: F.aggregate(
-            F.slice(a, F.lit(1), i.cast("int")), F.lit(0.0), lambda acc, x: acc + x
-        ),
-    )
-
-
-def dot_product(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
 def scale(a: Column, k: Column | float) -> Column:
     kk = F.lit(k) if isinstance(k, (int, float)) else k
     return F.transform(a, lambda x: x * kk)
-
-
-def elementwise_add(a: Column, b: Column) -> Column:
-    return F.zip_with(a, b, lambda x, y: x + y)
-
-
-def insertion_point(a: Column, v: Column) -> Column:
-    """Index (1-based) where v would insert into ascending-sorted a
-    (QuestDB insertion_point)."""
-    return F.size(F.filter(a, lambda x: x < v)) + 1
-
-
-def array_slice(a: Column, start: int, length: int) -> Column:
-    return F.slice(a, start, length)
-
-
-@pandas_udf("array<array<double>>")
-def transpose_udf(m: pd.Series) -> pd.Series:
-    """2-D transpose (QuestDB transpose()) — numpy-backed Pandas UDF."""
-    return m.map(lambda rows: np.asarray(list(rows), dtype=float).T.tolist())
-
-
-@pandas_udf("array<array<double>>")
-def matmul_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """2-D matrix multiply (QuestDB matmul()) — numpy-backed Pandas UDF."""
-    out = []
-    for ma, mb in zip(a, b):
-        out.append(
-            (np.asarray(list(ma), dtype=float) @ np.asarray(list(mb), dtype=float)).tolist()
-        )
-    return pd.Series(out)
-
-
-def _finite(a: Column) -> Column:
-    """Elements that are non-null and non-NaN (QuestDB DOUBLE arrays use
-    NaN as the null representation; every array/ aggregation skips it)."""
-    return F.filter(a, lambda x: x.isNotNull() & ~F.isnan(x))
-
-
-def _nonfinite(a: Column) -> Column:
-    return F.filter(a, lambda x: x.isNull() | F.isnan(x))
-
-
-def array_sort_(a: Column, desc: bool = False, nulls_first: bool = False) -> Column:
-    """array_sort (DoubleArraySortFunctionFactory / ...Desc / ...Full):
-    NaNs are pulled out, the finite run is sorted (optionally descending),
-    and NaNs are re-appended at the end (or front with nulls_first)."""
-    s = F.array_sort(_finite(a))
-    if desc:
-        s = F.reverse(s)
-    nans = _nonfinite(a)
-    return F.concat(nans, s) if nulls_first else F.concat(s, nans)
-
-
-def array_count(a: Column) -> Column:
-    """Count of finite elements (DoubleArrayCountFunctionFactory)."""
-    return F.size(_finite(a))
-
-
-def _var_terms(a: Column) -> tuple[Column, Column, Column]:
-    fa = _finite(a)
-    n = F.size(fa).cast("double")
-    s = F.aggregate(fa, F.lit(0.0), lambda acc, x: acc + x)
-    sq = F.aggregate(fa, F.lit(0.0), lambda acc, x: acc + x * x)
-    return n, s, sq
-
-
-def array_stddev_samp(a: Column) -> Column:
-    """array_stddev / array_stddev_samp (DoubleArrayStdDev[Samp]FunctionFactory):
-    sample stddev over finite elements; NULL (QuestDB NaN) when n < 2."""
-    n, s, sq = _var_terms(a)
-    return F.when(n >= 2, F.sqrt((sq - s * s / n) / (n - F.lit(1.0))))
-
-
-def array_stddev_pop(a: Column) -> Column:
-    """array_stddev_pop: population stddev over finite elements; NULL if empty."""
-    n, s, sq = _var_terms(a)
-    return F.when(n >= 1, F.sqrt((sq - s * s / n) / n))
-
-
-def array_avg_finite(a: Column) -> Column:
-    """array_avg (DoubleArrayAvgFunctionFactory:105 — Numbers.isFinite
-    guard): mean of finite elements only."""
-    n, s, _ = _var_terms(a)
-    return F.when(n >= 1, s / n)
-
-
-def array_round(a: Column, decimals: int | Column = 0) -> Column:
-    """round(D[]I) (DoubleArrayRoundFunctionFactory): per-element half-up."""
-    return F.transform(a, lambda x: F.round(x, decimals))
-
-
-def array_shift(a: Column, k: int, default: Column | float = float("nan")) -> Column:
-    """shift(arr, distance[, default]) (DoubleArrayShift[DefaultNaN]
-    FunctionFactory): positive distance shifts right (defaults fill the
-    head), negative shifts left (defaults fill the tail); |distance| >=
-    length yields all-default."""
-    d = F.lit(default) if not isinstance(default, Column) else default
-    n = F.size(a)
-    if k == 0:
-        return a
-    kk = F.lit(abs(k))
-    pad = F.array_repeat(d, abs(k))
-    if k > 0:
-        kept = F.slice(a, 1, F.greatest(n - kk, F.lit(0)))
-        return F.slice(F.concat(pad, kept), 1, n)
-    kept = F.slice(a, kk + 1, F.greatest(n - kk, F.lit(0)))
-    return F.slice(F.concat(kept, pad), 1, n)
-
-
-def array_position_(a: Column, v: Column | float) -> Column:
-    """array_position (DoubleArrayPositionFunctionFactory, 1-D only):
-    1-based index of the first exact match, NULL when absent."""
-    vv = F.lit(v) if not isinstance(v, Column) else v
-    return F.nullif(F.array_position(a, vv), F.lit(0))
-
-
-def array_reverse_(a: Column) -> Column:
-    """array_reverse (DoubleArrayReverseFunctionFactory)."""
-    return F.reverse(a)
-
-
-def array_neg(a: Column) -> Column:
-    """Unary minus over an array (DoubleNegArrayFunctionFactory)."""
-    return F.transform(a, lambda x: -x)
-
-
-def scalar_op_array(s: Column | float, a: Column, op: str) -> Column:
-    """scalar ∘ array forms (DoubleScalarDivArray / DoubleScalarSubtractArray)
-    and their array ∘ scalar twins (Add/Subtract/Multiply/DivScalar)."""
-    sv = F.lit(s) if not isinstance(s, Column) else s
-    fns = {
-        "s-a": lambda x: sv - x,
-        "s/a": lambda x: sv / x,
-        "a-s": lambda x: x - sv,
-        "a/s": lambda x: x / sv,
-        "a+s": lambda x: x + sv,
-        "a*s": lambda x: x * sv,
-    }
-    return F.transform(a, fns[op])
-
-
-def insertion_point_after(a: Column, v: Column) -> Column:
-    """insertion_point(arr, v, true) — after-equal variant
-    (DoubleArrayInsertionPointAfterEqualFunctionFactory): 1-based index
-    after the last element <= v in ascending-sorted a."""
-    return F.size(F.filter(a, lambda x: x <= v)) + 1
 
 
 def dim_length(a: Column, dim: int) -> Column:

@@ -57,16 +57,6 @@ def wide(*limbs: Column | int) -> Column:
     return F.struct(*cols)
 
 
-def from_long(x: Column) -> Column:
-    """Non-negative LONG → wide (two limbs cover the int64 range).
-    High limb via subtract-remainder-then-divide: the quotient is exactly
-    integral, so no float/rounded-decimal division is ever involved."""
-    x = x.cast("long")
-    lo = x % F.lit(LIMB)
-    hi = ((x - lo).cast("decimal(38,0)") / F.lit(LIMB)).cast("long")
-    return wide(lo, hi)
-
-
 def _ripple(limbs: list[Column]) -> Column:
     """Carry-normalize: limb i keeps value % 10¹⁸, carry goes to limb i+1.
     Inputs may be any exact numeric (long or decimal(38,0) partial sums);
@@ -320,27 +310,22 @@ def from_string(s: Column) -> Column:
     return F.struct(*[l.alias(f) for l, f in zip(limbs, FIELDS)])
 
 
-# -- DataFrame-level staged division ----------------------------------------
+# -- SQL-text limb arithmetic ------------------------------------------------
+#
+# py4j Column-tree construction is a measured per-query build cost
+# (~0.4 ms/round-trip; decimal256_div spent ~0.5 s of its 2 s building
+# 1216 round-trips — r14 profiling).  These helpers render the SAME limb
+# arithmetic as the Column functions above, as Spark-SQL expression
+# STRINGS, so a whole query builds in one spark.sql parse.
 #
 # The Column-expression divmod above chains each remainder into the next
 # accumulator, and every reuse of a subexpression re-embeds its whole
 # tree — compile cost grows ~3^limbs per composite, which is Catalyst/
 # codegen time, not row time (the r6 div registry query paid a
-# scale-invariant ~7s cold / ~2s codegen-cached). Staging each division
+# scale-invariant ~7s cold / ~2s codegen-cached).  Staging each division
 # step as a NAMED attribute keeps the tree linear: CollapseProject leaves
 # multiply-referenced non-cheap aliases in their own projection, so the
 # measured cost halves (3.4s cold / 1.0s cached, same query).
-
-
-# -- SQL-text twins ----------------------------------------------------------
-#
-# py4j Column-tree construction is a measured per-query driver cost
-# (~0.4 ms/round-trip; decimal256_div spent ~0.5 s of its 2 s building
-# 1216 round-trips — r14 profiling).  These helpers render the SAME limb
-# arithmetic as Spark-SQL expression STRINGS so a whole query builds in
-# one spark.sql parse.  Each mirrors its Column twin above token for
-# token (same casts, same literals, same subtree embedding), and the
-# equivalence is pinned by tests comparing both routes row-exactly.
 
 LIMB_SQL = "1000000000000000000"
 
@@ -351,11 +336,15 @@ def sql_staged_divmod(
     d_sql: str,
     prefix: str,
 ) -> tuple[list[tuple[str, str]], list[str], str]:
-    """String twin of :func:`staged_divmod`: returns (CTE list as
+    """Schoolbook base-10¹⁸ long division staging ONLY the per-step
+    remainders as named CTE attributes, so each accumulator
+    ``rem·10¹⁸ + limb`` and quotient digit ``(acc − r)/d`` references
+    attributes only and every compiled subtree is O(1) deep.  Same
+    arithmetic as :func:`_divmod_limbs`.  Returns (CTE list as
     (name, select_sql) staging each remainder over ``from_cte``,
     little-endian quotient expression strings, remainder column name).
-    ``d_sql`` must be the divisor expression BEFORE the decimal(38,0)
-    cast (applied here, as the Column twin does)."""
+    ``d_sql`` is the divisor expression BEFORE the decimal(38,0) cast,
+    which is applied here."""
     dd = f"CAST({d_sql} AS DECIMAL(38,0))"
     ctes: list[tuple[str, str]] = []
     rem = "CAST(0 AS DECIMAL(38,0))"
@@ -413,31 +402,3 @@ def sql_to_string_limbs(limbs: list[str]) -> str:
         f"lpad(CAST({l} AS STRING), 18, '0')" for l in reversed(limbs)
     )
     return f"regexp_replace(concat({padded}), '^0+(?=\\\\d)', '')"
-
-
-def staged_divmod(
-    df: "DataFrame",
-    limb_cols: list[str],
-    d_col: Column,
-    prefix: str,
-) -> tuple["DataFrame", list[Column], str]:
-    """Schoolbook base-10¹⁸ long division staging ONLY the per-step
-    remainders as named attributes (one withColumn each — the analysis
-    cost of staging is itself linear, so don't stage what can be rebuilt
-    cheaply). Each accumulator ``rem·10¹⁸ + limb`` and quotient digit
-    ``(acc − r)/d`` then references attributes only, so every compiled
-    subtree is O(1) deep. ``limb_cols`` are little-endian attribute
-    names on ``df``; returns (df', quotient limb Columns little-endian,
-    remainder column name). Same arithmetic as :func:`_divmod_limbs`."""
-    dd = d_col.cast("decimal(38,0)")
-    rem: Column = F.lit(0).cast("decimal(38,0)")
-    n = len(limb_cols)
-    qs: list[Column] = []
-    for step, i in enumerate(reversed(range(n))):
-        acc = rem * F.lit(LIMB) + F.col(limb_cols[i]).cast("decimal(38,0)")
-        r = f"{prefix}r{step}"
-        df = df.withColumn(r, acc % dd)
-        rem = F.col(r)
-        qs.append(((acc - rem) / dd).cast("long"))
-    qs.reverse()
-    return df, qs, f"{prefix}r{n - 1}"

@@ -31,11 +31,6 @@ def vwap(price: Column, volume: Column) -> Column:
     return F.sum(price * volume) / F.sum(volume)
 
 
-def wavg(value: Column, weight: Column) -> Column:
-    """Aggregate: weighted average (functions/groupby/WeightedAvg...)."""
-    return F.sum(value * weight) / F.sum(weight)
-
-
 def l2price(target_qty: Column, sizes: Column, prices: Column) -> Column:
     """Order-book sweep price: average execution price of buying
     ``target_qty`` by walking levels (size_i, price_i) in order.

@@ -45,8 +45,3 @@ def netmask(prefix_len: Column | int) -> Column:
 def ipv4_and(ip_long: Column, mask: Column) -> Column:
     """Bitwise AND (subnet extraction) — QuestDB `ip & netmask('…')`."""
     return ip_long.bitwiseAND(mask)
-
-
-def same_subnet(a: Column, b: Column, prefix_len: int) -> Column:
-    m = netmask(prefix_len)
-    return ipv4_and(a, m) == ipv4_and(b, m)

@@ -1,8 +1,8 @@
-"""Aggregate long-tail: haversine distance, Kahan/Neumaier sums, weighted
-stats, sparkline, UNION type harmonization.
+"""Aggregate long-tail: haversine distance, Kahan/Neumaier sums,
+sparkline, UNION type harmonization.
 
 Reference: ``griffin/engine/functions/groupby/`` — HaversineDistDegree...,
-KSumDouble/NSumDouble (compensated sums), weighted stddev, Sparkline...;
+KSumDouble/NSumDouble (compensated sums), Sparkline...;
 ``griffin/engine/union/...CastRecordCursor`` (§2.7 type harmonization).
 
 ksum/nsum exist in QuestDB to reduce float error in single-threaded loops;
@@ -34,34 +34,6 @@ def haversine_dist_deg(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -
     dl = F.radians(lon2 - lon1) / 2
     a = F.sin(dp) * F.sin(dp) + F.cos(p1) * F.cos(p2) * F.sin(dl) * F.sin(dl)
     return 2 * r * F.asin(F.sqrt(a))
-
-
-def haversine_path_agg(df: DataFrame, ts_col: str, lat: str, lon: str, keys: list[str]) -> DataFrame:
-    """Aggregate: total great-circle path length per key, consecutive points
-    ordered by the designated timestamp (the QuestDB aggregate form)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(ts_col)
-    seg = haversine_dist_deg(
-        F.lag(lat).over(w), F.lag(lon).over(w), F.col(lat), F.col(lon)
-    )
-    return (
-        df.withColumn("__seg", seg)
-        .groupBy(*keys)
-        .agg(F.sum("__seg").alias("path_km"), F.count(F.lit(1)).alias("n_points"))
-    )
-
-
-def weighted_mean_var(x: Column, w: Column) -> tuple[Column, Column]:
-    """Weighted mean and frequency-weighted sample variance
-    (QuestDB weighted stddev family). Returns (mean, var) aggregate pair —
-    use inside one .agg() via the helper columns."""
-    sw = F.sum(w)
-    swx = F.sum(w * x)
-    swxx = F.sum(w * x * x)
-    mean = swx / sw
-    var = (swxx - swx * swx / sw) / (sw - 1)
-    return mean, var
 
 
 _SPARK_BARS = "▁▂▃▄▅▆▇█"

@@ -55,11 +55,6 @@ def ns_trunc(ns: Column, amount: int, unit: str) -> Column:
     return ns - (ns % w)
 
 
-def ns_add(ns: Column, amount: int, unit: str) -> Column:
-    """dateadd at nano resolution (fixed-width units only)."""
-    return ns + F.lit(_width(amount, unit))
-
-
 def ns_diff(a: Column, b: Column) -> Column:
     """datediff in nanos: a - b."""
     return a - b

@@ -33,15 +33,3 @@ def salted_join(
     r = right.withColumn("__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
     out = l.join(r, [*keys, "__salt"], how)
     return out.drop("__salt")
-
-
-def repartition_time_sorted(
-    df: DataFrame, ts_col: str, partitions: int | None = None
-) -> DataFrame:
-    """Range-partition by the designated timestamp and sort within
-    partitions — restores the reference's physical ordering discipline
-    after shuffling operators, so downstream interval scans / asof merges
-    stay cheap."""
-    parts = [F.col(ts_col)]
-    rp = df.repartitionByRange(partitions, *parts) if partitions else df.repartitionByRange(*parts)
-    return rp.sortWithinPartitions(ts_col)

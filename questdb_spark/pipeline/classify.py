@@ -334,100 +334,6 @@ def nb_train(
     return buckets.unionByName(prior)
 
 
-def nb_train_score(
-    docs: DataFrame,
-    label_expr: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_feats: int = N_FEATS,
-) -> tuple[DataFrame, DataFrame]:
-    """Train the NB model AND score the training corpus in one composed
-    plan sharing a single tokenize pass (r14 opt, guide §2.4): a
-    ``nb_train`` + ``nb_score`` composition runs the corpus explode
-    twice — once keyed (bucket) for the model counts, once keyed
-    (doc, bucket) for the tf table.  The per-(doc, y, bucket) tf counts
-    subsume both: the model counts re-aggregate tf by bucket (exact
-    int64 sum-of-sums, the r13 nb_confusion discipline), and scoring
-    joins the model back onto the same tf exchange — which AQE runtime
-    exchange reuse executes ONCE.
-
-    Returns (model, scored): ``model`` row-identical to
-    ``nb_train(..., label_expr=...)``; ``scored`` row-identical to
-    ``nb_score(docs, model)`` with the doc's label carried along —
-    (id, y, score) so confusion-style consumers need no labels re-join.
-    """
-    from .text import tokens_col
-
-    spark = docs.sparkSession
-    tf = (
-        docs.select(
-            F.col(id_col),
-            label_expr.cast("long").alias("y"),
-            F.explode(tokens_col(F.col(text_col))).alias("__t"),
-        )
-        .select(id_col, "y", bucket_col(F.col("__t"), n_feats).alias("__j"))
-        .groupBy(id_col, "y", "__j")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    counts = tf.groupBy("__j").agg(
-        F.sum(F.when(F.col("y") == 1, F.col("tf")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("n_pos"),
-        F.sum(F.when(F.col("y") == -1, F.col("tf")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("n_neg"),
-    )
-    full = spark.range(n_feats).select(F.col("id").cast("long").alias("__j"))
-    counts = full.join(counts, "__j", "left").select(
-        "__j",
-        F.coalesce("n_pos", F.lit(0)).cast("long").alias("n_pos"),
-        F.coalesce("n_neg", F.lit(0)).cast("long").alias("n_neg"),
-    )
-    totals = counts.agg(
-        F.sum("n_pos").alias("t_pos"), F.sum("n_neg").alias("t_neg")
-    )
-    yl = label_expr.cast("long")
-    d_doc = docs.select(yl.alias("y")).agg(
-        F.sum((F.col("y") == 1).cast("long")).alias("d_pos"),
-        F.sum((F.col("y") == -1).cast("long")).alias("d_neg"),
-    )
-    w = (
-        F.log(
-            ((F.col("n_pos") + 1) * (F.col("t_neg") + F.lit(n_feats))).cast(
-                "double"
-            )
-            / ((F.col("n_neg") + 1) * (F.col("t_pos") + F.lit(n_feats))).cast(
-                "double"
-            )
-        ).cast("decimal(18,6)")
-    )
-    buckets = counts.crossJoin(F.broadcast(totals)).select(
-        F.col("__j").cast("int").alias("feature"), "n_pos", "n_neg",
-        w.alias("weight"),
-    )
-    prior = d_doc.select(
-        F.lit(n_feats).cast("int").alias("feature"),
-        F.col("d_pos").cast("long").alias("n_pos"),
-        F.col("d_neg").cast("long").alias("n_neg"),
-        F.log(F.col("d_pos").cast("double") / F.col("d_neg").cast("double"))
-        .cast("decimal(18,6)")
-        .alias("weight"),
-    )
-    model = buckets.unionByName(prior)
-    jw = buckets.select(F.col("feature").cast("long").alias("__j"), "weight")
-    pw = prior.select(F.col("weight").alias("__prior"))
-    scored = (
-        tf.join(F.broadcast(jw), "__j")
-        .groupBy(id_col, "y")  # y is constant per doc: same groups
-        .agg(F.sum(F.col("tf") * F.col("weight")).alias("__s"))
-        .crossJoin(F.broadcast(pw))
-        .select(
-            id_col, "y", (F.col("__s") + F.col("__prior")).alias("score")
-        )
-    )
-    return model, scored
-
-
 def nb_train_sql(
     docs: DataFrame,
     label_sql: str,
@@ -496,13 +402,27 @@ def nb_train_score_sql(
     id_col: str = "doc_id",
     n_feats: int = N_FEATS,
 ) -> tuple[DataFrame, DataFrame]:
-    """``nb_train_score`` with the whole composed plan rendered as SQL
-    text (r14 opt, guide §4 driver-side): the Column-chain build costs
-    ~1350 py4j round-trips (~0.5 s) per caller, the SQL parse ~40 ms.
+    """Train the NB model AND score the training corpus in one composed
+    plan sharing a single tokenize pass (r14 opt): a
+    ``nb_train`` + ``nb_score`` composition runs the corpus explode
+    twice — once keyed (bucket) for the model counts, once keyed
+    (doc, bucket) for the tf table.  The per-(doc, y, bucket) tf counts
+    subsume both: the model counts re-aggregate tf by bucket (exact
+    int64 sum-of-sums, the r13 nb_confusion discipline), and scoring
+    joins the model back onto the same tf exchange — which AQE runtime
+    exchange reuse executes ONCE.
+
     ``label_sql`` is the label as a SQL expression over the docs row
-    (e.g. "CASE WHEN lang = 'en' THEN 1 ELSE -1 END").  Expression-for-
-    expression the Column form — same casts, same ln/decimal quantization
-    — pinned by test_nb_train_score_sql_matches_column_route."""
+    (e.g. "CASE WHEN lang = 'en' THEN 1 ELSE -1 END").  Returns
+    (model, scored): ``model`` row-identical to ``nb_train(...)`` with
+    the same labels; ``scored`` row-identical to ``nb_score(docs,
+    model)`` with the doc's label carried along — (id, y, score) so
+    confusion-style consumers need no labels re-join.  Pinned by
+    ``test_nb_train_score_matches_separate_train_and_score``.
+
+    Rendered as SQL text: a Column-chain build
+    costs ~1350 py4j round-trips (~0.5 s) per caller, the SQL parse
+    ~40 ms."""
     from .dedup import _sql_tokens_text
 
     spark = docs.sparkSession

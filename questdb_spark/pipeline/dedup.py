@@ -357,8 +357,8 @@ def ngram_jaccard_pairs(
         # round-trips (~1000 socket calls) PER CALLER — ten registry
         # queries pay it — while the SQL text parses in ~40 ms.  Every
         # expression mirrors the Column form exactly (same casts, same
-        # division types); `test_fused_sql_matches_column_routes` pins the
-        # row-set equality and the oracle pins end-to-end results.
+        # division types); `test_fused_sql_route_matches_column_reference`
+        # pins the row-set equality and the oracle pins end-to-end results.
         return _fused_pairs_via_sql(
             df,
             id_col,
@@ -679,11 +679,20 @@ def ngram_contamination(
     text_col: str = "text",
     n: int = 8,
 ) -> DataFrame:
-    """Benchmark decontamination check — SQL-text route (same plan as the
-    Column reference :func:`_ngram_contamination_columns`, pinned
-    row-exact by ``test_ngram_contamination_sql_matches_column_route``;
-    one spark.sql parse replaces ~400 py4j round-trips across the two
-    registry callers — r14).  See the reference for semantics."""
+    """Benchmark decontamination check: for each corpus document, the
+    fraction of its DISTINCT word n-grams that appear anywhere in the
+    benchmark corpus — the standard n-gram-overlap test-set-contamination
+    screen for training data.
+
+    Output: (doc, n_grams, n_hit, contamination) for every corpus doc
+    with at least one n-gram.
+
+    Scale: the benchmark's distinct n-gram set is one aggregation; the
+    overlap is a single equi-join on the shingle (broadcast when the
+    benchmark is small, shuffle otherwise — never all-pairs), and the
+    per-doc ratio is one more groupBy.  Rendered as one spark.sql text:
+    one parse replaces ~400 py4j round-trips of Column-tree build across
+    the two registry callers — r14."""
     sh = _sql_shingles_text(_sql_tokens_text(text_col), n)
     q = f"""
 WITH c_sh AS (SELECT `{id_col}` AS doc, explode({sh}) AS shingle FROM {{corp}}),
@@ -700,48 +709,6 @@ SELECT doc, n_grams, coalesce(n_hit, 0) AS n_hit,
 FROM sizes LEFT JOIN hits USING (doc)
 """
     return corpus.sparkSession.sql(q, corp=_spread(corpus), bench=_spread(benchmark))
-
-
-def _ngram_contamination_columns(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
-    """Column-tree reference for :func:`ngram_contamination` — benchmark
-    decontamination check: for each corpus document, the
-    fraction of its DISTINCT word n-grams that appear anywhere in the
-    benchmark corpus — the standard n-gram-overlap test-set-contamination
-    screen for training data.
-
-    Output: (doc, n_grams, n_hit, contamination) for every corpus doc
-    with at least one n-gram.
-
-    Scale: the benchmark's distinct n-gram set is one aggregation; the
-    overlap is a single equi-join on the shingle (broadcast when the
-    benchmark is small, shuffle otherwise — never all-pairs), and the
-    per-doc ratio is one more groupBy. Everything is JVM-side."""
-    c_sh = _shingle_table(corpus, id_col, text_col, n)
-    b_sh = (
-        _shingle_table(benchmark, id_col, text_col, n)
-        .select("shingle")
-        .distinct()
-    )
-    sizes = c_sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_grams"))
-    hits = (
-        c_sh.join(b_sh, "shingle")
-        .groupBy("doc")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    return sizes.join(hits, "doc", "left").select(
-        "doc",
-        "n_grams",
-        F.coalesce(F.col("n_hit"), F.lit(0)).alias("n_hit"),
-        (
-            F.coalesce(F.col("n_hit"), F.lit(0)) / F.col("n_grams")
-        ).alias("contamination"),
-    )
 
 
 def minhash_signature(

@@ -218,59 +218,6 @@ def decode_image(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return src.mapInPandas(decode, schema=DECODE_SCHEMA)
 
 
-# -- legacy round-4 surface (kept: other tests/pipelines reference it) -----
-
-LEGACY_DECODE_SCHEMA = (
-    "doc_id long, n_bytes int, first_byte int, checksum bigint, "
-    "fake_width int, fake_height int"
-)
-
-
-def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Model an opaque media column: utf-8 bytes of text stand in for an
-    encoded image. Real data would already carry BinaryType."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
-
-
-def decode_image_stub(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Round-4 stub: deterministic fake features from raw bytes (no real
-    header parse).  Superseded by ``decode_image`` but kept for the
-    unknown-format contract and existing tests."""
-    src = df.select(F.col(id_col).alias("doc_id"), "payload")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            if len(payloads) == 0:
-                continue
-            n_bytes = payloads.str.len().to_numpy(dtype=np.int64)
-            checksum = np.fromiter(
-                (
-                    int(np.frombuffer(bytes(p), dtype=np.uint8).sum()) % 1_000_003
-                    for p in payloads
-                ),
-                dtype=np.int64,
-                count=len(payloads),
-            )
-            first = np.fromiter(
-                (p[0] if len(p) else -1 for p in payloads),
-                dtype=np.int64,
-                count=len(payloads),
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": n_bytes.astype("int32"),
-                    "first_byte": first.astype("int32"),
-                    "checksum": checksum,
-                    "fake_width": (checksum % 640).astype("int32"),
-                    "fake_height": (checksum % 480).astype("int32"),
-                }
-            )
-
-    return src.mapInPandas(decode, schema=LEGACY_DECODE_SCHEMA)
-
-
 # -- video containers: frame sampling (r9) -----------------------------------
 #
 # The brief's frame-sample op: video = an opaque binary container of

@@ -52,10 +52,11 @@ def stopword_hits(tokens: Column, words: list[str]) -> Column:
 
 
 def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality metrics — SQL-text route (same expressions as
-    the Column reference :func:`_text_stats_columns`, pinned row-exact by
-    ``test_text_stats_sql_matches_column_route``; one spark.sql parse
-    replaces ~200 py4j round-trips per caller — r14)."""
+    """Per-document quality metrics: token count, char count, average
+    token length, stopword ratio, digit ratio, distinct-token ratio
+    (type/token — a repetition signal).  One spark.sql text (one parse
+    replaces ~200 py4j round-trips of Column-tree build per caller —
+    r14)."""
     toks = f"split(lower(trim(`{text_col}`)), '\\\\s+')"
     wl = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
     keep = ", ".join(f"`{c}`" for c in df.columns if c != text_col)
@@ -71,33 +72,6 @@ SELECT {keep},
 FROM t
 """
     return df.sparkSession.sql(q, inp=df)
-
-
-def _text_stats_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Column-tree reference for :func:`text_stats` — per-document quality
-    metrics: token count, char count, average token
-    length, stopword ratio, uppercase ratio, digit ratio, distinct-token
-    ratio (type/token — a repetition signal)."""
-    toks = tokens_col(F.col(text_col))
-    n_tok = F.size(toks)
-    tok_chars = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return df.withColumn("__toks", toks).select(
-        *[c for c in df.columns if c != text_col],
-        n_tok.alias("n_tokens"),
-        F.length(F.col(text_col)).alias("n_chars_actual"),
-        (tok_chars / F.size(F.col("__toks"))).alias("avg_token_len"),
-        (
-            stopword_hits(F.col("__toks"), STOPWORDS["en"]) / F.size(F.col("__toks"))
-        ).alias("stopword_ratio_en"),
-        (F.size(F.array_distinct(F.col("__toks"))) / F.size(F.col("__toks"))).alias(
-            "distinct_token_ratio"
-        ),
-        (
-            (F.length(F.col(text_col))
-             - F.length(F.regexp_replace(F.col(text_col), "[0-9]", "")))
-            / F.length(F.col(text_col))
-        ).alias("digit_ratio"),
-    )
 
 
 def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -424,11 +398,35 @@ def bigram_lm_nll_sql(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """``bigram_lm_nll`` rendered as ONE spark.sql text (r14 opt, guide
-    §4): the Column-chain build costs ~0.3 s of py4j round-trips per
-    caller; the SQL parse ~30 ms.  Expression-for-expression the Column
-    form below — same casts, same ln/decimal quantization — pinned by
-    test_bigram_lm_nll_sql_matches_column_route."""
+    """Bigram-LM perplexity scoring — the CCNet/KenLM-style quality
+    filter: train a Laplace-smoothed bigram language model on the corpus
+    in one pass, then score every document's average negative
+    log-likelihood under it (high = unusual token sequences = the
+    filter's discard pile).
+
+    Model: p(b|a) = (c(a,b)+1) / (c(a)+V) with V = distinct unigrams, so
+    each DISTINCT bigram's cost is ONE ln of an exact int64 rational —
+    nll(a,b) = ln((c(a)+V) / (c(a,b)+1)) — quantized to DECIMAL(18,6)
+    (the DSIR quantum).  Per-doc totals sum those exact decimals
+    (order-independent); the avg divides the exact decimal sum by the
+    exact bigram count as correctly-rounded doubles, so an oracle
+    matches bit-for-bit.  Scoring the training corpus itself means every
+    scored bigram exists in the model (no unseen-event branch).
+
+    Returns (id, n_bigrams, sum_nll DECIMAL, avg_nll DOUBLE); docs with
+    fewer than 2 tokens are absent (no bigram evidence).
+
+    Scale shape: bigrams build IN-ROW (the bpe_merge_candidates
+    transform — no lag window, no shuffle), the model is two hash
+    aggregates, and scoring is one explode + one model join + one
+    id-keyed aggregate.  At demo vocab the model broadcasts; production
+    vocab hashes bigrams into 2^20 buckets and the join shuffles on the
+    bucket — either way nothing is quadratic.
+
+    Rendered as ONE spark.sql text (r14 opt): a Column-chain
+    build costs ~0.3 s of py4j round-trips per caller; the SQL parse
+    ~30 ms.  ``test_bigram_lm_random_corpus_vs_naive`` pins the values
+    against plain Python."""
     from ..pipeline.dedup import _sql_tokens_text
 
     toks = _sql_tokens_text(text_col)
@@ -462,92 +460,3 @@ FROM (
   GROUP BY `{id_col}`
 ) s"""
     return df.sparkSession.sql(q, docs=df)
-
-
-def bigram_lm_nll(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Bigram-LM perplexity scoring — the CCNet/KenLM-style quality
-    filter: train a Laplace-smoothed bigram language model on the corpus
-    in one pass, then score every document's average negative
-    log-likelihood under it (high = unusual token sequences = the
-    filter's discard pile).
-
-    Model: p(b|a) = (c(a,b)+1) / (c(a)+V) with V = distinct unigrams, so
-    each DISTINCT bigram's cost is ONE ln of an exact int64 rational —
-    nll(a,b) = ln((c(a)+V) / (c(a,b)+1)) — quantized to DECIMAL(18,6)
-    (the DSIR quantum).  Per-doc totals sum those exact decimals
-    (order-independent); the avg divides the exact decimal sum by the
-    exact bigram count as correctly-rounded doubles, so an oracle
-    matches bit-for-bit.  Scoring the training corpus itself means every
-    scored bigram exists in the model (no unseen-event branch).
-
-    Returns (id, n_bigrams, sum_nll DECIMAL, avg_nll DOUBLE); docs with
-    fewer than 2 tokens are absent (no bigram evidence).
-
-    Scale shape: bigrams build IN-ROW (the bpe_merge_candidates
-    transform — no lag window, no shuffle), the model is two hash
-    aggregates, and scoring is one explode + one model join + one
-    id-keyed aggregate.  At demo vocab the model broadcasts; production
-    vocab hashes bigrams into 2^20 buckets and the join shuffles on the
-    bucket — either way nothing is quadratic.
-    """
-    toks = tokens_col(F.col(text_col))
-    pairs = F.expr(
-        "transform(slice(__toks, 1, greatest(size(__toks) - 1, 0)), "
-        "(t, i) -> struct(t AS a, element_at(__toks, i + 2) AS b))"
-    )
-    # no spread_by_cores here: measured slower at sf0.1 (0.96 s ->
-    # 1.14 s) — the model aggregates already partial-aggregate map-side,
-    # so the repartition shuffle plus wider downstream stages cost more
-    # than the explode parallelism buys
-    ex = (
-        df.select(F.col(id_col), toks.alias("__toks"))
-        .select(id_col, F.explode(pairs).alias("p"))
-        .select(id_col, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-    )
-    # uni feeds both the model join and the V count; both consumers hang
-    # off the groupBy(a) shuffle, which AQE's exchange reuse executes once
-    # at runtime — the token explode is paid a single time (guide §2.4)
-    uni = (
-        df.select(F.explode(toks).alias("a"))
-        .groupBy("a")
-        .agg(F.count(F.lit(1)).cast("long").alias("ca"))
-    )
-    v = uni.agg(F.count(F.lit(1)).cast("long").alias("v"))
-    bi = ex.groupBy("a", "b").agg(
-        F.count(F.lit(1)).cast("long").alias("cab")
-    )
-    model = (
-        bi.join(uni, "a")
-        .crossJoin(F.broadcast(v))
-        .select(
-            "a",
-            "b",
-            F.log(
-                (F.col("ca") + F.col("v")).cast("double")
-                / (F.col("cab") + 1).cast("double")
-            )
-            .cast("decimal(18,6)")
-            .alias("nll"),
-        )
-    )
-    return (
-        ex.join(F.broadcast(model), ["a", "b"])
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.sum("nll").alias("sum_nll"),
-        )
-        .select(
-            id_col,
-            "n_bigrams",
-            "sum_nll",
-            (
-                F.col("sum_nll").cast("double")
-                / F.col("n_bigrams").cast("double")
-            ).alias("avg_nll"),
-        )
-    )

@@ -47,7 +47,3 @@ def uses_broadcast_join(df: DataFrame) -> bool:
 def shuffle_count(df: DataFrame) -> int:
     txt = plan_text(df, "simple")
     return txt.count("Exchange hashpartitioning") + txt.count("Exchange rangepartitioning")
-
-
-def codegen_stages(df: DataFrame) -> int:
-    return plan_text(df, "simple").count("WholeStageCodegen")

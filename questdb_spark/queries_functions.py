@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions import finance, geohash, ipv4
+from .functions import finance, ipv4
 from .operators.intervals import in_interval
 from .queries_core import _sql_dbl as _sdbl
 from .tsutil import to_micros
@@ -173,12 +173,12 @@ FROM events WHERE event_id < 2000
 # --------------------------------------------------------------------------
 
 def geohash_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Geohash encoding — SQL-text route (same unrolled bit-interleave as
-    the Column reference :func:`_geohash_events_columns`, pinned row-exact
-    by ``test_geohash_events_sql_matches_column_route``).  One spark.sql
-    parse replaces ~1250 py4j round-trips, and staging gh6 as a named CTE
-    attribute computes the encode once per row where the Column route
-    re-embedded the whole tree under each of the three outputs — r14."""
+    """Geohash encoding of synthetic coordinates (QuestDB make_geohash +
+    GEOLONG cast), plus coarse prefix bucketing, rendered as one SQL text
+    with the bit interleave unrolled.  One spark.sql parse replaces ~1250
+    py4j round-trips of Column-tree build, and staging gh6 as a named CTE
+    attribute computes the encode once per row instead of once per
+    output — r14."""
     ev = load_table(spark, sf, "events").filter(F.col("event_id") < 2000)
     b32 = "0123456789bcdefghjkmnpqrstuvwxyz"
     bits = []
@@ -213,22 +213,6 @@ SELECT event_id, gh6, substring(gh6, 1, 3) AS gh3, {gh_long} AS gh_long
 FROM g
 """
     return spark.sql(q, inp=ev)
-
-
-def _geohash_events_columns(spark: SparkSession, sf: str) -> DataFrame:
-    """Column-tree reference for :func:`geohash_events` — geohash encoding
-    of synthetic coordinates (QuestDB make_geohash +
-    GEOLONG cast), plus coarse prefix bucketing."""
-    ev = load_table(spark, sf, "events").filter(F.col("event_id") < 2000)
-    lat = F.col("value") % 180.0 - 90.0
-    lon = (F.col("value") * 2.0) % 360.0 - 180.0
-    gh = geohash.geohash_encode(lat, lon, precision=6)
-    return ev.select(
-        "event_id",
-        gh.alias("gh6"),
-        geohash.geohash_prefix(gh, 3).alias("gh3"),
-        geohash.geohash_to_long(gh).alias("gh_long"),
-    )
 
 
 def _geohash_sql() -> str:
@@ -1186,12 +1170,16 @@ ILP_ROUNDTRIP_SQL = _ilp_sql()
 
 
 def cast_matrix(spark: SparkSession, sf: str) -> DataFrame:
-    """Cast-matrix edges — SQL-text route (same limb/carry arithmetic as
-    the Column reference :func:`_cast_matrix_columns`, pinned row-exact
-    by ``test_cast_matrix_sql_matches_column_route``; one spark.sql parse
-    replaces ~770 py4j round-trips of build — r14).  Carry totals are
-    staged as named CTE attributes so the text stays linear in limb
-    count (the same rule as the decimal256 staged divmod)."""
+    """Implicit/explicit cast-matrix edges Spark's own coercion does not
+    cover (reference ``functions/cast/``, 247 factories): LONG256
+    arithmetic (``AddLong256FunctionFactory``) and narrowing casts
+    (``CastLong256To{Long,Boolean}``), BIGINT→LONG256 widening, and
+    string→geohash with base32 validation + bit-granularity truncation
+    (``CastStrToGeoHashFunctionFactory``, geohash types sized in bits).
+    One spark.sql text (replaces ~770 py4j round-trips of Column-tree
+    build — r14).  Carry totals are staged as named CTE attributes so
+    the text stays linear in limb count (the same rule as the decimal256
+    staged divmod)."""
     ev = load_table(spark, sf, "events").filter(F.col("event_id") < 500)
     b32 = "0123456789bcdefghjkmnpqrstuvwxyz"
     limbs_a = ", ".join(
@@ -1251,33 +1239,6 @@ SELECT event_id, sum256,
 FROM lowp
 """
     return spark.sql(q, inp=ev)
-
-
-def _cast_matrix_columns(spark: SparkSession, sf: str) -> DataFrame:
-    """Column-tree reference for :func:`cast_matrix` — implicit/explicit
-    cast-matrix edges Spark's own coercion does not
-    cover (reference ``functions/cast/``, 247 factories): LONG256
-    arithmetic (``AddLong256FunctionFactory``) and narrowing casts
-    (``CastLong256To{Long,Boolean}``), BIGINT→LONG256 widening, and
-    string→geohash with base32 validation + bit-granularity truncation
-    (``CastStrToGeoHashFunctionFactory``, geohash types sized in bits)."""
-    from .functions import geohash as gh
-    from .functions import uuid256 as u
-
-    ev = load_table(spark, sf, "events").filter(F.col("event_id") < 500)
-    a = u.long256_from(F.col("user_id"))
-    b = u.long256_from(F.col("event_id"))
-    s = u.long256_add(a, b)
-    g6 = gh.cast_str_to_geohash(F.md5(F.col("event_id").cast("string")), 6)
-    return ev.select(
-        "event_id",
-        s.alias("sum256"),
-        u.long256_to_long(s).alias("low_long"),
-        u.long256_to_boolean(s).alias("nonzero"),
-        u.long256_from_long(F.col("user_id")).alias("from_long"),
-        g6.alias("gh6"),
-        F.when(g6.isNotNull(), gh.geohash_to_bits(g6, 27)).alias("gh_bits27"),
-    )
 
 
 def _cast_matrix_sql() -> str:
@@ -1475,10 +1436,13 @@ ORDER BY o_orderpriority
 
 
 def decimal256_sum(spark: SparkSession, sf: str) -> DataFrame:
-    """DECIMAL256 group SUM — SQL-text route (same arithmetic as the
-    Column reference :func:`_decimal256_sum_columns`, pinned row-exact by
-    ``test_decimal256_sum_sql_matches_column_route``; rendered as one
-    ``spark.sql`` to drop ~600 py4j round-trips of build cost — r14)."""
+    """DECIMAL256 arithmetic past Spark's 38-digit cap
+    (ColumnType.java:104-135, griffin/engine/functions/decimal/): per-row
+    ~54-digit values built as base-10^18 limbs, exact group SUM via four
+    map-side-combinable limb sums + one carry ripple, canonical digit
+    string out.  Limb 0 is engineered near the 10^18 boundary so carries
+    genuinely fire at every test scale.  Rendered as one ``spark.sql``
+    to drop ~600 py4j round-trips of Column-tree build — r14."""
     from .functions import decimal256 as D
 
     li = load_table(spark, sf, "lineitem")
@@ -1506,37 +1470,6 @@ SELECT l_returnflag, n, {out_sel},
 FROM agg ORDER BY l_returnflag
 """
     return spark.sql(q, inp=li)
-
-
-def _decimal256_sum_columns(spark: SparkSession, sf: str) -> DataFrame:
-    """Column-tree reference for :func:`decimal256_sum` — DECIMAL256
-    arithmetic past Spark's 38-digit cap
-    (ColumnType.java:104-135, griffin/engine/functions/decimal/): per-row
-    ~54-digit values built as base-10^18 limbs, exact group SUM via four
-    map-side-combinable limb sums + one carry ripple, canonical digit
-    string out. Limb 0 is engineered near the 10^18 boundary so carries
-    genuinely fire at every test scale."""
-    from .functions import decimal256 as D
-
-    li = load_table(spark, sf, "lineitem")
-    cents = (F.col("l_extendedprice").cast("decimal(12,2)") * 100).cast("long")
-    w = D.wide(
-        (cents * F.lit(999983)) % F.lit(D.LIMB),
-        cents,
-        F.col("l_orderkey").cast("long"),
-    )
-    agg = (
-        li.select(F.col("l_returnflag"), w.alias("__w"))
-        .groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n"), *D.sum_agg(F.col("__w")))
-    )
-    wide_sum = D.normalized("sum_")
-    return agg.select(
-        "l_returnflag",
-        "n",
-        *[wide_sum[f].alias(f) for f in D.FIELDS],
-        D.to_string(wide_sum).alias("wide_str"),
-    ).orderBy("l_returnflag")
 
 
 DECIMAL256_SUM_SQL = """
@@ -1590,13 +1523,17 @@ FROM r3 ORDER BY l_returnflag
 
 
 def decimal256_div(spark: SparkSession, sf: str) -> DataFrame:
-    """DECIMAL256 divide/rescale — SQL-text route.  Identical arithmetic
-    to :func:`_decimal256_div_columns` (the Column reference kept below,
-    pinned row-exact by ``test_decimal256_div_sql_matches_column_route``)
-    rendered as ONE ``spark.sql`` statement: the Column build cost 1216
-    py4j round-trips ≈ 0.5 s of the query's 2 s (r14 profiling — the
-    rnd_generators rule).  The narrow limb projection + cores-wide
-    repartition stay as Columns and ride in as the template relation."""
+    """DECIMAL256 divide/rescale (r6; griffin/engine/functions/math/
+    decimal div families, ColumnType.java:104-135): schoolbook limb long
+    division by a per-row divisor, exact remainder, and HALF_UP rescale
+    by 10^20.  Values are built 2-limb (< 10^36) so DuckDB can verify
+    with NATIVE HUGEINT division — an independent oracle, not a mirrored
+    limb algorithm (the >36-digit range is covered by the Python-bigint
+    pytest).  Rendered as ONE ``spark.sql`` statement: a Column-tree
+    build cost 1216 py4j round-trips ≈ 0.5 s of the query's 2 s (r14
+    profiling — the rnd_generators rule).  The narrow limb projection +
+    cores-wide repartition stay as Columns and ride in as the template
+    relation."""
     from .functions import decimal256 as D
 
     li = load_table(spark, sf, "lineitem")
@@ -1666,86 +1603,6 @@ FROM rows_t GROUP BY d ORDER BY d
     return spark.sql(q, inp=base)
 
 
-def _decimal256_div_columns(spark: SparkSession, sf: str) -> DataFrame:
-    """Column-tree reference for :func:`decimal256_div` (r6; griffin/
-    engine/functions/math/ decimal div families, ColumnType.java:104-135):
-    schoolbook limb long division by a per-row divisor, exact remainder,
-    and HALF_UP rescale by 10^20. Values are built 2-limb (< 10^36) so
-    DuckDB can verify with NATIVE HUGEINT division — an independent
-    oracle, not a mirrored limb algorithm (the >36-digit range is covered
-    by the Python-bigint pytest)."""
-    from .functions import decimal256 as D
-
-    li = load_table(spark, sf, "lineitem")
-    cents = (F.col("l_extendedprice").cast("decimal(12,2)") * 100).cast("long")
-    w = D.wide(F.col("l_orderkey").cast("long"), cents)
-    d = (F.col("l_partkey") % 97 + 3).cast("long")
-    # staged_divmod keeps the compiled tree linear in limb count (see
-    # decimal256.py) — div + mod + rescale all read the SAME staged
-    # attributes instead of re-embedding the division tree per output
-    lcols = [f"L{i}" for i in range(D.N_LIMBS)]
-    base = li.select(
-        F.col("l_orderkey").alias("okey"),
-        F.col("l_linenumber").alias("lineno"),
-        d.alias("d"),
-        *[w[f].alias(c) for f, c in zip(D.FIELDS, lcols)],
-        # limb division is CPU-bound per row (deep decimal(38) trees), and
-        # the parquet source yields only a few byte-sized splits — width
-        # must follow cores, not bytes, when the cost is per-row compute
-        # (same rule as the EMA applyInPandas stages; r3 scale addenda)
-    ).repartition(spark.sparkContext.defaultParallelism)
-    df, qs, rcol = D.staged_divmod(base, lcols, F.col("d"), "dv_")
-    # rescale by 10^20: whole-limb shift (k//18 = 1) then staged division
-    # by 10^(k%18), HALF_UP bump from digit 19 of the original value
-    k = 20
-    m, rr = divmod(k, 18)
-    shift = [f"S{i}" for i in range(D.N_LIMBS)]
-    df = df.select(
-        "*",
-        *[
-            (F.col(lcols[i + m]) if i + m < D.N_LIMBS else F.lit(0).cast("long")).alias(s)
-            for i, s in enumerate(shift)
-        ],
-    )
-    df, ss, _ = D.staged_divmod(df, shift, F.lit(10**rr), "rs_")
-    dl, dp = divmod(k - 1, 18)
-    round_up = (F.col(lcols[dl]) % F.lit(10 ** (dp + 1))) >= F.lit(5 * 10**dp)
-    bump = F.when(round_up, F.lit(1)).otherwise(F.lit(0)).cast("long")
-    zero = F.lit(0).cast("long")
-    rs_limbs = D._add_limbs(ss, [bump, zero, zero, zero])
-    rows = df.select(
-        "okey",
-        "lineno",
-        "d",
-        D._to_string_limbs(qs).alias("q_str"),
-        F.col(rcol).cast("long").alias("r"),
-        D._to_string_limbs(rs_limbs).alias("rs_str"),
-    )
-    # every row's (quotient, remainder, rescale) still computes — but the
-    # driver receives 95 checksum rows instead of 600k wide strings (the
-    # old shape spent ~80% of its bench time serializing results through
-    # collect(), not dividing).  The md5-derived row hash makes any single
-    # wrong digit on any row break the aggregate.
-    rowhash = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", "okey", "lineno", "q_str", "r", "rs_str")),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    return (
-        rows.groupBy("d")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("r").cast("bigint").alias("sum_r"),
-            F.sum(rowhash).cast("bigint").alias("sum_hash"),
-        )
-        .orderBy("d")
-    )
-
-
 DECIMAL256_DIV_SQL = """
 WITH b AS (
   SELECT l_orderkey AS okey, l_linenumber AS lineno,
@@ -1781,11 +1638,13 @@ ORDER BY d
 
 
 def window_groups_exclude(spark: SparkSession, sf: str) -> DataFrame:
-    """GROUPS frames + EXCLUDE clauses — SQL-text route (same two fused
-    window passes as the Column reference
-    :func:`_window_groups_exclude_columns`, pinned row-exact by
-    ``test_window_groups_exclude_sql_matches_column_route``; one
-    spark.sql parse replaces ~570 py4j round-trips of build — r14)."""
+    """GROUPS frames + EXCLUDE clauses (WindowExpression.java:47-55) over
+    events: minute-truncated ts creates real peer groups per user.
+    GROUPS is lowered to dense_rank+RANGE (its SQL definition); EXCLUDE
+    variants are frame-subtraction identities with SQL-standard
+    empty-frame NULLs — checked against DuckDB's NATIVE ``EXCLUDE``
+    window clause.  Two fused window passes in one spark.sql text (one
+    parse replaces ~570 py4j round-trips of Column-tree build — r14)."""
     ev = load_table(spark, sf, "events").select(
         "event_id",
         "user_id",
@@ -1841,85 +1700,6 @@ FROM p2
     return spark.sql(q, inp=ev)
 
 
-def _window_groups_exclude_columns(spark: SparkSession, sf: str) -> DataFrame:
-    """Column-tree reference for :func:`window_groups_exclude` — GROUPS
-    frames + EXCLUDE clauses (WindowExpression.java:47-55) over
-    events: minute-truncated ts creates real peer groups per user. GROUPS
-    is lowered to dense_rank+RANGE (its SQL definition); EXCLUDE variants
-    are frame-subtraction identities with SQL-standard empty-frame NULLs —
-    checked against DuckDB's NATIVE ``EXCLUDE`` window clause."""
-    ev = load_table(spark, sf, "events").select(
-        "event_id",
-        "user_id",
-        F.date_trunc("minute", F.col("ts")).alias("m"),
-        dec2("value").alias("v"),
-    )
-    # one shared dense_rank pass feeds every GROUPS/EXCLUDE-GROUP spec —
-    # stacking 8 window columns must not mean 8 rank computations
-    from pyspark.sql import Window as W
-
-    # r6 single-pass rewrite (VERDICT r5 task 5).  Two fused passes instead
-    # of the old 4+:
-    #   pass 1 — ONE (user_id, __mm)-ordered WindowExec computing
-    #     dense_rank AND every EXCLUDE building block.  Ordering by the
-    #     microsecond value of m keeps m's peer groups (RANGE [0,0] ==
-    #     the minute bucket) while allowing integer range offsets, and the
-    #     ROWS frames' before/after SETS are tie-order-independent for
-    #     every derived column, so one order spec serves all frames.
-    #   pass 2 — the two GROUPS-frame columns that genuinely need the
-    #     dense_rank ordering (RANGE -1..0 over __grp).
-    v = F.col("v")
-    ev = ev.withColumn("__mm", F.unix_micros("m"))
-    w = W.partitionBy("user_id").orderBy("__mm")
-    rows_lo = w.rowsBetween(W.unboundedPreceding, -1)
-    rows_hi = w.rowsBetween(1, W.unboundedFollowing)
-    rng_lo = w.rangeBetween(W.unboundedPreceding, -1)  # strictly-earlier groups
-    rng_hi = w.rangeBetween(1, W.unboundedFollowing)   # strictly-later groups
-
-    dsum, dcnt, dmin = F.sum(v).over(rows_lo), F.count(v).over(rows_lo), F.min(v).over(rows_lo)
-    esum, ecnt, emin = F.sum(v).over(rows_hi), F.count(v).over(rows_hi), F.min(v).over(rows_hi)
-    fsum, fcnt, fmax = F.sum(v).over(rng_lo), F.count(v).over(rng_lo), F.max(v).over(rng_lo)
-    gsum, gcnt, gmax = F.sum(v).over(rng_hi), F.count(v).over(rng_hi), F.max(v).over(rng_hi)
-    zero = F.lit(0)
-    out = ev.select(
-        "event_id",
-        "user_id",
-        "m",
-        "v",
-        F.dense_rank().over(w).alias("__grp"),
-        # EXCLUDE CURRENT ROW: before + after (SQL-standard NULL when empty)
-        F.when(dcnt + ecnt > 0, F.coalesce(dsum, zero) + F.coalesce(esum, zero)).alias("__ec"),
-        F.least(dmin, emin).alias("__mc"),
-        # EXCLUDE GROUP: groups strictly before + strictly after
-        F.when(fcnt + gcnt > 0, F.coalesce(fsum, zero) + F.coalesce(gsum, zero)).alias("__eg"),
-        (fcnt + gcnt).alias("__cg"),
-        # EXCLUDE TIES: other groups + the current row itself
-        F.when(
-            fcnt + gcnt + v.isNotNull().cast("long") > 0,
-            F.coalesce(fsum, zero) + F.coalesce(gsum, zero) + F.coalesce(v, zero),
-        ).alias("__et"),
-        F.greatest(fmax, gmax, v).alias("__mt"),
-    )
-    grp1 = W.partitionBy("user_id").orderBy("__grp").rangeBetween(-1, 0)
-    out = out.withColumn("__g", F.sum(v).over(grp1)).withColumn(
-        "__gmin", F.min(v).over(grp1)
-    )
-    dd = lambda c, n: F.col(c).cast("decimal(20,2)").cast("double").alias(n)  # noqa: E731
-    return out.select(
-        "event_id",
-        "user_id",
-        "m",
-        dd("__g", "sum_groups"),
-        dd("__ec", "sum_excl_cur"),
-        dd("__eg", "sum_excl_grp"),
-        dd("__et", "sum_excl_ties"),
-        dd("__gmin", "min_groups"),
-        dd("__mc", "min_excl_cur"),
-        dd("__mt", "max_excl_ties"),
-        F.col("__cg").cast("long").alias("cnt_excl_grp"),
-    )
-
-
 WINDOW_GROUPS_EXCLUDE_SQL = """
 WITH base AS (
   SELECT event_id, user_id, date_trunc('minute', ts) AS m,
@@ -1958,10 +1738,16 @@ FROM ranked
 
 
 def regr_bit_aggs(spark: SparkSession, sf: str) -> DataFrame:
-    """Aggregate long tail — SQL-text route (same expressions as the
-    Column reference :func:`_regr_bit_aggs_columns`, pinned row-exact by
-    ``test_regr_bit_aggs_sql_matches_column_route``; one spark.sql parse
-    replaces ~650 py4j round-trips of build — r14)."""
+    """Aggregate long tail: linear regression (RegressionSlope/Intercept/
+    R2FunctionFactory.java, AbstractRegressionGroupByFunction.java),
+    bit_and/bit_or/bit_xor (BitAndLongGroupByFunction.java family),
+    string_distinct_agg (StringDistinctAggGroupByFunction.java),
+    frequency-weighted stddev (AbstractWeightedStdDevGroupByFunction.java),
+    isOrdered (functions/groupby IsOrdered*).  All moments are exact
+    decimal sums, so the final double expressions are bit-identical
+    across engines; bit/string aggs are exact by construction.  One
+    spark.sql text (replaces ~650 py4j round-trips of Column-tree build
+    — r14)."""
     li = load_table(spark, sf, "lineitem")
     x = "CAST(l_quantity AS DECIMAL(12,2))"
     y = "CAST(l_extendedprice AS DECIMAL(12,2))"
@@ -2015,74 +1801,6 @@ SELECT l_returnflag, n,
 FROM g
 """
     return spark.sql(q, inp=li)
-
-
-def _regr_bit_aggs_columns(spark: SparkSession, sf: str) -> DataFrame:
-    """Column-tree reference for :func:`regr_bit_aggs`: linear regression
-    (RegressionSlope/Intercept/
-    R2FunctionFactory.java, AbstractRegressionGroupByFunction.java),
-    bit_and/bit_or/bit_xor (BitAndLongGroupByFunction.java family),
-    string_distinct_agg (StringDistinctAggGroupByFunction.java),
-    frequency-weighted stddev (AbstractWeightedStdDevGroupByFunction.java),
-    isOrdered (functions/groupby IsOrdered*). All moments as exact decimal
-    sums, so the final double expressions are bit-identical across engines;
-    bit/string aggs are exact by construction."""
-    li = load_table(spark, sf, "lineitem")
-    x = dec2("l_quantity")
-    y = dec2("l_extendedprice")
-    w = F.col("l_linenumber").cast("long")
-    ordered = F.col("l_shipdate") >= F.lag("l_shipdate").over(
-        Window.partitionBy("l_returnflag").orderBy("l_orderkey", "l_linenumber")
-    )
-    g = (
-        li.withColumn("__ord", F.coalesce(ordered, F.lit(True)))
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(x).alias("_sx"),
-            F.sum(y).alias("_sy"),
-            F.sum((x * x).cast("decimal(25,4)")).alias("_sxx"),
-            F.sum((y * y).cast("decimal(25,4)")).alias("_syy"),
-            F.sum((x * y).cast("decimal(25,4)")).alias("_sxy"),
-            F.sum(w).alias("_sw"),
-            F.sum((y * w.cast("decimal(3,0)")).cast("decimal(25,2)")).alias("_swy"),
-            F.sum(
-                ((y * y).cast("decimal(25,4)") * w.cast("decimal(3,0)")).cast(
-                    "decimal(30,4)"
-                )
-            ).alias("_swyy"),
-            F.bit_and(F.col("l_partkey")).alias("band_part"),
-            F.bit_or(F.col("l_partkey")).alias("bor_part"),
-            F.bit_xor(F.col("l_partkey")).alias("bxor_part"),
-            F.array_join(F.array_sort(F.collect_set("l_linestatus")), ",").alias(
-                "distinct_status"
-            ),
-            F.bool_and("__ord").alias("is_ordered_shipdate"),
-        )
-    )
-    n = F.col("n").cast("double")
-    sx, sy = to_dbl("_sx", 2), to_dbl("_sy", 2)
-    sxx, syy, sxy = to_dbl("_sxx", 0), to_dbl("_syy", 0), to_dbl("_sxy", 0)
-    sw = F.col("_sw").cast("double")
-    swy, swyy = to_dbl("_swy", 2), to_dbl("_swyy", 0)
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    r2 = ((n * sxy - sx * sy) * (n * sxy - sx * sy)) / (
-        (n * sxx - sx * sx) * (n * syy - sy * sy)
-    )
-    wvar = (swyy - swy * swy / sw) / (sw - F.lit(1.0))
-    return g.select(
-        "l_returnflag",
-        "n",
-        slope.alias("regr_slope_pq"),
-        ((sy - slope * sx) / n).alias("regr_intercept_pq"),
-        r2.alias("regr_r2_pq"),
-        F.sqrt(wvar).alias("wstddev_price"),
-        "band_part",
-        "bor_part",
-        "bxor_part",
-        "distinct_status",
-        "is_ordered_shipdate",
-    )
 
 
 REGR_BIT_AGGS_SQL = f"""
@@ -2267,12 +1985,17 @@ SELECT '__ts' AS k1, 'bucket' AS k2, pv AS n, m FROM part2
 
 
 def array_ops2(spark: SparkSession, sf: str) -> DataFrame:
-    """Array long-tail surface — SQL-text route (same HOF expressions as
-    the Column reference :func:`_array_ops2_columns`, pinned row-exact by
-    ``test_array_ops2_sql_matches_column_route``; one spark.sql parse
-    replaces ~810 py4j round-trips of build — r14).  qd is staged as a
-    named CTE attribute instead of re-embedding the quantize tree under
-    each of the ~17 outputs."""
+    """Array long-tail surface (griffin/engine/functions/array/):
+    array_sort asc/desc (DoubleArraySort[Desc]FunctionFactory),
+    array_stddev_samp/pop, shift ± with default (DoubleArrayShift*),
+    round(D[]I), array_reverse, array_position, array_count,
+    insertion_point after-equal, unary neg / scalar∘array forms, and the
+    2-D ops dim_length / flatten.  Values are quantized to integer-valued
+    doubles so moments and sums are order-independent and bit-equal to
+    the DuckDB oracle.  One spark.sql text (replaces ~810 py4j
+    round-trips of Column-tree build — r14); qd is staged as a named CTE
+    attribute instead of re-embedding the quantize tree under each of
+    the ~17 outputs."""
     # CPU-bound per-row HOF tree over a single sub-MB split — width
     # follows cores (same rule and measurement as array_ops3 below)
     emb = load_table(spark, sf, "embeddings").repartition(
@@ -2327,49 +2050,6 @@ SELECT vec_id,
 FROM b
 """
     return spark.sql(q, inp=emb)
-
-
-def _array_ops2_columns(spark: SparkSession, sf: str) -> DataFrame:
-    """Column-tree reference for :func:`array_ops2` — array long-tail
-    surface (griffin/engine/functions/array/):
-    array_sort asc/desc (DoubleArraySort[Desc]FunctionFactory),
-    array_stddev_samp/pop, shift ± with default (DoubleArrayShift*),
-    round(D[]I), array_reverse, array_position, array_count,
-    insertion_point after-equal, unary neg / scalar∘array forms, and the
-    2-D ops dim_length / flatten.  Values are quantized to integer-valued
-    doubles so moments and sums are order-independent and bit-equal to
-    the DuckDB oracle."""
-    from .functions import arrays as A
-
-    emb = load_table(spark, sf, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    qv = F.transform(dv, lambda x: F.round(x * 1000).cast("long"))
-    qd = F.transform(qv, lambda x: x.cast("double"))
-    el1 = F.element_at(qd, 1)
-    m2 = F.array(F.slice(qd, 1, 3), F.slice(qd, 4, 3))
-    return emb.select(
-        "vec_id",
-        F.concat_ws(",", F.slice(A.array_sort_(qd), 1, 5).cast("array<long>")).alias("sort_asc5"),
-        F.concat_ws(",", F.slice(A.array_sort_(qd, desc=True), 1, 5).cast("array<long>")).alias("sort_desc5"),
-        A.array_stddev_samp(qd).alias("sd_samp"),
-        A.array_stddev_pop(qd).alias("sd_pop"),
-        A.array_count(qd).alias("cnt"),
-        F.concat_ws(",", F.slice(A.array_shift(qd, 2, -9999.0), 1, 5).cast("array<long>")).alias("shift2"),
-        F.concat_ws(",", F.slice(A.array_shift(qd, -2, -9999.0), 1, 5).cast("array<long>")).alias("shift_m2"),
-        F.concat_ws(",", F.slice(A.array_reverse_(qd), 1, 5).cast("array<long>")).alias("rev5"),
-        A.array_position_(qd, F.element_at(qd, 3)).alias("pos3"),
-        A.array_position_(qd, F.lit(10.0**9)).alias("pos_missing"),
-        A.insertion_point_after(A.array_sort_(qd), F.lit(0.0)).alias("ipa0"),
-        F.round(el1 / 8.0, 2).alias("rnd1"),
-        (-el1).alias("neg1"),
-        (F.lit(1000.0) - el1).alias("ssub1"),
-        (F.lit(100.0) / (el1 + 0.5)).alias("sdiv1"),
-        A.dim_length(m2, 1).alias("dim1"),
-        A.dim_length(m2, 2).alias("dim2"),
-        F.concat_ws(",", A.flatten_ndim(m2).cast("array<long>")).alias("flat6"),
-    )
 
 
 ARRAY_OPS2_SQL = """

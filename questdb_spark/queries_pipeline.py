@@ -2610,11 +2610,10 @@ LIMIT 10
 
 
 def mixture_temperature_sweep(spark: SparkSession, sf: str) -> DataFrame:
-    """Temperature sweep — SQL-text route (same per-arm expressions as
-    the Column reference :func:`_mixture_temperature_sweep_columns`,
-    pinned row-exact by
-    ``test_mixture_sweep_sql_matches_column_route``; one spark.sql parse
-    replaces ~750 py4j round-trips of four mixture_weights builds — r14).
+    """Temperature sweep over the quarter-grid alphas (r10): the mixture
+    table a data-loader ablation actually compares — one row per
+    (alpha, domain) with weight and boost.  One spark.sql text (replaces
+    ~750 py4j round-trips of four mixture_weights builds — r14).
     All four powers compose from IEEE-exact sqrt (libm pow() is not
     bit-deterministic across engines), so every value hash-matches the
     oracle."""
@@ -2644,21 +2643,6 @@ WITH per AS (
 {arms}
 """
     return spark.sql(q, inp=docs)
-
-
-def _mixture_temperature_sweep_columns(spark: SparkSession, sf: str) -> DataFrame:
-    """Column-tree reference for :func:`mixture_temperature_sweep` —
-    temperature sweep over the quarter-grid alphas (r10): the mixture
-    table a data-loader ablation actually compares — one row per
-    (alpha, domain) with weight and boost."""
-    docs = load_table(spark, sf, "documents")
-    out = None
-    for alpha in (0.25, 0.5, 0.75, 1.0):
-        part = sampling.mixture_weights(
-            docs, alpha=alpha, group_col="source"
-        ).select(F.lit(alpha).alias("alpha"), "*")
-        out = part if out is None else out.unionByName(part)
-    return out
 
 
 def _mix_sweep_sql() -> str:
@@ -3016,9 +3000,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
     # query embedding shipped as a plan literal (model-scale collect,
     # the embedding_ann_* convention); exact int64 grid dot product.
     # r14: everything after this bounded collect renders as ONE spark.sql
-    # text (same expressions as the Column reference
-    # :func:`_retrieval_hybrid_rrf_columns`, pinned row-exact by
-    # ``test_hybrid_rrf_sql_matches_column_route``).
+    # text.
     qv = [
         int(x)
         for x in emb.filter(F.col("vec_id") == 0)
@@ -3069,62 +3051,6 @@ FROM lexr FULL OUTER JOIN vecr USING (doc_id)
 ORDER BY rrf DESC, doc_id LIMIT 15
 """
     return spark.sql(q, docs=docs, emb=emb)
-
-
-def _retrieval_hybrid_rrf_columns(spark: SparkSession, sf: str) -> DataFrame:
-    """Column-tree reference for :func:`retrieval_hybrid_rrf`."""
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf, "documents")
-    emb = load_table(spark, sf, "embeddings")
-
-    q_tokens = sorted({"spark", "table", "filter", "scan"})
-    qarr = F.array(*[F.lit(t) for t in q_tokens])
-    toks = F.array_distinct(text.tokens_col(F.col("text")))
-    common = F.size(F.array_intersect(toks, qarr))
-    union = F.size(toks) + F.lit(len(q_tokens)) - common
-    lex50 = (
-        docs.select(
-            "doc_id", (common.cast("double") / union).alias("lex_score")
-        )
-        .filter(F.col("lex_score") > 0)
-        .orderBy(F.col("lex_score").desc(), "doc_id")
-        .limit(50)
-    )
-    wl = Window.orderBy(F.col("lex_score").desc(), "doc_id")
-    lexr = lex50.select(
-        "doc_id", F.row_number().over(wl).cast("int").alias("r_lex")
-    )
-
-    qv = [
-        int(x)
-        for x in emb.filter(F.col("vec_id") == 0)
-        .select(similarity.quantize(F.col("embedding")).alias("q"))
-        .first()["q"]
-    ]
-    qcol = lit_array_long(qv)
-    dot = similarity.dot_q(similarity.quantize(F.col("embedding")), qcol)
-    vec50 = (
-        emb.select(F.col("vec_id").alias("doc_id"), dot.alias("dot"))
-        .orderBy(F.col("dot").desc(), "doc_id")
-        .limit(50)
-    )
-    wv = Window.orderBy(F.col("dot").desc(), "doc_id")
-    vecr = vec50.select(
-        "doc_id", F.row_number().over(wv).cast("int").alias("r_vec")
-    )
-
-    one = F.lit(1.0)
-    fused = lexr.join(vecr, "doc_id", "full").select(
-        "doc_id",
-        (
-            F.coalesce(one / (F.lit(60) + F.col("r_lex")), F.lit(0.0))
-            + F.coalesce(one / (F.lit(60) + F.col("r_vec")), F.lit(0.0))
-        ).alias("rrf"),
-        "r_lex",
-        "r_vec",
-    )
-    return fused.orderBy(F.col("rrf").desc(), "doc_id").limit(15)
 
 
 _RRF_IN = "('filter', 'scan', 'spark', 'table')"
@@ -3823,7 +3749,7 @@ def corpus_perplexity_topk(spark: SparkSession, sf: str) -> DataFrame:
     scorer — one-pass Laplace-smoothed bigram LM trained on the corpus,
     every doc scored by average negative log-likelihood, top-20 most
     perplexing docs returned (the discard pile a perplexity filter
-    drops; see pipeline/text.bigram_lm_nll for the exactness and scale
+    drops; see pipeline/text.bigram_lm_nll_sql for the exactness and scale
     analysis).  Ties break on doc_id; sum_nll is surfaced as the
     decimal-exact check column next to the correctly-rounded avg."""
     docs = load_table(spark, sf, "documents")

@@ -19,163 +19,201 @@ from . import queries_timeseries as ts
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# name → (fn, oracle_sql | None)
+# name → (fn, oracle_sql | None).
 #
-# ORDER MATTERS: the driver's correctness harness checks at most ~50 queries
-# per round, in registry order.  Round-7 rotation (VERDICT r6 task 1):
-#   _NEW_R7     — queries added or materially changed in round 7 (first
-#                 verification), at the head of the window.
-#   _RECHECK_R7 — the 12 entries whose latest driver check was round 3
-#                 (r6's 50-slot window only reached 8 of the 20 recheck
-#                 entries); verifying these makes every registry entry
-#                 driver-green within rounds 5-7.
-#   Everything below those blocks is r4/r5/r6-green and demoted past the
-#   window.
-# The 18 entries whose latest driver verification is still round 4
-# (VERDICT r8 task 1) — head of the r9 window right after _NEW_R9.
-# Three sit on code materially changed in r8 (q21 rewrite, SHOW CREATE
-# declared types behind sql_ddl_dml_roundtrip / sql_plain_view).
-_RECHECK_R9: dict[str, tuple[QueryFn, str | None]] = {
-    "q21_waiting_suppliers": (core.q21_waiting_suppliers, core.Q21_SQL),
-    "sql_ddl_dml_roundtrip": (sq.sql_ddl_dml_roundtrip, sq.SQL_DDL_DML_SQL),
-    "sql_plain_view": (sq.sql_plain_view, sq.SQL_PLAIN_VIEW_SQL),
-    "sql_matview": (sq.sql_matview, sq.SQL_MATVIEW_SQL),
-    "sql_read_parquet": (sq.sql_read_parquet, sq.SQL_READ_PARQUET_SQL),
-    "sql_bind_positional": (sq.sql_bind_positional, sq.SQL_BIND_POSITIONAL_SQL),
+# ORDER MATTERS: the correctness harness that consumes ``__spark_entry__``
+# checks at most ~50 queries per run, in this order.  Put new or materially
+# changed entries first and the longest-verified ones last.
+REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
+    # staged containment near-dup promoted from bench_scale100 into the
+    # library/registry: exact dedup -> guarded candidates -> containment
+    # score
+    "dedup_containment_staged": (
+        pl.dedup_containment_staged,
+        pl.DEDUP_CONTAINMENT_STAGED_SQL,
+    ),
+    # staged keep-best cluster resolution: exact dedup -> guarded Jaccard ->
+    # CC -> keep_best_canonical
+    "dedup_keep_best_staged": (
+        pl.dedup_keep_best_staged,
+        pl.DEDUP_KEEP_BEST_STAGED_SQL,
+    ),
+    # substring-level exact dedup: cross-document verbatim long-span
+    # detection — positional 12-token fingerprints, diagonal-island run
+    # collapse (distributed Lee et al. 2022)
+    "dedup_verbatim_spans": (pl.dedup_verbatim_spans, pl.DEDUP_VERBATIM_SPANS_SQL),
+    # perceptual-hash image dedup: dHash over the decoded raster path,
+    # grouped exactly — the dedup x multimodal bridge
+    "multimodal_dhash_neardup": (pl.multimodal_dhash_neardup, pl.MULTIMODAL_DHASH_SQL),
+    # perceptual NEAR-dup: banded Hamming over dHash, LSH discipline
+    "multimodal_dhash_hamming": (
+        pl.multimodal_dhash_hamming,
+        pl.MULTIMODAL_DHASH_HAMMING_SQL,
+    ),
+    # trained linear corpus classifier: batch-perceptron language filter
+    # over hashed unigram counts, exact-integer training — the oracle
+    # replays every epoch (margins/misclassified/gradients) as a CTE chain,
+    # kmeans/BPE discipline
+    "classifier_perceptron_train": (
+        pl.classifier_perceptron_train,
+        pl.CLASSIFIER_TRAIN_SQL,
+    ),
+    # serving-side eval of the trained classifier: one map pass with
+    # plan-literal weights -> confusion matrix + margin mass
+    "classifier_confusion": (pl.classifier_confusion, pl.CLASSIFIER_CONFUSION_SQL),
+    # BM25 (Okapi, Lucene positive-idf variant) lexical ranking: 1-row
+    # corpus-stats broadcast + map scoring + TakeOrderedAndProject
+    "retrieval_bm25_topk": (pl.retrieval_bm25_topk, pl.RETRIEVAL_BM25_SQL),
+    # one-pass multinomial Naive Bayes: closed-form counts + decimal
+    # log-likelihood-ratio weights — the converging classifier
+    "classifier_nb_train": (pl.classifier_nb_train, pl.CLASSIFIER_NB_TRAIN_SQL),
+    # NB serving eval: exact-decimal log-odds scoring -> confusion matrix
+    "classifier_nb_confusion": (
+        pl.classifier_nb_confusion,
+        pl.CLASSIFIER_NB_CONFUSION_SQL,
+    ),
+    # pseudo-relevance-feedback expansion: BM25 top-10 feedback -> top-5
+    # expansion terms -> integer-weighted libm-free re-score
+    "retrieval_prf_expand": (pl.retrieval_prf_expand, pl.RETRIEVAL_PRF_SQL),
+    # MMR diversity re-rank: cosine top-20 shortlist -> greedy rel - max-sim
+    # picks; oracle replays every pick as a CTE chain
+    "retrieval_mmr_rerank": (pl.retrieval_mmr_rerank, pl.RETRIEVAL_MMR_SQL),
+    # ops as SQL table functions: bm25_topk('t','terms',k) /
+    # classify_nb('t','pos') in FROM position, exercised with DIFFERENT
+    # parameters than the Python-route entries
+    "sql_retrieval_table_fns": (
+        sq.sql_retrieval_table_fns,
+        sq.SQL_RETRIEVAL_TABLE_FNS_SQL,
+    ),
+    # bigram-LM perplexity filter: the CCNet/KenLM quality scorer — one-pass
+    # smoothed LM, decimal-exact per-doc nll sums
+    "corpus_perplexity_topk": (pl.corpus_perplexity_topk, pl.CORPUS_PERPLEXITY_SQL),
+    # per-source data card composing the trained models: dup counts +
+    # NB-positive share + LM perplexity mass per source
+    "corpus_quality_report": (pl.corpus_quality_report, pl.CORPUS_QUALITY_REPORT_SQL),
+    # hybrid retrieval: lexical Jaccard top-50 + quantized-dot top-50 fused
+    # by reciprocal rank (RRF), both cuts TakeOrderedAndProject
+    "retrieval_hybrid_rrf": (pl.retrieval_hybrid_rrf, pl.RETRIEVAL_HYBRID_RRF_SQL),
+    # cluster-balanced subsampling: trained k-means assignment + a
+    # deterministic hash-priority cap per cell (topic-balancing cut)
+    "cluster_balanced_sample": (
+        pl.cluster_balanced_sample,
+        pl.CLUSTER_BALANCED_SAMPLE_SQL,
+    ),
+    # keep-best cluster resolution: near-dup clusters keep the longest
+    # member (ties -> lowest id) instead of the lowest id
+    "dedup_keep_best": (pl.dedup_keep_best, pl.DEDUP_KEEP_BEST_SQL),
+    # DSIR-style data selection: per-doc hashed-unigram importance weight
+    # ln(p_target/p_raw), decimal-summed for hash determinism
+    "dsir_importance_weights": (pl.dsir_importance_weights, pl.DSIR_IMPORTANCE_SQL),
+    # containment near-dup (truncated-copy detector): common / min size
+    "dedup_containment": (pl.dedup_containment, pl.DEDUP_CONTAINMENT_SQL),
+    # split-leakage audit: hash split over canonical docs + near-dup pairs
+    # classified by split combination (off-diagonal = leakage)
+    "corpus_split_leakage": (pl.corpus_split_leakage, pl.CORPUS_SPLIT_LEAKAGE_SQL),
+    # two-stage ANN: PQ ADC top-50 shortlist -> exact L2 re-rank top-10
+    "embedding_ann_pq_rerank": (pl.embedding_ann_pq_rerank, pl.EMBEDDING_PQ_RERANK_SQL),
+    # OHLC candles: SAMPLE BY 1h first/last/min/max — the reference's
+    # first/last fast-path shape (SampleByFirstLastRecordCursorFactory)
+    "ohlc_1h": (ts.ohlc_1h, ts.OHLC_1H_SQL),
+    "conditional_cast": (core.conditional_cast, core.CONDITIONAL_CAST_SQL),
+    "text_quality": (pl.text_quality, pl.TEXT_QUALITY_SQL),
+    # production staged near-dup: exact dedup -> corpus-relative guard
+    "dedup_jaccard_prod_staged": (
+        pl.dedup_jaccard_prod_staged,
+        pl.DEDUP_JACCARD_PROD_STAGED_SQL,
+    ),
+    "dedup_exact": (pl.dedup_exact, pl.DEDUP_EXACT_SQL),
+    "doc_fingerprints": (pl.doc_fingerprints, pl.DOC_FINGERPRINT_SQL),
+    "language_detect": (pl.language_detect, pl.LANGUAGE_DETECT_SQL),
+    "token_counts": (pl.token_counts, pl.TOKEN_COUNTS_SQL),
+    "minhash_signatures": (pl.minhash_signatures, pl.MINHASH_SIG_SQL),
+    "minhash_lsh": (pl.minhash_lsh, pl.MINHASH_LSH_SQL),
+    "simhash_docs": (pl.simhash_docs, pl.SIMHASH_SQL),
+    "embedding_topk": (pl.embedding_topk, pl.EMBEDDING_TOPK_SQL),
+    "embedding_ann_lsh": (pl.embedding_ann_lsh, pl.EMBEDDING_ANN_SQL),
+    "embedding_ann_multiprobe": (
+        pl.embedding_ann_multiprobe,
+        pl.EMBEDDING_MULTIPROBE_SQL,
+    ),
+    "embedding_ann_ivf": (pl.embedding_ann_ivf, pl.EMBEDDING_IVF_SQL),
+    "embedding_near_dup": (pl.embedding_near_dup, pl.EMBEDDING_NEAR_DUP_SQL),
+    # k-NN JOIN over a query SET (LLM-pipeline batch retrieval)
+    "embedding_knn_join": (pl.embedding_knn_join, pl.EMBEDDING_KNN_JOIN_SQL),
+    "l2price_orderbook": (fn.l2price_orderbook, fn.L2PRICE_SQL),
+    "spread_mid_events": (fn.spread_mid_events, fn.SPREAD_MID_SQL),
+    "markout_horizon_agg": (ts.markout_horizon_agg, ts.MARKOUT_HORIZON_AGG_SQL),
+    "sample_by_first_obs": (ts.sample_by_first_obs, ts.SAMPLE_BY_FIRST_OBS_SQL),
+    "sample_by_tz_day": (ts.sample_by_tz_day, ts.SAMPLE_BY_TZ_SQL),
+    "decimal256_sum": (fn.decimal256_sum, fn.DECIMAL256_SUM_SQL),
+    "regr_bit_aggs": (fn.regr_bit_aggs, fn.REGR_BIT_AGGS_SQL),
+    "count_star_fast": (fn.count_star_fast, fn.COUNT_STAR_SQL),
+    "bind_variables": (fn.bind_variables, fn.BIND_VARIABLES_SQL),
     "rnd_generators": (fn.rnd_generators, fn.RND_GENERATORS_SQL),
-    "q12_priority_lines": (core.q12_priority_lines, core.Q12_SQL),
-    "q13_customer_distribution": (core.q13_customer_distribution, core.Q13_SQL),
-    "q17_small_quantity_revenue": (core.q17_small_quantity_revenue, core.Q17_SQL),
+    # rank-3 array ops (cairo/arr/ DerivedArrayView.transpose,
+    # ColumnType.java:59 32-dim limit): dims/elementwise/neg/scale/
+    # flatten/sum/transpose on a 2x3x2 array
+    "array_ops3": (fn.array_ops3, fn.ARRAY_OPS3_SQL),
     "cb_referer_domains": (fn.cb_referer_domains, fn.CB_REFERER_DOMAINS_SQL),
     "cb_minute_groups": (fn.cb_minute_groups, fn.CB_MINUTE_GROUPS_SQL),
     "cb_wide_sums": (fn.cb_wide_sums, fn.CB_WIDE_SUMS_SQL),
-    "language_detect": (pl.language_detect, pl.LANGUAGE_DETECT_SQL),
-    "token_counts": (pl.token_counts, pl.TOKEN_COUNTS_SQL),
-    "doc_fingerprints": (pl.doc_fingerprints, pl.DOC_FINGERPRINT_SQL),
-    "dedup_exact": (pl.dedup_exact, pl.DEDUP_EXACT_SQL),
-    "dedup_jaccard": (pl.dedup_jaccard, pl.DEDUP_JACCARD_SQL),
-}
-
-_RECHECK_R4: dict[str, tuple[QueryFn, str | None]] = {
-    # core TPC-H / scan family (re-verified r8)
-    "q5_region_revenue": (core.q5_region_revenue, core.Q5_SQL),
-    "q6_forecast_revenue": (core.q6_forecast_revenue, core.Q6_SQL),
-    "q4_priority_exists": (core.q4_priority_exists, core.Q4_SQL),
-    "q7_nation_trade": (core.q7_nation_trade, core.Q7_SQL),
-    "q10_returned_items": (core.q10_returned_items, core.Q10_SQL),
-    "time_filter_scan": (core.time_filter_scan, core.TIME_FILTER_SQL),
-    "topk_orders": (core.topk_orders, core.TOPK_SQL),
-    "tail_limit_events": (core.tail_limit_events, core.TAIL_LIMIT_SQL),
-    "distinct_users": (core.distinct_users, core.DISTINCT_USERS_SQL),
-    "setops_nations": (core.setops_nations, core.SETOPS_SQL),
-    "semi_anti_join": (core.semi_anti_join, core.SEMI_ANTI_SQL),
-    "theta_join_nested_loop": (core.theta_join_nested_loop, core.THETA_JOIN_SQL),
-    # aggregate long tail
-    "agg_stats": (core.agg_stats, core.AGG_STATS_SQL),
-    "vwap_lineitem": (core.vwap_lineitem, core.VWAP_SQL),
-    "arg_min_max": (core.arg_min_max, core.ARG_MIN_MAX_SQL),
-    "string_agg_names": (core.string_agg_names, core.STRING_AGG_SQL),
-    "geomean_bool_aggs": (core.geomean_bool_aggs, core.GEOMEAN_SQL),
-    "first_last_not_null": (core.first_last_not_null, core.FIRST_LAST_SQL),
-    "mode_skew_kurtosis": (core.mode_skew_kurtosis, core.MODE_SKEW_SQL),
-    "wide_aggregation": (core.wide_aggregation, core.WIDE_AGG_SQL),
-    # scalar functions
-    "datetime_functions": (core.datetime_functions, core.DATETIME_SQL),
-    "string_functions": (core.string_functions, core.STRING_FN_SQL),
-    "json_functions": (core.json_functions, core.JSON_FN_SQL),
-    "conditional_cast": (core.conditional_cast, core.CONDITIONAL_CAST_SQL),
-    # pipeline text family
-    "text_quality": (pl.text_quality, pl.TEXT_QUALITY_SQL),
-}
-
-_PRIORITY: dict[str, tuple[QueryFn, str | None]] = {
-    # --- r2 crashes, fixed this round (NTZ loader normalization) ---
-    "sql_window_join": (sq.sql_window_join, sq.SQL_WINDOW_JOIN_SQL),
-    "twap_vwap_events": (fn.twap_vwap_events, fn.TWAP_VWAP_SQL),
-    "nanos_sample_by": (fn.nanos_sample_by, fn.NANOS_SAMPLE_BY_SQL),
-    "sparkline_daily": (fn.sparkline_daily, fn.SPARKLINE_SQL),
-    # --- new this round: HAVING in the dialect parser ---
-    "sql_sample_by_having": (sq.sql_sample_by_having, sq.SQL_SAMPLE_BY_HAVING_SQL),
-    # --- new this round: repeating interval syntax ---
-    "interval_repeat": (fn.interval_repeat, fn.INTERVAL_REPEAT_SQL),
-    # --- new this round: cast-matrix edges (long256 arith, str→geohash) ---
-    "cast_matrix": (fn.cast_matrix, fn.CAST_MATRIX_SQL),
-    # --- new this round: ILP parse → table → aggregate, oracle-checked ---
-    "ilp_roundtrip": (fn.ilp_roundtrip, fn.ILP_ROUNDTRIP_SQL),
-    # --- new this round: TPC-H breadth (q8/q9/q14/q18/q19 shapes) ---
-    "q8_market_share": (core.q8_market_share, core.Q8_SQL),
-    "q9_product_profit": (core.q9_product_profit, core.Q9_SQL),
-    "q14_promo_revenue": (core.q14_promo_revenue, core.Q14_SQL),
-    "q18_large_orders": (core.q18_large_orders, core.Q18_SQL),
-    "q19_discounted_revenue": (core.q19_discounted_revenue, core.Q19_SQL),
-    "q15_top_supplier": (core.q15_top_supplier, core.Q15_SQL),
-    "q16_parts_supplier_count": (core.q16_parts_supplier_count, core.Q16_SQL),
-    "q22_global_sales": (core.q22_global_sales_opportunity, core.Q22_SQL),
-    # --- new this round: n≠1 calendar month/year bucket arithmetic ---
-    "sample_by_3M_2y": (ts.sample_by_3M_2y, ts.SAMPLE_BY_3M_2Y_SQL),
-    # --- new this round: keyless ASOF through the chunked-carry path ---
-    "asof_join_keyless": (ts.asof_join_keyless, ts.ASOF_KEYLESS_SQL),
-    # --- new this round: catalogue table functions ---
-    "catalog_functions": (fn.catalog_functions, fn.CATALOG_FUNCTIONS_SQL),
-    # --- new this round: set ops over dialect queries ---
-    "sql_setop_sample_by": (sq.sql_setop_sample_by, sq.SQL_SETOP_SQL),
-    # --- new this round: ClickBench shapes (ClickBenchTest.java:42) ---
-    "cb_topk_users": (fn.cb_topk_users, fn.CB_TOPK_USERS_SQL),
-    "cb_regex_extract_group": (fn.cb_regex_extract_group, fn.CB_REGEX_GROUP_SQL),
-    # --- new this round: WINDOW JOIN INCLUDE PREVAILING ---
-    "sql_window_join_prevailing": (
-        sq.sql_window_join_prevailing,
-        sq.SQL_WINDOW_JOIN_PREVAILING_SQL,
+    "sql_sample_by": (sq.sql_sample_by, sq.SQL_SAMPLE_BY_SQL),
+    "sql_sample_by_first_obs": (
+        sq.sql_sample_by_first_obs,
+        sq.SQL_SAMPLE_BY_FIRST_OBS_SQL,
     ),
-    # --- formerly rows-only; oracles added this round ---
-    "dedup_cluster_canonical": (pl.dedup_cluster_canonical, pl.DEDUP_CLUSTER_SQL),
-    "ema_events": (fn.ema_events, fn.EMA_EVENTS_SQL),
-    "vwema_events": (fn.vwema_events, fn.VWEMA_EVENTS_SQL),
-    "approx_aggs": (fn.approx_aggs, fn.APPROX_AGGS_SQL),
-}
-
-# Round-10 additions — first verification, head of the window.
-_NEW_R10: dict[str, tuple[QueryFn, str | None]] = {
-    # ALTER MATERIALIZED VIEW statement surface (r10,
-    # SqlCompilerImpl.java:2145): SUSPEND/RESUME WAL park/apply refreshes,
-    # SET TTL evicts old buckets — three oracle-checked stages
+    "sql_latest_on": (sq.sql_latest_on, sq.SQL_LATEST_ON_SQL),
+    "sql_asof_join": (sq.sql_asof_join, sq.SQL_ASOF_JOIN_SQL),
+    "sql_horizon_markout": (sq.sql_horizon_markout, sq.SQL_HORIZON_MARKOUT_SQL),
+    "sql_multi_join_sample_by": (sq.sql_multi_join_sample_by, sq.SQL_MULTI_JOIN_SQL),
+    "sql_subquery_dialect": (sq.sql_subquery_dialect, sq.SQL_SUBQUERY_DIALECT_SQL),
+    "sql_pivot": (sq.sql_pivot, sq.SQL_PIVOT_SQL),
+    "sql_declare_neg_limit": (sq.sql_declare_neg_limit, sq.SQL_DECLARE_NEG_LIMIT_SQL),
+    "q12_priority_lines": (core.q12_priority_lines, core.Q12_SQL),
+    "q13_customer_distribution": (core.q13_customer_distribution, core.Q13_SQL),
+    "q17_small_quantity_revenue": (core.q17_small_quantity_revenue, core.Q17_SQL),
+    "q21_waiting_suppliers": (core.q21_waiting_suppliers, core.Q21_SQL),
+    "sql_read_parquet": (sq.sql_read_parquet, sq.SQL_READ_PARQUET_SQL),
+    "sql_bind_positional": (sq.sql_bind_positional, sq.SQL_BIND_POSITIONAL_SQL),
+    "sql_ddl_dml_roundtrip": (sq.sql_ddl_dml_roundtrip, sq.SQL_DDL_DML_SQL),
+    "sql_plain_view": (sq.sql_plain_view, sq.SQL_PLAIN_VIEW_SQL),
+    # ALTER MATERIALIZED VIEW statement surface (SqlCompilerImpl.java:2145):
+    # SUSPEND/RESUME WAL park/apply refreshes, SET TTL evicts old buckets —
+    # three oracle-checked stages
     "sql_matview_alter": (sq.sql_matview_alter, sq.SQL_MATVIEW_ALTER_SQL),
-    # pixel-true raster resize (r10): resized BYTES hash an arithmetic oracle
-    "multimodal_raster_resize": (
-        pl.multimodal_raster_resize,
-        pl.MULTIMODAL_RASTER_SQL,
-    ),
-    # audio PCM container + windowed DSP features (r10): frame energy /
+    # pixel-true raster resize: resized BYTES hash an arithmetic oracle
+    "multimodal_raster_resize": (pl.multimodal_raster_resize, pl.MULTIMODAL_RASTER_SQL),
+    # audio PCM container + windowed DSP features: frame energy /
     # zero-crossings / peak hash an arithmetic oracle
     "multimodal_audio_features": (
         pl.multimodal_audio_features,
         pl.MULTIMODAL_AUDIO_SQL,
     ),
-    # product-quantization ANN (r10): code-only ADC scan vs full SQL oracle
+    # product-quantization ANN: code-only ADC scan vs full SQL oracle
     "embedding_ann_pq": (pl.embedding_ann_pq, pl.EMBEDDING_PQ_SQL),
     "embedding_ann_ivfpq": (pl.embedding_ann_ivfpq, pl.EMBEDDING_IVFPQ_SQL),
-    # tf-df keyword extraction (r10): integer-rank tf-idf, two aggs + window
+    # tf-df keyword extraction: integer-rank tf-idf, two aggs + window
     "doc_top_terms": (pl.doc_top_terms, pl.DOC_TOP_TERMS_SQL),
-    # pipeline ops as SQL table functions (r10): dedup_pairs / minhash /
-    # top_terms reachable from the dialect
+    # pipeline ops as SQL table functions: dedup_pairs / minhash / top_terms
+    # reachable from the dialect
     "sql_pipeline_table_fns": (
         sq.sql_pipeline_table_fns,
         sq.SQL_PIPELINE_TABLE_FNS_SQL,
     ),
-    # ANN index-quality report (r10): recall@10 of lsh/ivf/pq vs exact
+    # ANN index-quality report: recall@10 of lsh/ivf/pq vs exact
     "ann_recall_report": (pl.ann_recall_report, pl.ANN_RECALL_SQL),
-    # gap-based sessionization (r10): one-shuffle lag + running-sum windows
+    # gap-based sessionization: one-shuffle lag + running-sum windows
     "sessionize_events": (ts.sessionize_events, ts.SESSIONIZE_SQL),
-    # distributed k-means training (r10): Lloyd's iterations on the
-    # fixed-point grid, model + assignment stats vs a CTE-chain replay
+    # distributed k-means training: Lloyd's iterations on the fixed-point
+    # grid, model + assignment stats vs a CTE-chain replay
     "embedding_kmeans": (pl.embedding_kmeans, pl.EMBEDDING_KMEANS_SQL),
     # IVF probe over the TRAINED quantizer — the deployed-index path
     "embedding_ann_ivf_trained": (
         pl.embedding_ann_ivf_trained,
         pl.EMBEDDING_IVF_TRAINED_SQL,
     ),
-    # engine introspection surface (r10): writer metrics counters, pool
-    # listings, typeOf/array_build/version/current_* catalogue scalars
+    # engine introspection surface: writer metrics counters, pool listings,
+    # typeOf/array_build/version/current_* catalogue scalars
     "sql_catalogue_introspection": (
         sq.sql_catalogue_introspection,
         sq.SQL_CATALOGUE_INTROSPECTION_SQL,
@@ -183,254 +221,37 @@ _NEW_R10: dict[str, tuple[QueryFn, str | None]] = {
     # windowed stddev/var/corr/covar (reference functions/window/ stat
     # classes) via exact-decimal moment sums OVER frames
     "window_stat_aggs": (core.window_stat_aggs, core.WINDOW_STAT_AGGS_SQL),
-    # dataset-card summary (r10): one-pass per-source corpus stats
+    # dataset-card summary: one-pass per-source corpus stats
     "corpus_report": (pl.corpus_report, pl.CORPUS_REPORT_SQL),
-    # sliding-window chunking (r10): map-only retrieval prep
+    # sliding-window chunking: map-only retrieval prep
     "doc_chunks": (pl.doc_chunks, pl.DOC_CHUNKS_SQL),
-    # incremental ingest gate (r10): new batch vs stored corpus —
-    # exact-hash + LSH-band semi-joins, per-doc verdict
+    # incremental ingest gate: new batch vs stored corpus — exact-hash +
+    # LSH-band semi-joins, per-doc verdict
     "incremental_dedup": (pl.incremental_dedup, pl.INCREMENTAL_DEDUP_SQL),
-    # BPE merge-candidate stats (r10): in-row pair build, one agg + top-k
+    # BPE merge-candidate stats: in-row pair build, one agg + top-k
     "bpe_merge_candidates": (pl.bpe_merge_candidates, pl.BPE_MERGE_SQL),
-    # iterative BPE trainer (r10): 3 count->argmax->greedy-rewrite rounds,
-    # oracle replays the identical loop incl. the fold rewrites
+    # iterative BPE trainer: 3 count->argmax->greedy-rewrite rounds, oracle
+    # replays the identical loop incl. the fold rewrites
     "bpe_train_merges": (pl.bpe_train_merges, pl.BPE_TRAIN_SQL),
-    # temperature sweep (r10): quarter-grid alphas via sqrt compositions
-    "mixture_temperature_sweep": (
-        pl.mixture_temperature_sweep,
-        pl.MIXTURE_SWEEP_SQL,
-    ),
-    # trained PQ (r10): per-subspace k-means, one aggregate per round
+    # temperature sweep: quarter-grid alphas via sqrt compositions
+    "mixture_temperature_sweep": (pl.mixture_temperature_sweep, pl.MIXTURE_SWEEP_SQL),
+    # trained PQ: per-subspace k-means, one aggregate per round
     "embedding_pq_train": (pl.embedding_pq_train, pl.EMBEDDING_PQ_TRAIN_SQL),
     "embedding_ann_pq_trained": (
         pl.embedding_ann_pq_trained,
         pl.EMBEDDING_PQ_TRAINED_SQL,
     ),
-}
-
-# Entries sitting on code materially changed in r10 (cluster-resolution
-# collect fold, mat-view Observation fold + concurrent creates, floor-mod
-# sub-second extractors, multimodal CRC/bounds) — re-verify right after
-# the new block.
-_CHANGED_R10_NAMES = [
-    "sql_matview_timer",
-    "sql_matview",
-    "dedup_cluster_canonical",
-    "dedup_jaccard",
-    "sql_scalar_batch2",
-    "multimodal_frames",
-    "multimodal_decode",
-    "sql_in_volume",
-]
-
-# The 20 entries whose latest driver check is round 5 (VERDICT r9 task 2)
-# — verifying these makes every registry entry driver-green within r6-r10.
-_RECHECK_R10_NAMES = [
-    "geohash_events", "ipv4_subnets", "uuid_long256_bin", "array_ops",
-    "pivot_events", "unnest_tokens", "lateral_topn", "interval_search",
-    "percentiles_exact", "generate_series_rnd", "haversine_paths",
-    "union_harmonize_types", "sql_dedup_upsert_sample_by", "sql_rnd_macros",
-    "sql_live_view_latest", "sql_window_join_dynamic",
-    "cb_expr_group_pagination", "cb_case_group_sample",
-    "contamination_check", "training_corpus_filter",
-]
-
-# Round-11 window (VERDICT r10 task 1): entries on code materially
-# changed in r11 first, then ALL 46 entries whose latest driver check is
-# round 6 — after this round every registry entry is driver-verified
-# within r8-r11.  4 changed + 46 stale = exactly the ~50-slot window.
-#
-# r12 rotation plan: chunk_retrieval_topk (added past this window) plus
-# any r12 changes go first; the next-stalest block is the ~50 entries
-# whose latest check is round 8 (the r8 grammar/function-surface and
-# TPC-H/recheck families) — rotating those keeps every entry within a
-# 4-round driver-check horizon.
-_CHANGED_R11_NAMES = [
-    # n=1 frame guard (var_pop residue / corr range) — hash changed
-    "window_stat_aggs",
-    # + table_storage() + wait_wal_table('t', seqTxn) rows, inline VALUES
-    "sql_catalogue_introspection",
-    # corpus-relative stop-shingle guard (max_shingle_df_frac)
-    "dedup_jaccard_guarded",
-    # NEW r11: staged production near-dup (exact dedup -> relative guard)
-    "dedup_jaccard_prod_staged",
-    # dedup_cluster_canonical is NOT here: r10-green, hash unchanged (the
-    # r11 work on it was a profile adjudication, not a code change)
-]
-
-# The 46 entries whose latest driver check is round 6 (VERDICT r10 "What's
-# missing" #1 — the full staleness rotation; sql_geo_date_encoding also
-# carries the new to_char(bin) hex-dump columns).
-_RECHECK_R6_STALE_NAMES = [
-    "nanos_sample_by", "decimal256_div", "approx_aggs", "ilp_roundtrip",
-    "sql_wal_suspend_resume", "catalog_functions", "sql_query_activity",
-    "ema_events", "vwema_events", "asof_join_keyless", "embedding_int8_topk",
-    "window_groups_exclude", "pii_scrub", "text_repetition",
-    "stratified_sample", "sequence_packing", "mixture_weights",
-    "sql_geo_date_encoding", "embedding_dedup_canonical", "corpus_mix_sample",
-    "sql_window_join", "twap_vwap_events", "sparkline_daily",
-    "sql_sample_by_having", "interval_repeat", "cast_matrix",
-    "q8_market_share", "q9_product_profit", "q14_promo_revenue",
-    "q18_large_orders", "q19_discounted_revenue", "q15_top_supplier",
-    "q16_parts_supplier_count", "q22_global_sales", "sql_setop_sample_by",
-    "cb_topk_users", "cb_regex_extract_group", "sql_window_join_prevailing",
-    "window_lead_lag", "window_join_events", "asof_join_events",
-    "asof_join_tolerance", "lt_join_events", "splice_join_events",
-    "horizon_join_events", "sample_by_1h",
-]
-
-_NEW_R9: dict[str, tuple[QueryFn, str | None]] = {
-    # mat-view TIMER + PERIOD refresh scheduling (r9,
-    # SqlParser.java:2590-2717): stale-before-due / fresh-after-manual /
-    # period-complete states oracle-checked
+    # mat-view TIMER + PERIOD refresh scheduling (SqlParser.java:2590-2717):
+    # stale-before-due / fresh-after-manual / period-complete states
+    # oracle-checked
     "sql_matview_timer": (sq.sql_matview_timer, sq.SQL_MATVIEW_TIMER_SQL),
-    # rank-3 array ops (r9, cairo/arr/ DerivedArrayView.transpose,
-    # ColumnType.java:59 32-dim limit): dims/elementwise/neg/scale/
-    # flatten/sum/transpose on a 2x3x2 array
-    "array_ops3": (fn.array_ops3, fn.ARRAY_OPS3_SQL),
-    # CREATE TABLE ... IN VOLUME lifecycle (r9, SqlParser.java:4608)
+    # CREATE TABLE ... IN VOLUME lifecycle (SqlParser.java:4608)
     "sql_in_volume": (sq.sql_in_volume, sq.SQL_IN_VOLUME_SQL),
-    # k-NN JOIN over a query SET (r9, LLM-pipeline batch retrieval)
-    "embedding_knn_join": (pl.embedding_knn_join, pl.EMBEDDING_KNN_JOIN_SQL),
-    # video frame-sample + resize + decode pipeline (r9 multimodal)
+    # video frame-sample + resize + decode pipeline
     "multimodal_frames": (pl.multimodal_frames, pl.MULTIMODAL_FRAMES_SQL),
-}
-
-# Round-8 additions — first verification; head of the window.  Round 7
-# ended without a driver correctness run (no CORRECTNESS_r07), so the
-# _NEW_R7 + _RECHECK_R7 blocks stay right behind these.
-_NEW_R8: dict[str, tuple[QueryFn, str | None]] = {
-    # SQL function-surface completion (r8): scalar batch — rounding
-    # family, strpos/starts_with/length_bytes, week_of_year/to_str,
-    # netmask, spread_bps, to_long128, current_setting
-    "sql_fn_surface_scalars": (
-        sq.sql_fn_surface_scalars,
-        sq.SQL_FN_SURFACE_SCALARS_SQL,
-    ),
-    # aggregate batch — arg_max/arg_min, count_distinct, vwap/
-    # weighted_avg/weighted_stddev, skewness/kurtosis family
-    # (bare = sample), twap
-    "sql_fn_surface_aggs": (
-        sq.sql_fn_surface_aggs,
-        sq.SQL_FN_SURFACE_AGGS_SQL,
-    ),
-    # array batch — ARRAY[...] literals, 1-based dereference,
-    # array_elem_* dual forms, matmul/transpose SQL forms, l2price
-    "sql_fn_surface_arrays": (
-        sq.sql_fn_surface_arrays,
-        sq.SQL_FN_SURFACE_ARRAYS_SQL,
-    ),
-    # time-unit RANGE frame bounds in OVER ('1' HOUR PRECEDING,
-    # unitless-quoted = micros, shorthand RANGE x unit PRECEDING) (r8)
-    "sql_window_range_units": (
-        sq.sql_window_range_units,
-        sq.SQL_WINDOW_RANGE_UNITS_SQL,
-    ),
-    # frame EXCLUDE clauses (CURRENT ROW frame-shrink lowering, NO
-    # OTHERS no-op, named WINDOW defs) (r8)
-    "sql_window_exclude": (
-        sq.sql_window_exclude,
-        sq.SQL_WINDOW_EXCLUDE_SQL,
-    ),
-    # WITH over dialect bodies + optional-SELECT bare-table grammar (r8)
-    "sql_with_cte_bare": (
-        sq.sql_with_cte_bare,
-        sq.SQL_WITH_CTE_BARE_SQL,
-    ),
-    # implicit GROUP BY: plain columns next to aggregates (r8)
-    "sql_implicit_group_by": (
-        sq.sql_implicit_group_by,
-        sq.SQL_IMPLICIT_GROUP_BY_SQL,
-    ),
-    # negative LIMIT ranges counting from the end (r8)
-    "sql_limit_neg_range": (
-        sq.sql_limit_neg_range,
-        sq.SQL_LIMIT_NEG_RANGE_SQL,
-    ),
-    # LATEST BY legacy form + DISTINCT + IN-position dialect subquery +
-    # != null comparison semantics (r8)
-    "sql_grammar_r8": (
-        sq.sql_grammar_r8,
-        sq.SQL_GRAMMAR_R8_SQL,
-    ),
-    # ts = '<interval>' intrinsic + symmetric timestamp BETWEEN (r8)
-    "sql_interval_eq": (
-        sq.sql_interval_eq,
-        sq.SQL_INTERVAL_EQ_SQL,
-    ),
-}
-
-# Round-7 additions — first verification; kept at the head of the window.
-_NEW_R7: dict[str, tuple[QueryFn, str | None]] = {
-    # dialect ~ / !~ / GLOB match operators (r7)
-    "sql_regex_match": (sq.sql_regex_match, sq.SQL_REGEX_MATCH_SQL),
-    # array/ long tail: sort/stddev/shift/round/position/reverse/count,
-    # neg + scalar forms, dim_length/flatten (r7)
-    "array_ops2": (fn.array_ops2, fn.ARRAY_OPS2_SQL),
-    # JSON UNNEST source + typed json_extract ::T (r7)
-    "sql_json_unnest": (sq.sql_json_unnest, sq.SQL_JSON_UNNEST_SQL),
-}
-
-# The 12 entries whose last *driver* verification was round 3 (r6 window
-# covered only the first 8 of the 20-entry recheck block).  VERDICT r6
-# task 1: rotate these first so every registry entry is driver-verified
-# within rounds 5-7.
-_RECHECK_R7: dict[str, tuple[QueryFn, str | None]] = {
-    "sample_by_fill_null": (ts.sample_by_fill_null, ts.SAMPLE_BY_FILL_NULL_SQL),
-    "sample_by_fill_prev": (ts.sample_by_fill_prev, ts.SAMPLE_BY_FILL_PREV_SQL),
-    "sample_by_fill_value": (ts.sample_by_fill_value, ts.SAMPLE_BY_FILL_VALUE_SQL),
-    "sample_by_fill_linear": (ts.sample_by_fill_linear, ts.SAMPLE_BY_FILL_LINEAR_SQL),
-    "latest_on_user": (ts.latest_on_user, ts.LATEST_ON_SQL),
-    "window_rank": (core.window_rank, core.WINDOW_RANK_SQL),
-    "window_running": (core.window_running, core.WINDOW_RUNNING_SQL),
-    "window_moving_avg": (core.window_moving_avg, core.WINDOW_MOVING_AVG_SQL),
-    "window_first_last_nth": (core.window_first_last_nth, core.WINDOW_FIRST_LAST_SQL),
-    "window_distribution": (core.window_distribution, core.WINDOW_DISTRIBUTION_SQL),
-    "q1_pricing_summary": (core.q1_pricing_summary, core.Q1_SQL),
-    "q3_top_revenue": (core.q3_top_revenue, core.Q3_SQL),
-}
-
-_RECHECK: dict[str, tuple[QueryFn, str | None]] = {
-    # r3-green, re-driver-verified r6 (first 8 of the old recheck block)
-    "window_lead_lag": (core.window_lead_lag, core.WINDOW_LEAD_LAG_SQL),
-    "window_join_events": (ts.window_join_events, ts.WINDOW_JOIN_SQL),
-    "asof_join_events": (ts.asof_join_events, ts.ASOF_JOIN_SQL),
-    "asof_join_tolerance": (ts.asof_join_tolerance, ts.ASOF_TOLERANCE_SQL),
-    "lt_join_events": (ts.lt_join_events, ts.LT_JOIN_SQL),
-    "splice_join_events": (ts.splice_join_events, ts.SPLICE_JOIN_SQL),
-    "horizon_join_events": (ts.horizon_join_events, ts.HORIZON_JOIN_SQL),
-    "sample_by_1h": (ts.sample_by_1h, ts.SAMPLE_BY_1H_SQL),
-}
-
-# The 40 entries last verified in round 2 — first in the r5 window.
-_RECHECK_R5: dict[str, tuple[QueryFn, str | None]] = {
-    "sample_by_tz_day": (ts.sample_by_tz_day, ts.SAMPLE_BY_TZ_SQL),
-    "decimal256_sum": (fn.decimal256_sum, fn.DECIMAL256_SUM_SQL),
-    "regr_bit_aggs": (fn.regr_bit_aggs, fn.REGR_BIT_AGGS_SQL),
-    "count_star_fast": (fn.count_star_fast, fn.COUNT_STAR_SQL),
-    "bind_variables": (fn.bind_variables, fn.BIND_VARIABLES_SQL),
-    "sql_sample_by": (sq.sql_sample_by, sq.SQL_SAMPLE_BY_SQL),
-    "sql_sample_by_first_obs": (sq.sql_sample_by_first_obs, sq.SQL_SAMPLE_BY_FIRST_OBS_SQL),
-    "sql_latest_on": (sq.sql_latest_on, sq.SQL_LATEST_ON_SQL),
-    "sql_declare_neg_limit": (sq.sql_declare_neg_limit, sq.SQL_DECLARE_NEG_LIMIT_SQL),
-    "sql_asof_join": (sq.sql_asof_join, sq.SQL_ASOF_JOIN_SQL),
-    "sql_horizon_markout": (sq.sql_horizon_markout, sq.SQL_HORIZON_MARKOUT_SQL),
-    "sql_multi_join_sample_by": (sq.sql_multi_join_sample_by, sq.SQL_MULTI_JOIN_SQL),
-    "sql_subquery_dialect": (sq.sql_subquery_dialect, sq.SQL_SUBQUERY_DIALECT_SQL),
-    "sql_pivot": (sq.sql_pivot, sq.SQL_PIVOT_SQL),
+    "sql_matview": (sq.sql_matview, sq.SQL_MATVIEW_SQL),
+    "dedup_jaccard": (pl.dedup_jaccard, pl.DEDUP_JACCARD_SQL),
     "dedup_jaccard_guarded": (pl.dedup_jaccard_guarded, pl.DEDUP_JACCARD_GUARDED_SQL),
-    "markout_horizon_agg": (ts.markout_horizon_agg, ts.MARKOUT_HORIZON_AGG_SQL),
-    "sample_by_first_obs": (ts.sample_by_first_obs, ts.SAMPLE_BY_FIRST_OBS_SQL),
-    "minhash_signatures": (pl.minhash_signatures, pl.MINHASH_SIG_SQL),
-    "minhash_lsh": (pl.minhash_lsh, pl.MINHASH_LSH_SQL),
-    "simhash_docs": (pl.simhash_docs, pl.SIMHASH_SQL),
-    "embedding_topk": (pl.embedding_topk, pl.EMBEDDING_TOPK_SQL),
-    "embedding_ann_lsh": (pl.embedding_ann_lsh, pl.EMBEDDING_ANN_SQL),
-    "embedding_ann_multiprobe": (pl.embedding_ann_multiprobe, pl.EMBEDDING_MULTIPROBE_SQL),
-    "embedding_ann_ivf": (pl.embedding_ann_ivf, pl.EMBEDDING_IVF_SQL),
-    "embedding_near_dup": (pl.embedding_near_dup, pl.EMBEDDING_NEAR_DUP_SQL),
-    "l2price_orderbook": (fn.l2price_orderbook, fn.L2PRICE_SQL),
-    "spread_mid_events": (fn.spread_mid_events, fn.SPREAD_MID_SQL),
     "geohash_events": (fn.geohash_events, fn.GEOHASH_SQL),
     "ipv4_subnets": (fn.ipv4_subnets, fn.IPV4_SQL),
     "uuid_long256_bin": (fn.uuid_long256_bin, fn.UUID_LONG256_SQL),
@@ -443,345 +264,186 @@ _RECHECK_R5: dict[str, tuple[QueryFn, str | None]] = {
     "generate_series_rnd": (fn.generate_series_rnd, fn.GENERATE_SERIES_SQL),
     "haversine_paths": (fn.haversine_paths, fn.HAVERSINE_SQL),
     "union_harmonize_types": (fn.union_harmonize_types, fn.UNION_CAST_SQL),
-}
-
-# Round-5 additions — first verification; kept right after the recheck block
-# so they land inside the driver's ~50-query window.
-_NEW_R5: dict[str, tuple[QueryFn, str | None]] = {
-    # DEDUP UPSERT KEYS merge-on-append (r5): overlapping second commit,
-    # SAMPLE BY over the merged state
+    # DEDUP UPSERT KEYS merge-on-append: overlapping second commit, SAMPLE
+    # BY over the merged state
     "sql_dedup_upsert_sample_by": (
         sq.sql_dedup_upsert_sample_by,
         sq.SQL_DEDUP_UPSERT_SQL,
     ),
-    # rnd_* SQL-macro completion (r5): char/byte-range/short/float/str/
+    # rnd_* SQL-macro completion: char/byte-range/short/float/str/
     # uuid4/ipv4/geohash/bin/long256/log/date/timestamp from SQL text
     "sql_rnd_macros": (fn.sql_rnd_macros, fn.SQL_RND_MACROS_SQL),
-    # general live view (cairo/lv/, r5): LATEST ON body, checkpointed
-    # per-key state, incremental refresh-on-read after a second commit
+    # general live view (cairo/lv/): LATEST ON body, checkpointed per-key
+    # state, incremental refresh-on-read after a second commit
     "sql_live_view_latest": (sq.sql_live_view_latest, sq.SQL_LIVE_VIEW_SQL),
-    # WINDOW JOIN dynamic per-row bounds (r5, WindowJoinTest
+    # WINDOW JOIN dynamic per-row bounds (WindowJoinTest
     # testDynamicWindow*): bucketed by the max window width
     "sql_window_join_dynamic": (
         sq.sql_window_join_dynamic,
         sq.SQL_WINDOW_JOIN_DYNAMIC_SQL,
     ),
-    # ClickBench completion shapes (r5): expression group keys + deep
-    # offset pagination (q36/q41), CASE group key + SAMPLE BY tail (q38/q43)
-    "cb_expr_group_pagination": (
-        fn.cb_expr_group_pagination,
-        fn.CB_EXPR_GROUP_SQL,
-    ),
+    # ClickBench completion shapes: expression group keys + deep offset
+    # pagination (q36/q41), CASE group key + SAMPLE BY tail (q38/q43)
+    "cb_expr_group_pagination": (fn.cb_expr_group_pagination, fn.CB_EXPR_GROUP_SQL),
     "cb_case_group_sample": (fn.cb_case_group_sample, fn.CB_CASE_GROUP_SQL),
-    # n-gram decontamination screen (r5, LLM-pipeline first-class op)
+    # n-gram decontamination screen (LLM-pipeline first-class op)
     "contamination_check": (pl.contamination_check, pl.CONTAMINATION_SQL),
     # composed training-corpus filter: quality + exact-dedup +
-    # decontamination with a per-stage audit (r5)
+    # decontamination with a per-stage audit
     "training_corpus_filter": (pl.training_corpus_filter, pl.TRAINING_FILTER_SQL),
-}
-
-# Round-6 additions — first verification; kept at the head of the window.
-_NEW_R6: dict[str, tuple[QueryFn, str | None]] = {
-    # real multimodal header decode (r6): byte-exact PNG/JPEG/GIF
-    # synthesis + fixed-offset / marker-scan dimension parse
+    # real multimodal header decode: byte-exact PNG/JPEG/GIF synthesis +
+    # fixed-offset / marker-scan dimension parse
     "multimodal_decode": (pl.multimodal_decode, pl.MULTIMODAL_SQL),
-    # GROUPS/EXCLUDE fused into two shared-spec window passes (r6 rewrite)
+    # GROUPS/EXCLUDE fused into two shared-spec window passes
     "window_groups_exclude": (fn.window_groups_exclude, fn.WINDOW_GROUPS_EXCLUDE_SQL),
-    # DECIMAL256 divide/rescale (r6): limb long division vs native HUGEINT
+    # DECIMAL256 divide/rescale: limb long division vs native HUGEINT
     "decimal256_div": (fn.decimal256_div, fn.DECIMAL256_DIV_SQL),
-    # query registry: query_activity() + CANCEL QUERY (r6)
+    # query registry: query_activity() + CANCEL QUERY
     "sql_query_activity": (sq.sql_query_activity, sq.SQL_QUERY_ACTIVITY_SQL),
-    # PII redaction stage: staged regex scrub, counts + scrubbed-text md5 (r6)
+    # PII redaction stage: staged regex scrub, counts + scrubbed-text md5
     "pii_scrub": (pl.pii_scrub_docs, pl.PII_SCRUB_SQL),
-    # Gopher/C4 repetition-quality signals (r6)
+    # Gopher/C4 repetition-quality signals
     "text_repetition": (pl.text_repetition, pl.TEXT_REPETITION_SQL),
-    # deterministic hash-stratified sampling audit (r6)
+    # deterministic hash-stratified sampling audit
     "stratified_sample": (pl.stratified_sample_audit, pl.STRATIFIED_SAMPLE_SQL),
-    # concat-then-chunk context-window packing (r6)
+    # concat-then-chunk context-window packing
     "sequence_packing": (pl.sequence_packing, pl.SEQUENCE_PACKING_SQL),
-    # sqrt-temperature domain-mixture weights (r6)
+    # sqrt-temperature domain-mixture weights
     "mixture_weights": (pl.mixture_weights_by_source, pl.MIXTURE_WEIGHTS_SQL),
-    # int8-quantized cosine top-k (r6)
+    # int8-quantized cosine top-k
     "embedding_int8_topk": (pl.embedding_int8_topk, pl.EMBEDDING_INT8_TOPK_SQL),
-    # WAL suspend/resume lifecycle with FROM TXN skip (r6)
+    # WAL suspend/resume lifecycle with FROM TXN skip
     "sql_wal_suspend_resume": (
         sq.sql_wal_suspend_resume,
         sq.SQL_WAL_SUSPEND_RESUME_SQL,
     ),
-    # geo/date/encoding scalar families (r6)
-    "sql_geo_date_encoding": (
-        sq.sql_geo_date_encoding,
-        sq.SQL_GEO_DATE_ENCODING_SQL,
-    ),
-    # finance trio / date batch-2 / position / to_uuid / to_long256 (r6)
+    # geo/date/encoding scalar families
+    "sql_geo_date_encoding": (sq.sql_geo_date_encoding, sq.SQL_GEO_DATE_ENCODING_SQL),
+    # finance trio / date batch-2 / position / to_uuid / to_long256
     "sql_scalar_batch2": (sq.sql_scalar_batch2, sq.SQL_SCALAR_BATCH2_SQL),
-    # SemDeDup-style embedding-space dedup composition (r6)
+    # SemDeDup-style embedding-space dedup composition
     "embedding_dedup_canonical": (
         pl.embedding_dedup_canonical,
         pl.EMBEDDING_DEDUP_CANONICAL_SQL,
     ),
-    # temperature-rebalanced corpus sampling (mixture weights -> rates, r6)
+    # temperature-rebalanced corpus sampling (mixture weights -> rates)
     "corpus_mix_sample": (pl.corpus_mix_sample, pl.CORPUS_MIX_SAMPLE_SQL),
-}
-
-# Window order, round 11 (VERDICT r10 task 1): entries on materially-
-# changed r11 code first, then the full 46-entry r6-stale rotation —
-# after this round every registry entry is driver-verified within
-# r8-r11.  Everything else keeps its old relative order past the window.
-_ALL_BLOCKS: dict[str, tuple[QueryFn, str | None]] = {
-    **_NEW_R10,
-    **_NEW_R9,
-    **_RECHECK_R9,
-    **_RECHECK_R5,
-    **_NEW_R5,
-    **_NEW_R6,
-    **_PRIORITY,
-    **_RECHECK,
-    **_RECHECK_R4,
-    **_NEW_R7,
-    **_NEW_R8,
-    **_RECHECK_R7,
-}
-
-_WINDOW_R11 = _CHANGED_R11_NAMES + _RECHECK_R6_STALE_NAMES  # r11 history
-
-# Round-11 new queries (inside the window via _CHANGED_R11_NAMES).
-_NEW_R11: dict[str, tuple[QueryFn, str | None]] = {
-    # production staged near-dup: exact dedup -> corpus-relative guard
-    "dedup_jaccard_prod_staged": (
-        pl.dedup_jaccard_prod_staged,
-        pl.DEDUP_JACCARD_PROD_STAGED_SQL,
+    "sql_window_join": (sq.sql_window_join, sq.SQL_WINDOW_JOIN_SQL),
+    "twap_vwap_events": (fn.twap_vwap_events, fn.TWAP_VWAP_SQL),
+    "nanos_sample_by": (fn.nanos_sample_by, fn.NANOS_SAMPLE_BY_SQL),
+    "sparkline_daily": (fn.sparkline_daily, fn.SPARKLINE_SQL),
+    "sql_sample_by_having": (sq.sql_sample_by_having, sq.SQL_SAMPLE_BY_HAVING_SQL),
+    "interval_repeat": (fn.interval_repeat, fn.INTERVAL_REPEAT_SQL),
+    "cast_matrix": (fn.cast_matrix, fn.CAST_MATRIX_SQL),
+    "ilp_roundtrip": (fn.ilp_roundtrip, fn.ILP_ROUNDTRIP_SQL),
+    "q8_market_share": (core.q8_market_share, core.Q8_SQL),
+    "q9_product_profit": (core.q9_product_profit, core.Q9_SQL),
+    "q14_promo_revenue": (core.q14_promo_revenue, core.Q14_SQL),
+    "q18_large_orders": (core.q18_large_orders, core.Q18_SQL),
+    "q19_discounted_revenue": (core.q19_discounted_revenue, core.Q19_SQL),
+    "q15_top_supplier": (core.q15_top_supplier, core.Q15_SQL),
+    "q16_parts_supplier_count": (core.q16_parts_supplier_count, core.Q16_SQL),
+    "q22_global_sales": (core.q22_global_sales_opportunity, core.Q22_SQL),
+    "sample_by_3M_2y": (ts.sample_by_3M_2y, ts.SAMPLE_BY_3M_2Y_SQL),
+    "asof_join_keyless": (ts.asof_join_keyless, ts.ASOF_KEYLESS_SQL),
+    "catalog_functions": (fn.catalog_functions, fn.CATALOG_FUNCTIONS_SQL),
+    "sql_setop_sample_by": (sq.sql_setop_sample_by, sq.SQL_SETOP_SQL),
+    "cb_topk_users": (fn.cb_topk_users, fn.CB_TOPK_USERS_SQL),
+    "cb_regex_extract_group": (fn.cb_regex_extract_group, fn.CB_REGEX_GROUP_SQL),
+    "sql_window_join_prevailing": (
+        sq.sql_window_join_prevailing,
+        sq.SQL_WINDOW_JOIN_PREVAILING_SQL,
     ),
-}
-_ALL_BLOCKS.update(_NEW_R11)
-
-# Round-11 additions PAST the full window (first driver verification in
-# r12; oracle-verified by the full pytest suite this round).
-_NEW_R11_POST: dict[str, tuple[QueryFn, str | None]] = {
+    "dedup_cluster_canonical": (pl.dedup_cluster_canonical, pl.DEDUP_CLUSTER_SQL),
+    "ema_events": (fn.ema_events, fn.EMA_EVENTS_SQL),
+    "vwema_events": (fn.vwema_events, fn.VWEMA_EVENTS_SQL),
+    "approx_aggs": (fn.approx_aggs, fn.APPROX_AGGS_SQL),
+    "window_lead_lag": (core.window_lead_lag, core.WINDOW_LEAD_LAG_SQL),
+    "window_join_events": (ts.window_join_events, ts.WINDOW_JOIN_SQL),
+    "asof_join_events": (ts.asof_join_events, ts.ASOF_JOIN_SQL),
+    "asof_join_tolerance": (ts.asof_join_tolerance, ts.ASOF_TOLERANCE_SQL),
+    "lt_join_events": (ts.lt_join_events, ts.LT_JOIN_SQL),
+    "splice_join_events": (ts.splice_join_events, ts.SPLICE_JOIN_SQL),
+    "horizon_join_events": (ts.horizon_join_events, ts.HORIZON_JOIN_SQL),
+    "sample_by_1h": (ts.sample_by_1h, ts.SAMPLE_BY_1H_SQL),
+    "q5_region_revenue": (core.q5_region_revenue, core.Q5_SQL),
+    "q6_forecast_revenue": (core.q6_forecast_revenue, core.Q6_SQL),
+    "q4_priority_exists": (core.q4_priority_exists, core.Q4_SQL),
+    "q7_nation_trade": (core.q7_nation_trade, core.Q7_SQL),
+    "q10_returned_items": (core.q10_returned_items, core.Q10_SQL),
+    "time_filter_scan": (core.time_filter_scan, core.TIME_FILTER_SQL),
+    "topk_orders": (core.topk_orders, core.TOPK_SQL),
+    "tail_limit_events": (core.tail_limit_events, core.TAIL_LIMIT_SQL),
+    "distinct_users": (core.distinct_users, core.DISTINCT_USERS_SQL),
+    "setops_nations": (core.setops_nations, core.SETOPS_SQL),
+    "semi_anti_join": (core.semi_anti_join, core.SEMI_ANTI_SQL),
+    "theta_join_nested_loop": (core.theta_join_nested_loop, core.THETA_JOIN_SQL),
+    "agg_stats": (core.agg_stats, core.AGG_STATS_SQL),
+    "vwap_lineitem": (core.vwap_lineitem, core.VWAP_SQL),
+    "arg_min_max": (core.arg_min_max, core.ARG_MIN_MAX_SQL),
+    "string_agg_names": (core.string_agg_names, core.STRING_AGG_SQL),
+    "geomean_bool_aggs": (core.geomean_bool_aggs, core.GEOMEAN_SQL),
+    "first_last_not_null": (core.first_last_not_null, core.FIRST_LAST_SQL),
+    "mode_skew_kurtosis": (core.mode_skew_kurtosis, core.MODE_SKEW_SQL),
+    "wide_aggregation": (core.wide_aggregation, core.WIDE_AGG_SQL),
+    "datetime_functions": (core.datetime_functions, core.DATETIME_SQL),
+    "string_functions": (core.string_functions, core.STRING_FN_SQL),
+    "json_functions": (core.json_functions, core.JSON_FN_SQL),
+    # dialect ~ / !~ / GLOB match operators
+    "sql_regex_match": (sq.sql_regex_match, sq.SQL_REGEX_MATCH_SQL),
+    # array/ long tail: sort/stddev/shift/round/position/reverse/count, neg
+    # + scalar forms, dim_length/flatten
+    "array_ops2": (fn.array_ops2, fn.ARRAY_OPS2_SQL),
+    # JSON UNNEST source + typed json_extract ::T
+    "sql_json_unnest": (sq.sql_json_unnest, sq.SQL_JSON_UNNEST_SQL),
+    # SQL function-surface completion: scalar batch — rounding family,
+    # strpos/starts_with/length_bytes, week_of_year/to_str, netmask,
+    # spread_bps, to_long128, current_setting
+    "sql_fn_surface_scalars": (
+        sq.sql_fn_surface_scalars,
+        sq.SQL_FN_SURFACE_SCALARS_SQL,
+    ),
+    # aggregate batch — arg_max/arg_min, count_distinct, vwap/
+    # weighted_avg/weighted_stddev, skewness/kurtosis family (bare =
+    # sample), twap
+    "sql_fn_surface_aggs": (sq.sql_fn_surface_aggs, sq.SQL_FN_SURFACE_AGGS_SQL),
+    # array batch — ARRAY[...] literals, 1-based dereference, array_elem_*
+    # dual forms, matmul/transpose SQL forms, l2price
+    "sql_fn_surface_arrays": (sq.sql_fn_surface_arrays, sq.SQL_FN_SURFACE_ARRAYS_SQL),
+    # time-unit RANGE frame bounds in OVER ('1' HOUR PRECEDING,
+    # unitless-quoted = micros, shorthand RANGE x unit PRECEDING)
+    "sql_window_range_units": (
+        sq.sql_window_range_units,
+        sq.SQL_WINDOW_RANGE_UNITS_SQL,
+    ),
+    # frame EXCLUDE clauses (CURRENT ROW frame-shrink lowering, NO OTHERS
+    # no-op, named WINDOW defs)
+    "sql_window_exclude": (sq.sql_window_exclude, sq.SQL_WINDOW_EXCLUDE_SQL),
+    # WITH over dialect bodies + optional-SELECT bare-table grammar
+    "sql_with_cte_bare": (sq.sql_with_cte_bare, sq.SQL_WITH_CTE_BARE_SQL),
+    # implicit GROUP BY: plain columns next to aggregates
+    "sql_implicit_group_by": (sq.sql_implicit_group_by, sq.SQL_IMPLICIT_GROUP_BY_SQL),
+    # negative LIMIT ranges counting from the end
+    "sql_limit_neg_range": (sq.sql_limit_neg_range, sq.SQL_LIMIT_NEG_RANGE_SQL),
+    # LATEST BY legacy form + DISTINCT + IN-position dialect subquery + !=
+    # null comparison semantics
+    "sql_grammar_r8": (sq.sql_grammar_r8, sq.SQL_GRAMMAR_R8_SQL),
+    # ts = '<interval>' intrinsic + symmetric timestamp BETWEEN
+    "sql_interval_eq": (sq.sql_interval_eq, sq.SQL_INTERVAL_EQ_SQL),
+    "sample_by_fill_null": (ts.sample_by_fill_null, ts.SAMPLE_BY_FILL_NULL_SQL),
+    "sample_by_fill_prev": (ts.sample_by_fill_prev, ts.SAMPLE_BY_FILL_PREV_SQL),
+    "sample_by_fill_value": (ts.sample_by_fill_value, ts.SAMPLE_BY_FILL_VALUE_SQL),
+    "sample_by_fill_linear": (ts.sample_by_fill_linear, ts.SAMPLE_BY_FILL_LINEAR_SQL),
+    "latest_on_user": (ts.latest_on_user, ts.LATEST_ON_SQL),
+    "window_rank": (core.window_rank, core.WINDOW_RANK_SQL),
+    "window_running": (core.window_running, core.WINDOW_RUNNING_SQL),
+    "window_moving_avg": (core.window_moving_avg, core.WINDOW_MOVING_AVG_SQL),
+    "window_first_last_nth": (core.window_first_last_nth, core.WINDOW_FIRST_LAST_SQL),
+    "window_distribution": (core.window_distribution, core.WINDOW_DISTRIBUTION_SQL),
+    "q1_pricing_summary": (core.q1_pricing_summary, core.Q1_SQL),
+    "q3_top_revenue": (core.q3_top_revenue, core.Q3_SQL),
     # end-to-end lexical retrieval: chunk -> token-set score -> top-k
-    "chunk_retrieval_topk": (
-        pl.chunk_retrieval_topk,
-        pl.CHUNK_RETRIEVAL_SQL,
-    ),
-}
-
-# Round-12 additions PAST the r12 window (first driver verification in
-# r13 — head of that window, with any r13 changes, then whatever of the
-# _RECHECK_R4 tail the r12 driver run left unchecked; if the driver's
-# window stopped at 50, that tail is conditional_cast + text_quality).
-_NEW_R12_POST: dict[str, tuple[QueryFn, str | None]] = {
-    # hybrid retrieval: lexical Jaccard top-50 + quantized-dot top-50
-    # fused by reciprocal rank (RRF), both cuts TakeOrderedAndProject
-    "retrieval_hybrid_rrf": (
-        pl.retrieval_hybrid_rrf,
-        pl.RETRIEVAL_HYBRID_RRF_SQL,
-    ),
-    # cluster-balanced subsampling: trained k-means assignment + a
-    # deterministic hash-priority cap per cell (topic-balancing cut)
-    "cluster_balanced_sample": (
-        pl.cluster_balanced_sample,
-        pl.CLUSTER_BALANCED_SAMPLE_SQL,
-    ),
-    # keep-best cluster resolution: near-dup clusters keep the longest
-    # member (ties -> lowest id) instead of the lowest id
-    "dedup_keep_best": (pl.dedup_keep_best, pl.DEDUP_KEEP_BEST_SQL),
-    # DSIR-style data selection: per-doc hashed-unigram importance
-    # weight ln(p_target/p_raw), decimal-summed for hash determinism
-    "dsir_importance_weights": (
-        pl.dsir_importance_weights,
-        pl.DSIR_IMPORTANCE_SQL,
-    ),
-    # containment near-dup (truncated-copy detector): common / min size
-    "dedup_containment": (pl.dedup_containment, pl.DEDUP_CONTAINMENT_SQL),
-    # split-leakage audit: hash split over canonical docs + near-dup
-    # pairs classified by split combination (off-diagonal = leakage)
-    "corpus_split_leakage": (
-        pl.corpus_split_leakage,
-        pl.CORPUS_SPLIT_LEAKAGE_SQL,
-    ),
-    # two-stage ANN: PQ ADC top-50 shortlist -> exact L2 re-rank top-10
-    "embedding_ann_pq_rerank": (
-        pl.embedding_ann_pq_rerank,
-        pl.EMBEDDING_PQ_RERANK_SQL,
-    ),
-    # OHLC candles: SAMPLE BY 1h first/last/min/max — the reference's
-    # first/last fast-path shape (SampleByFirstLastRecordCursorFactory)
-    "ohlc_1h": (ts.ohlc_1h, ts.OHLC_1H_SQL),
-}
-
-# r12 window history (executed by CORRECTNESS_r12: 50/50 green; the
-# 2-entry tail conditional_cast + text_quality rolled to r13 as planned).
-_CHANGED_R12_NAMES = [
-    "sql_geo_date_encoding",
-]
-_R8_STALE_NAMES = (
-    list(_NEW_R8) + list(_NEW_R7) + list(_RECHECK_R7) + list(_RECHECK_R4)
-)
-_WINDOW_R12 = ["chunk_retrieval_topk"] + _CHANGED_R12_NAMES + _R8_STALE_NAMES
-
-# Round-13 additions — first driver verification, head of the r13 window.
-_NEW_R13: dict[str, tuple[QueryFn, str | None]] = {
-    # staged containment near-dup promoted from bench_scale100 into the
-    # library/registry (VERDICT r12 task 2): exact dedup -> guarded
-    # candidates -> containment score
-    "dedup_containment_staged": (
-        pl.dedup_containment_staged,
-        pl.DEDUP_CONTAINMENT_STAGED_SQL,
-    ),
-    # staged keep-best cluster resolution (VERDICT r12 task 2): exact
-    # dedup -> guarded Jaccard -> CC -> keep_best_canonical
-    "dedup_keep_best_staged": (
-        pl.dedup_keep_best_staged,
-        pl.DEDUP_KEEP_BEST_STAGED_SQL,
-    ),
-    # substring-level exact dedup (VERDICT r12 task 3): cross-document
-    # verbatim long-span detection — positional 12-token fingerprints,
-    # diagonal-island run collapse (distributed Lee et al. 2022)
-    "dedup_verbatim_spans": (
-        pl.dedup_verbatim_spans,
-        pl.DEDUP_VERBATIM_SPANS_SQL,
-    ),
-    # perceptual-hash image dedup (VERDICT r12 task 8): dHash over the
-    # decoded raster path, grouped exactly — the dedup x multimodal bridge
-    "multimodal_dhash_neardup": (
-        pl.multimodal_dhash_neardup,
-        pl.MULTIMODAL_DHASH_SQL,
-    ),
-    # perceptual NEAR-dup (r13): banded Hamming over dHash, LSH discipline
-    "multimodal_dhash_hamming": (
-        pl.multimodal_dhash_hamming,
-        pl.MULTIMODAL_DHASH_HAMMING_SQL,
-    ),
-    # trained linear corpus classifier (r13): batch-perceptron language
-    # filter over hashed unigram counts, exact-integer training — the
-    # oracle replays every epoch (margins/misclassified/gradients) as a
-    # CTE chain, kmeans/BPE discipline
-    "classifier_perceptron_train": (
-        pl.classifier_perceptron_train,
-        pl.CLASSIFIER_TRAIN_SQL,
-    ),
-    # serving-side eval of the trained classifier: one map pass with
-    # plan-literal weights -> confusion matrix + margin mass
-    "classifier_confusion": (
-        pl.classifier_confusion,
-        pl.CLASSIFIER_CONFUSION_SQL,
-    ),
-    # BM25 (Okapi, Lucene positive-idf variant) lexical ranking (r13):
-    # 1-row corpus-stats broadcast + map scoring + TakeOrderedAndProject
-    "retrieval_bm25_topk": (
-        pl.retrieval_bm25_topk,
-        pl.RETRIEVAL_BM25_SQL,
-    ),
-    # one-pass multinomial Naive Bayes (r13): closed-form counts +
-    # decimal log-likelihood-ratio weights — the converging classifier
-    "classifier_nb_train": (
-        pl.classifier_nb_train,
-        pl.CLASSIFIER_NB_TRAIN_SQL,
-    ),
-    # NB serving eval: exact-decimal log-odds scoring -> confusion matrix
-    "classifier_nb_confusion": (
-        pl.classifier_nb_confusion,
-        pl.CLASSIFIER_NB_CONFUSION_SQL,
-    ),
-    # pseudo-relevance-feedback expansion (r13): BM25 top-10 feedback ->
-    # top-5 expansion terms -> integer-weighted libm-free re-score
-    "retrieval_prf_expand": (
-        pl.retrieval_prf_expand,
-        pl.RETRIEVAL_PRF_SQL,
-    ),
-    # MMR diversity re-rank (r13): cosine top-20 shortlist -> greedy
-    # rel - max-sim picks; oracle replays every pick as a CTE chain
-    "retrieval_mmr_rerank": (
-        pl.retrieval_mmr_rerank,
-        pl.RETRIEVAL_MMR_SQL,
-    ),
-    # r13 ops as SQL table functions: bm25_topk('t','terms',k) /
-    # classify_nb('t','pos') in FROM position, exercised with DIFFERENT
-    # parameters than the Python-route entries
-    "sql_retrieval_table_fns": (
-        sq.sql_retrieval_table_fns,
-        sq.SQL_RETRIEVAL_TABLE_FNS_SQL,
-    ),
-    # bigram-LM perplexity filter (r13): the CCNet/KenLM quality scorer
-    # — one-pass smoothed LM, decimal-exact per-doc nll sums
-    "corpus_perplexity_topk": (
-        pl.corpus_perplexity_topk,
-        pl.CORPUS_PERPLEXITY_SQL,
-    ),
-    # per-source data card composing the r13 trained models (r13):
-    # dup counts + NB-positive share + LM perplexity mass per source
-    "corpus_quality_report": (
-        pl.corpus_quality_report,
-        pl.CORPUS_QUALITY_REPORT_SQL,
-    ),
-}
-
-# Entries on code materially changed in r13 — re-verify inside the window.
-_CHANGED_R13_NAMES = [
-    # canonicalize_exact refactor (identical semantics, shared stage-0)
-    "dedup_jaccard_prod_staged",
-]
-
-# Window order, round 13 (VERDICT r12 task 1, executing the plan recorded
-# in the r12 registry): the 15 r13 additions (5 dedup/multimodal + the
-# classifier family + the BM25/PRF/MMR retrieval trio + the table-fn
-# dialect twin + the perplexity filter + the data card) + the 8 r12
-# additions (first driver check) + the last 2 r8-stale entries (the
-# documented r12 tail) + the r13-changed entry, then the 44-entry block
-# whose latest driver check is round 9, ordered so the cheapest-to-roll
-# entries (TPC-H/plain-SQL shapes, all stable since r2) sit at the
-# tail.  15+8+2+1+44 = 70: a 50-slot driver window reaches through the
-# first 24 of the r9-stale block; the documented 20-entry tail
-# (cb_referer_domains/cb_minute_groups/cb_wide_sums +
-# sql_sample_by/sql_sample_by_first_obs + sql_latest_on/sql_asof_join/
-# sql_horizon_markout/sql_multi_join_sample_by/sql_subquery_dialect +
-# sql_pivot/sql_declare_neg_limit + q12/q13/q17/q21 + sql_read_parquet/
-# sql_bind_positional/sql_ddl_dml_roundtrip/sql_plain_view) rolls to the
-# r14 window.
-# dsir_importance_weights and dedup_keep_best carry r13 code changes
-# (DECIMAL(18,6) log quantum — ADVICE r12; keep_best_canonical refactor)
-# and are already in the head via _NEW_R12_POST.
-_R9_STALE_NAMES = [
-    "dedup_exact", "doc_fingerprints", "language_detect", "token_counts",
-    "minhash_signatures", "minhash_lsh", "simhash_docs", "embedding_topk",
-    "embedding_ann_lsh", "embedding_ann_multiprobe", "embedding_ann_ivf",
-    "embedding_near_dup", "embedding_knn_join", "l2price_orderbook",
-    "spread_mid_events", "markout_horizon_agg", "sample_by_first_obs",
-    "sample_by_tz_day", "decimal256_sum", "regr_bit_aggs",
-    "count_star_fast", "bind_variables", "rnd_generators", "array_ops3",
-    # --- expected r14 roll-over tail below this line ---
-    "cb_referer_domains", "cb_minute_groups",
-    "cb_wide_sums",
-    "sql_sample_by", "sql_sample_by_first_obs",
-    "sql_latest_on",
-    "sql_asof_join", "sql_horizon_markout", "sql_multi_join_sample_by",
-    "sql_subquery_dialect",
-    "sql_pivot", "sql_declare_neg_limit",
-    "q12_priority_lines", "q13_customer_distribution",
-    "q17_small_quantity_revenue", "q21_waiting_suppliers",
-    "sql_read_parquet", "sql_bind_positional", "sql_ddl_dml_roundtrip",
-    "sql_plain_view",
-]
-_WINDOW_R13 = (
-    list(_NEW_R13)
-    + list(_NEW_R12_POST)
-    + ["conditional_cast", "text_quality"]
-    + _CHANGED_R13_NAMES
-    + _R9_STALE_NAMES
-)
-
-_LOOKUP: dict[str, tuple[QueryFn, str | None]] = {
-    **_ALL_BLOCKS,
-    **_NEW_R11_POST,
-    **_NEW_R12_POST,
-    **_NEW_R13,
-}
-REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
-    **{n: _LOOKUP[n] for n in _WINDOW_R13 if n in _LOOKUP},
-    **_ALL_BLOCKS,
-    **_NEW_R11_POST,
-    **_NEW_R12_POST,
-    **_NEW_R13,
+    "chunk_retrieval_topk": (pl.chunk_retrieval_topk, pl.CHUNK_RETRIEVAL_SQL),
 }
 
 

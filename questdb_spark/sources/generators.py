@@ -54,19 +54,6 @@ def rnd_symbol_zipf(x: Column, symbols: list[str], seed: int = 0) -> Column:
     return expr
 
 
-def generate_series_ts(
-    spark: SparkSession, start: str, end: str, step: str
-) -> DataFrame:
-    """Timestamp series [start, end] inclusive with SQL-interval step."""
-    return spark.range(1).select(
-        F.explode(
-            F.expr(
-                f"sequence(TIMESTAMP '{start}', TIMESTAMP '{end}', INTERVAL {step})"
-            )
-        ).alias("ts")
-    )
-
-
 # ---------------------------------------------------------------------------
 # rnd_* breadth (functions/rnd/, 47 factories). All generators are
 # DETERMINISTIC functions of the row index: the same (x, seed) always
@@ -129,12 +116,6 @@ def rnd_str(x: Column, lo: int, hi: int, seed: int = 0, null_rate: int = 0) -> C
     if null_rate > 0:
         return F.when(_mix(x, seed, 8) % null_rate == 0, F.lit(None)).otherwise(s)
     return s
-
-
-def rnd_varchar(x: Column, lo: int, hi: int, seed: int = 0, null_rate: int = 0) -> Column:
-    """Alias of rnd_str at the storage level (VARCHAR vs STRING is a native
-    layout distinction parquet does not have)."""
-    return rnd_str(x, lo, hi, seed=seed + 17, null_rate=null_rate)
 
 
 def rnd_uuid4(x: Column, seed: int = 0) -> Column:

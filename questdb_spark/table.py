@@ -65,6 +65,21 @@ def _any_parquet(path: str) -> bool:
     return False
 
 
+def _write_json(path: str, obj) -> None:
+    """Crash-safe JSON state write: dump to a tmp file in the same
+    directory, fsync it, then ``os.replace`` it over ``path`` — a reader
+    sees the old state or the new one, never a torn file.  The tmp name
+    starts with the target's ``_``/``.`` prefix, so Spark's file listing
+    skips a leftover from a crash."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
 class TimeTable:
     def __init__(
         self,
@@ -194,9 +209,7 @@ class TimeTable:
         meta = self._meta()
         if "phys_schema" in meta:
             meta.pop("phys_schema")
-            os.makedirs(os.path.dirname(self._meta_path), exist_ok=True)
-            with open(self._meta_path, "w") as f:
-                json.dump(meta, f)
+            _write_json(self._meta_path, meta)
 
     def _note_write(
         self, written: StructType, replace: bool, had_files: bool = True
@@ -409,13 +422,11 @@ class TimeTable:
         try:
             with open(self._wal_state_path) as f:
                 return json.load(f)
-        except (OSError, ValueError):
+        except FileNotFoundError:
             return {"suspended": False, "pending": []}
 
     def _save_wal_state(self, st: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._wal_state_path, "w") as f:
-            json.dump(st, f)
+        _write_json(self._wal_state_path, st)
 
     def _buffer_wal_txn(self, df: DataFrame, seq: int) -> None:
         d = os.path.join(self.path, ".qdb_wal_pending", f"txn-{seq:09d}")
@@ -502,15 +513,13 @@ class TimeTable:
         try:
             with open(self._meta_path) as f:
                 return json.load(f)
-        except (OSError, ValueError):
+        except FileNotFoundError:
             return {}
 
     def _write_meta(self, **updates) -> None:
         meta = self._meta()
         meta.update(updates)
-        os.makedirs(os.path.dirname(self._meta_path), exist_ok=True)
-        with open(self._meta_path, "w") as f:
-            json.dump(meta, f)
+        _write_json(self._meta_path, meta)
 
     def _ops(self) -> list[dict]:
         return self._meta().get("ops", [])
@@ -884,8 +893,10 @@ class TimeTable:
             # attach whose metadata no longer matches the table
             # (AlterTableAttachPartitionTest "metadata does not match") —
             # record enough state to enforce the same check
-            with open(os.path.join(dst, ".qdb_detach_meta.json"), "w") as f:
-                json.dump({"ops_len": len(self._ops())}, f)
+            _write_json(
+                os.path.join(dst, ".qdb_detach_meta.json"),
+                {"ops_len": len(self._ops())},
+            )
             moved.append(str(p))
         if not moved:
             raise ValueError(f"no partitions in range: {interval!r}")

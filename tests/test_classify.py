@@ -345,7 +345,7 @@ def test_bigram_lm_random_corpus_vs_naive(spark):
     import random
     from collections import Counter
 
-    from questdb_spark.pipeline.text import bigram_lm_nll
+    from questdb_spark.pipeline.text import bigram_lm_nll_sql
 
     rng = random.Random(1309)
     vocab = ["aa", "bb", "cc", "dd"]
@@ -354,7 +354,7 @@ def test_bigram_lm_random_corpus_vs_naive(spark):
         n = rng.choice([1, 2, 3, 8])
         docs.append((i, " ".join(rng.choice(vocab) for _ in range(n))))
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = bigram_lm_nll(df).toPandas().set_index("doc_id")
+    got = bigram_lm_nll_sql(df).toPandas().set_index("doc_id")
 
     toks = {i: t.split() for i, t in docs}
     uni = Counter(x for t in toks.values() for x in t)
@@ -502,14 +502,16 @@ def test_ann_score_table_matches_route_kernels(spark):
 
 
 def test_nb_train_score_matches_separate_train_and_score(spark):
-    """r14 fusion: nb_train_score (one shared tokenize pass) must be
+    """r14 fusion: nb_train_score_sql (one shared tokenize pass) must be
     row-identical to the nb_train + nb_score composition it replaces —
     model rows AND per-doc scores, exact decimal equality."""
     docs = load_table(spark, SF_DIR, "documents")
     lab_expr = F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(-1))
     labels = docs.select("doc_id", lab_expr.cast("long").alias("y"))
     want_model = classify.nb_train(docs, labels)
-    model_f, scored_f = classify.nb_train_score(docs, lab_expr)
+    model_f, scored_f = classify.nb_train_score_sql(
+        docs, "CASE WHEN lang = 'en' THEN 1 ELSE -1 END"
+    )
     m_want = sorted(map(tuple, want_model.collect()))
     m_got = sorted(map(tuple, model_f.collect()))
     assert m_got == m_want
@@ -521,47 +523,6 @@ def test_nb_train_score_matches_separate_train_and_score(spark):
     for d, (y, sc) in s_got.items():
         assert sc == s_want[d], d
         assert y == y_ref[d], d
-
-
-def test_nb_train_score_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of the fused train+score plan must be
-    row-identical to the Column-built nb_train_score — model rows AND
-    per-doc (y, score), exact decimal equality."""
-    docs = load_table(spark, SF_DIR, "documents")
-    lab_expr = F.when(F.col("lang") == "en", F.lit(1)).otherwise(F.lit(-1))
-    model_c, scored_c = classify.nb_train_score(docs, lab_expr)
-    model_s, scored_s = classify.nb_train_score_sql(
-        docs, "CASE WHEN lang = 'en' THEN 1 ELSE -1 END"
-    )
-    assert sorted(map(tuple, model_s.collect())) == sorted(
-        map(tuple, model_c.collect())
-    )
-    assert scored_s.columns == scored_c.columns
-    assert dict(scored_s.dtypes) == dict(scored_c.dtypes)
-    got = sorted(map(tuple, scored_s.collect()))
-    want = sorted(map(tuple, scored_c.collect()))
-    assert got == want
-
-
-def test_bigram_lm_nll_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of the bigram-LM scorer must be
-    row-identical to the Column-built bigram_lm_nll — exact decimal
-    sums and bit-equal avg doubles."""
-    from questdb_spark.pipeline import text as T
-
-    docs = load_table(spark, SF_DIR, "documents")
-    want = {
-        r["doc_id"]: (r["n_bigrams"], r["sum_nll"], repr(r["avg_nll"]))
-        for r in T.bigram_lm_nll(docs).collect()
-    }
-    got_df = T.bigram_lm_nll_sql(docs)
-    assert got_df.columns == T.bigram_lm_nll(docs).columns
-    assert dict(got_df.dtypes) == dict(T.bigram_lm_nll(docs).dtypes)
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["sum_nll"], repr(r["avg_nll"]))
-        for r in got_df.collect()
-    }
-    assert got == want
 
 
 def test_nb_train_sql_matches_column_route(spark):

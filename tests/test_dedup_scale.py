@@ -254,47 +254,6 @@ def test_ngram_contamination_hand_built(spark):
     }
 
 
-def test_ngram_contamination_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of ngram_contamination must be
-    row-identical to the Column-built reference on real documents (both
-    registry callers use n=5 over the doc_id%10 split)."""
-    from questdb_spark.pipeline.dedup import (
-        _ngram_contamination_columns,
-        ngram_contamination,
-    )
-    from questdb_spark.sources.parquet import load_table
-
-    from .conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 10 == 0)
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    got_df = ngram_contamination(corpus, bench, "doc_id", n=5)
-    want_df = _ngram_contamination_columns(corpus, bench, "doc_id", n=5)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    got = sorted(tuple(map(repr, r)) for r in got_df.collect())
-    want = sorted(tuple(map(repr, r)) for r in want_df.collect())
-    assert got == want
-
-
-def test_text_stats_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of text_stats must be row-identical to
-    the Column-built reference on real documents (all ratio doubles
-    bit-equal)."""
-    from questdb_spark.pipeline.text import _text_stats_columns, text_stats
-    from questdb_spark.sources.parquet import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "source", "text")
-    got_df = text_stats(docs)
-    want_df = _text_stats_columns(docs)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    got = sorted(tuple(map(repr, r)) for r in got_df.collect())
-    want = sorted(tuple(map(repr, r)) for r in want_df.collect())
-    assert got == want
-
-
 def test_int8_kernel_equals_hof_reference(spark):
     """int8 codes: Arrow kernel self-dot must equal the HOF reference
     (int8_vec + dot_q) on every real vector, and codes stay in [-127, 127]."""
@@ -780,39 +739,3 @@ def test_fused_sql_route_matches_column_reference(spark):
         )
         want_f = as_map(reference(metric, frac_cap), metric)
         assert got_f == want_f
-
-
-def test_mixture_sweep_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of mixture_temperature_sweep must be
-    row-identical to the Column-built reference (IEEE-exact sqrt powers,
-    decimal-quantized weight/boost doubles)."""
-    from questdb_spark.queries_pipeline import (
-        _mixture_temperature_sweep_columns,
-        mixture_temperature_sweep,
-    )
-
-    got_df = mixture_temperature_sweep(spark, SF_DIR)
-    want_df = _mixture_temperature_sweep_columns(spark, SF_DIR)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    got = sorted(tuple(map(repr, r)) for r in got_df.collect())
-    want = sorted(tuple(map(repr, r)) for r in want_df.collect())
-    assert got == want
-
-
-def test_hybrid_rrf_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of retrieval_hybrid_rrf must be
-    row-identical to the Column-built reference (both rank windows, the
-    full-outer fusion, and the 1/(60+r) doubles)."""
-    from questdb_spark.queries_pipeline import (
-        _retrieval_hybrid_rrf_columns,
-        retrieval_hybrid_rrf,
-    )
-
-    got_df = retrieval_hybrid_rrf(spark, SF_DIR)
-    want_df = _retrieval_hybrid_rrf_columns(spark, SF_DIR)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    got = sorted(tuple(map(repr, r)) for r in got_df.collect())
-    want = sorted(tuple(map(repr, r)) for r in want_df.collect())
-    assert got == want

@@ -515,108 +515,6 @@ def test_decimal256_divide_rescale(spark):
             assert row[f"q{k}"] == str(want), (x, k)
 
 
-
-def test_decimal256_div_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of decimal256_div must be row-identical
-    to the Column-built reference — same schema, exact (n, sum_r, sum_hash)
-    per divisor (the md5 rowhash makes any single wrong digit on any row
-    break the aggregate)."""
-    from questdb_spark import queries_functions as qf
-
-    from .conftest import SF_DIR
-
-    got_df = qf.decimal256_div(spark, SF_DIR)
-    want_df = qf._decimal256_div_columns(spark, SF_DIR)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    got = [tuple(r) for r in got_df.collect()]
-    want = [tuple(r) for r in want_df.collect()]
-    assert got == want
-
-
-def test_decimal256_sum_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of decimal256_sum must be row-identical
-    to the Column-built reference — limbs, counts and the canonical wide
-    digit string."""
-    from questdb_spark import queries_functions as qf
-
-    from .conftest import SF_DIR
-
-    got_df = qf.decimal256_sum(spark, SF_DIR)
-    want_df = qf._decimal256_sum_columns(spark, SF_DIR)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    assert [tuple(r) for r in got_df.collect()] == [
-        tuple(r) for r in want_df.collect()
-    ]
-
-
-def test_regr_bit_aggs_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of regr_bit_aggs must be row-identical
-    to the Column-built reference — bit-equal doubles included."""
-    from questdb_spark import queries_functions as qf
-
-    from .conftest import SF_DIR
-
-    got_df = qf.regr_bit_aggs(spark, SF_DIR)
-    want_df = qf._regr_bit_aggs_columns(spark, SF_DIR)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    got = sorted(tuple(map(repr, r)) for r in got_df.collect())
-    want = sorted(tuple(map(repr, r)) for r in want_df.collect())
-    assert got == want
-
-
-def test_window_groups_exclude_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of window_groups_exclude must be
-    row-identical to the Column-built reference (empty-frame NULLs and
-    bit-equal doubles included)."""
-    from questdb_spark import queries_functions as qf
-
-    from .conftest import SF_DIR
-
-    got_df = qf.window_groups_exclude(spark, SF_DIR)
-    want_df = qf._window_groups_exclude_columns(spark, SF_DIR)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    got = sorted(tuple(map(repr, r)) for r in got_df.collect())
-    want = sorted(tuple(map(repr, r)) for r in want_df.collect())
-    assert got == want
-
-
-def test_cast_matrix_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of cast_matrix must be row-identical to
-    the Column-built reference (limb carries, signed low-long
-    reinterpretation, geohash validation NULLs)."""
-    from questdb_spark import queries_functions as qf
-
-    from .conftest import SF_DIR
-
-    got_df = qf.cast_matrix(spark, SF_DIR)
-    want_df = qf._cast_matrix_columns(spark, SF_DIR)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    got = sorted(tuple(map(repr, r)) for r in got_df.collect())
-    want = sorted(tuple(map(repr, r)) for r in want_df.collect())
-    assert got == want
-
-
-def test_geohash_events_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of geohash_events must be row-identical
-    to the Column-built reference (bit interleave, prefix, packed long)."""
-    from questdb_spark import queries_functions as qf
-
-    from .conftest import SF_DIR
-
-    got_df = qf.geohash_events(spark, SF_DIR)
-    want_df = qf._geohash_events_columns(spark, SF_DIR)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    got = sorted(tuple(map(repr, r)) for r in got_df.collect())
-    want = sorted(tuple(map(repr, r)) for r in want_df.collect())
-    assert got == want
-
-
 def test_rank_n_array_ops(spark):
     """Rank-N array forms (r9): recursive-HOF elementwise ops and the
     numpy transpose at rank 3 and 4 (DerivedArrayView.transpose reverses
@@ -728,19 +626,3 @@ def test_chunk_documents_windows(spark):
     assert texts[(4, 0)][4:] == texts[(4, 1)][:4]
     with _pt.raises(ValueError):
         chunk_documents(df, size=4, stride=8)
-
-
-def test_array_ops2_sql_matches_column_route(spark):
-    """r14: the SQL-text rendering of array_ops2 must be row-identical to
-    the Column-built reference (finite-split sorts, shifts, moments)."""
-    from questdb_spark import queries_functions as qf
-
-    from .conftest import SF_DIR
-
-    got_df = qf.array_ops2(spark, SF_DIR)
-    want_df = qf._array_ops2_columns(spark, SF_DIR)
-    assert got_df.columns == want_df.columns
-    assert dict(got_df.dtypes) == dict(want_df.dtypes)
-    got = sorted(tuple(map(repr, r)) for r in got_df.collect())
-    want = sorted(tuple(map(repr, r)) for r in want_df.collect())
-    assert got == want

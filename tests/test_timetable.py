@@ -346,3 +346,20 @@ def test_schema_cache_miss_falls_back_to_mergeschema(spark, tmppath):
     rows = t.read().collect()  # was: RecursionError
     assert len(rows) == 5
     assert {r["id"] for r in rows} == {1, 2, 3, 4, 5}
+
+
+def test_state_json_torn_write_raises(spark, tmppath):
+    """Meta journal and WAL state are replaced atomically (tmp + fsync +
+    rename, no tmp left behind).  A torn file must raise on the next read
+    instead of reading back as an empty journal / un-suspended WAL."""
+    t = TimeTable(spark, tmppath, "ts")
+    t._write_meta(ops=[{"op": "add_column", "name": "x"}])
+    t._save_wal_state({"suspended": True, "pending": []})
+    assert t._ops() == [{"op": "add_column", "name": "x"}]
+    assert t._wal_state()["suspended"] is True
+    assert not [n for n in os.listdir(tmppath) if n.endswith(".tmp")]
+    for name, read in (("_qdb_meta.json", t._meta), (".qdb_wal.json", t._wal_state)):
+        with open(os.path.join(tmppath, name), "r+") as f:
+            f.truncate(5)
+        with pytest.raises(ValueError):
+            read()
