@@ -28,6 +28,7 @@ Spark-first lowering (batch twin of ``streaming/matview.py``):
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import shutil
@@ -38,6 +39,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.sample_by import _UNIT_MICROS, parse_interval
+from ..table import _minus_hours_or_months, _write_json
 
 if TYPE_CHECKING:  # pragma: no cover
     from .engine import QdbEngine
@@ -576,13 +578,7 @@ def _enforce_view_ttl(eng: QdbEngine, d: MatViewDef) -> None:
     if len(parts) < 2:
         return
     newest = datetime.strptime(parts[-1].split("=", 1)[1], "%Y-%m-%d")
-    if ttl > 0:
-        boundary = newest - timedelta(hours=ttl)
-    else:
-        months = -ttl
-        mo = (newest.month - 1 - months) % 12 + 1
-        yr = newest.year + (newest.month - 1 - months) // 12
-        boundary = newest.replace(year=yr, month=mo)
+    boundary = _minus_hours_or_months(newest, ttl)
     evicted = False
     for p in parts[:-1]:
         start = datetime.strptime(p.split("=", 1)[1], "%Y-%m-%d")
@@ -882,8 +878,8 @@ def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> int:
         )
         existing = spark.read.parquet(d.path)
         # rows of the touched date partitions that precede the recomputed
-        # window must ride along in the overwrite (same merge the streaming
-        # sink does); untouched date partitions are never rewritten
+        # window must ride along in the overwrite; untouched date
+        # partitions are never rewritten
         carry = existing.filter(F.col(d.ts_out) < _ts_lit(cutoff)).join(
             tail.select(_PART).distinct(), _PART, "left_semi"
         )
@@ -923,20 +919,6 @@ def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> int:
     return changed
 
 
-def _minus_hours_or_months(dt: datetime, hours_or_months: int) -> datetime:
-    """Subtract a parse_ttl-encoded span (hours>0 / months<0) — the same
-    arithmetic TableWriter.enforceTtl uses for its boundary."""
-    from calendar import monthrange
-    from datetime import timedelta
-
-    if hours_or_months > 0:
-        return dt - timedelta(hours=hours_or_months)
-    months = -hours_or_months
-    mo = (dt.month - 1 - months) % 12 + 1
-    yr = dt.year + (dt.month - 1 - months) // 12
-    return dt.replace(year=yr, month=mo, day=min(dt.day, monthrange(yr, mo)[1]))
-
-
 def _incr_cutoff(d: MatViewDef) -> datetime | None:
     """Timestamp below which the view's stored state is frozen: the bucket
     floor of the high-water mark for SAMPLE BY shapes, the mark itself
@@ -970,12 +952,11 @@ def _swap_write(d: MatViewDef, out: DataFrame) -> None:
     saved = None
     if os.path.exists(state):
         with open(state) as fh:
-            saved = fh.read()
+            saved = json.load(fh)
     shutil.rmtree(d.path, ignore_errors=True)
     os.rename(tmp, d.path)
     if saved is not None:
-        with open(os.path.join(d.path, _STATE_FILE), "w") as fh:
-            fh.write(saved)
+        _write_json(state, saved)
 
 
 _STATE_FILE = "_lv_state.json"  # underscore: invisible to parquet discovery
@@ -984,34 +965,28 @@ _STATE_FILE = "_lv_state.json"  # underscore: invisible to parquet discovery
 def _save_state(d: MatViewDef) -> None:
     """Checkpoint (LiveViewCheckpointDataStore equivalent): enough state to
     resume incremental refresh in a NEW session over the same warehouse."""
-    import json
-
-    os.makedirs(d.path, exist_ok=True)
-    with open(os.path.join(d.path, _STATE_FILE), "w") as fh:
-        json.dump(
-            {
-                "inner_sql": d.inner_sql,
-                "shape": d.shape,
-                "hwm": d.hwm.isoformat() if d.hwm else None,
-                "frozen_count": d.frozen_count,
-                "base_count": d.base_count,
-                "next_due": d.next_due.isoformat() if d.next_due else None,
-                "wal_suspended": d.wal_suspended,
-                "refresh_limit": d.refresh_limit,
-                "ttl": d.ttl_hours_or_months,
-                "symbol_capacities": d.symbol_capacities,
-                "indexed_columns": d.indexed_columns,
-            },
-            fh,
-        )
+    _write_json(
+        os.path.join(d.path, _STATE_FILE),
+        {
+            "inner_sql": d.inner_sql,
+            "shape": d.shape,
+            "hwm": d.hwm.isoformat() if d.hwm else None,
+            "frozen_count": d.frozen_count,
+            "base_count": d.base_count,
+            "next_due": d.next_due.isoformat() if d.next_due else None,
+            "wal_suspended": d.wal_suspended,
+            "refresh_limit": d.refresh_limit,
+            "ttl": d.ttl_hours_or_months,
+            "symbol_capacities": d.symbol_capacities,
+            "indexed_columns": d.indexed_columns,
+        },
+    )
 
 
 def _restore_state(eng: QdbEngine, d: MatViewDef) -> bool:
     """Adopt a previous session's checkpoint when the stored query text
     matches — the restart path: no recompute, incremental refresh resumes
     from the persisted high-water mark."""
-    import json
-
     f = os.path.join(d.path, _STATE_FILE)
     try:
         with open(f) as fh:

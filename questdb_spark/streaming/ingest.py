@@ -1,50 +1,42 @@
 """Streaming ingestion: the WAL-apply path re-expressed as Structured
 Streaming.
 
-Reference mapping (SURVEY §2.9):
-- WAL + O3 merge (``cairo/wal/ApplyWal2TableJob.java:87``,
-  ``cairo/O3PartitionJob.java:72``, ``c/share/ooo.cpp``) → micro-batches +
-  time-partitioned parquet, out-of-order rows land in their partition and a
-  partition-local sort happens at compaction/read;
-- commit lag / o3MaxLag → ``withWatermark`` delay;
-- DEDUP UPSERT KEYS (``griffin/SqlParser.java:3081``, ``c/share/dedup.cpp``)
-  → last-write-wins resolution on (ts, keys): within a batch via row_number,
-  across batches via the read-side `latest` view + partition-rewrite
-  compaction (this container has no Delta/ACID table format, so upsert =
-  append + dedup-on-read + compaction, which is also the honest 100 TB
-  pattern: blind upserts into a sorted store are exactly what QuestDB's
-  WAL apply job does asynchronously).
+Reference mapping (SURVEY §2.9): WAL segments + the apply job
+(``cairo/wal/ApplyWal2TableJob.java:87``, ``cairo/O3PartitionJob.java:72``,
+``c/share/ooo.cpp``, ``DEDUP UPSERT KEYS`` ``c/share/dedup.cpp``) →
+one micro-batch = one WAL commit, applied by ``TimeTable.append(batch,
+seq=batch_id)``. The table is the only writer of its storage, so a
+streamed table has exactly the layout, DEDUP UPSERT semantics (in-batch
+last-write-wins in arrival order, null-safe key merge into the touched
+partitions, every row kept when the table has no keys), partitioning and
+compaction of a table written any other way; read it with
+``TimeTable.read()``. An out-of-order row merges into its own partition
+however late it arrives, so there is no lag bound to configure.
 """
 
 from __future__ import annotations
 
+import json
 import os
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.latest import latest_on
+from ..table import TimeTable, _write_json
 
 
 def write_stream_ingest(
     stream: DataFrame,
-    path: str,
-    ts_col: str,
-    dedup_keys: Sequence[str],
+    table: TimeTable,
     checkpoint: str,
-    watermark: str = "10 seconds",
-    partition_unit: str = "day",
-    seq_col: str = "__seq",
     trigger_available_now: bool = False,
 ):
-    """Start the ingest stream: watermark (o3MaxLag), in-batch dedup
-    (last-write-wins by ``seq_col`` — the WAL sequencer order), append to
-    time-partitioned parquet."""
-    deduped_writer = _batch_upsert(path, ts_col, list(dedup_keys), partition_unit, seq_col)
+    """Start the ingest stream: each micro-batch commits into ``table``
+    as WAL txn ``batch_id``."""
     w = (
-        stream.withWatermark(ts_col, watermark)
-        .writeStream.foreachBatch(deduped_writer)
+        stream.writeStream.foreachBatch(
+            lambda batch, batch_id: table.append(batch, seq=batch_id)
+        )
         .option("checkpointLocation", checkpoint)
     )
     if trigger_available_now:
@@ -52,91 +44,21 @@ def write_stream_ingest(
     return w.start()
 
 
-def _batch_upsert(path: str, ts_col: str, keys: list[str], unit: str, seq_col: str):
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        if not batch.columns:
-            return
-        # monotonic WAL sequence: (batch, row-within-batch). The sub-order is
-        # monotonically_increasing_id — per input partition it follows source
-        # row order (the WAL-segment order a streaming source delivers), so
-        # duplicates WITHIN one micro-batch resolve last-write-wins instead
-        # of tying arbitrarily on a constant batch id.
-        b = batch.withColumn(
-            seq_col,
-            F.struct(
-                F.lit(batch_id).cast("long").alias("batch"),
-                F.monotonically_increasing_id().alias("sub"),
-            ),
-        )
-        # in-batch last-write-wins on (keys, ts): WAL-segment dedup
-        b = latest_on(b, seq_col, [*keys, ts_col])
-        (
-            b.withColumn("part_date", F.date_trunc(unit, F.col(ts_col)).cast("date"))
-            .repartition("part_date")
-            .sortWithinPartitions(ts_col)
-            .write.mode("append")
-            .partitionBy("part_date")
-            .parquet(path)
-        )
-
-    return apply
-
-
-def read_deduped(
-    spark: SparkSession, path: str, ts_col: str, dedup_keys: Sequence[str],
-    seq_col: str = "__seq",
-) -> DataFrame:
-    """Read view with DEDUP UPSERT semantics: latest write per
-    (dedup_keys, ts) wins — the cross-batch half of upsert."""
-    df = spark.read.parquet(path)
-    return latest_on(df, seq_col, [*dedup_keys, ts_col]).drop(seq_col)
-
-
-def compact(
-    spark: SparkSession, path: str, ts_col: str, dedup_keys: Sequence[str],
-    seq_col: str = "__seq",
-) -> None:
-    """Partition rewrite: materialize the dedup view (the ApplyWal2TableJob
-    merge, done lazily). Rewrites into a sibling dir then swaps."""
-    tmp = path.rstrip("/") + ".compact"
-    out = read_deduped(spark, path, ts_col, dedup_keys, seq_col).withColumn(
-        seq_col,
-        F.struct(
-            F.lit(-1).cast("long").alias("batch"), F.lit(-1).cast("long").alias("sub")
-        ),
-    )
-    (
-        out.withColumn("part_date", F.date_trunc("day", F.col(ts_col)).cast("date"))
-        .repartition("part_date")
-        .sortWithinPartitions(ts_col)
-        .write.mode("overwrite")
-        .partitionBy("part_date")
-        .parquet(tmp)
-    )
-    import shutil
-
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-
-
 def start_ilp_ingest(
     spark: SparkSession,
     *,
     measurement: str,
-    out_path: str,
+    table: TimeTable,
     checkpoint: str,
     host: str | None = None,
     port: int | None = None,
     lines_path: str | None = None,
-    dedup_keys: Sequence[str] = (),
-    watermark: str = "10 seconds",
-    partition_unit: str = "day",
     trigger_available_now: bool = False,
 ):
     """End-to-end ILP ingest (SURVEY §2.1; reference
     ``cutlass/line/tcp/LineTcpReceiver.java`` + ``ApplyWal2TableJob``):
-    a live line source → `parse_ilp` → watermark (o3MaxLag) → per-batch
-    WAL upsert into time-partitioned parquet.
+    a live line source → `parse_ilp` → per-batch commit into ``table``
+    (whose designated timestamp must be ``ts``).
 
     Source: exactly one of ``(host, port)`` — Structured Streaming's
     ``socket`` source, the TCP listener mapping — or ``lines_path`` — a
@@ -147,8 +69,6 @@ def start_ilp_ingest(
     (the ILP auto-create behavior) and persisted beside the checkpoint,
     so a restarted stream keeps the established table schema instead of
     re-inferring a narrower one from whatever the next batch holds."""
-    import json
-
     from ..sources.ilp import infer_layout, parse_ilp, project_layout
 
     if (host is None) == (lines_path is None):
@@ -162,26 +82,20 @@ def start_ilp_ingest(
         )
     else:
         raw = spark.readStream.format("text").load(lines_path)
-    parsed = (
-        parse_ilp(raw, "value")
-        .filter(F.col("measurement") == measurement)
-        .withWatermark("ts", watermark)
-    )
+    parsed = parse_ilp(raw, "value").filter(F.col("measurement") == measurement)
     os.makedirs(checkpoint, exist_ok=True)
     schema_file = os.path.join(checkpoint, "_ilp_schema.json")
-    upsert = _batch_upsert(out_path, "ts", list(dedup_keys), partition_unit, "__seq")
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         try:
             with open(schema_file) as fh:
                 layout = json.load(fh)
-        except (OSError, ValueError):
+        except FileNotFoundError:
             if batch.isEmpty():
                 return
             layout = infer_layout(batch)
-            with open(schema_file, "w") as fh:
-                json.dump(layout, fh)
-        upsert(project_layout(batch, layout), batch_id)
+            _write_json(schema_file, layout)
+        table.append(project_layout(batch, layout), seq=batch_id)
 
     w = parsed.writeStream.foreachBatch(apply).option(
         "checkpointLocation", checkpoint

@@ -6,35 +6,40 @@ SampleByIntervalIterator.java``): on new WAL transactions, only the time
 buckets touched by new rows are recomputed.
 
 Spark mapping: Structured Streaming windowed aggregation with watermark
-(late data within the watermark updates its bucket), sunk via foreachBatch
-into a parquet result keyed by bucket — each micro-batch overwrites ONLY
-the buckets it touched (dynamic partition overwrite = QuestDB's
-interval-iterator refresh).
+(late data within the watermark updates its bucket) in update mode, sunk
+via foreachBatch as an upsert into a ``TimeTable`` keyed on (keys,
+bucket): each micro-batch rewrites ONLY the partitions holding the
+buckets it touched (QuestDB's interval-iterator refresh).
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..table import TimeTable, _any_parquet
 
 
 def sample_by_matview(
     stream: DataFrame,
-    path: str,
+    view: TimeTable,
     checkpoint: str,
     ts_col: str,
     interval: str,
     aggs: Mapping[str, Column],
-    keys: Sequence[str] = (),
     watermark: str = "10 seconds",
     tz: str | None = None,
     offset: str | None = None,
     trigger_available_now: bool = False,
 ):
-    """Maintain `SELECT bucket, keys, aggs ... SAMPLE BY interval` as a
-    continuously-refreshed parquet table.
+    """Maintain `SELECT bucket, keys, aggs ... SAMPLE BY interval` as the
+    continuously-refreshed table ``view``: its designated timestamp names
+    the bucket column and its dedup keys are the SAMPLE BY keys. The
+    (keys, bucket) grain is always the upsert key, so a keyless view
+    dedups on the bucket alone.
 
     ``tz`` / ``offset``: QuestDB ``ALIGN TO CALENDAR TIME ZONE '<tz>'
     [WITH OFFSET 'hh:mm']`` (``TimezoneFloorTimestampSampler``): buckets
@@ -43,7 +48,8 @@ def sample_by_matview(
     unlike a constant shift), windowing on the shifted column, and shifting
     the bucket start back to UTC. ``offset`` is a Spark duration string
     (e.g. ``'30 minutes'``) applied as the window's startTime."""
-    keys = list(keys)
+    keys = view.dedup_keys
+    view.dedup_enabled = True
     evt = ts_col
     if tz is not None:
         stream = stream.withColumn(
@@ -63,43 +69,18 @@ def sample_by_matview(
         stream.withWatermark(evt, watermark)
         .groupBy(win.alias("__w"), *keys)
         .agg(*[expr.alias(name) for name, expr in aggs.items()])
-        .select(start.alias("ts_bucket"), *keys, *aggs.keys())
+        .select(start.alias(view.ts_col), *keys, *aggs.keys())
     )
-
-    def refresh(batch: DataFrame, batch_id: int) -> None:
-        if not batch.columns:
-            return
-        spark = batch.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        new = batch.withColumn("__bucket_part", F.col("ts_bucket").cast("date"))
-        # update mode emits only changed (bucket, keys) rows; an overwrite of
-        # the touched date partitions must carry the untouched rows too —
-        # merge them in (anti-join on the grain) before writing
-        try:
-            existing = spark.read.parquet(path)
-        except Exception:
-            existing = None
-        if existing is not None:
-            touched = new.select("__bucket_part").distinct()
-            keep = (
-                existing.join(F.broadcast(touched), "__bucket_part", "left_semi")
-                .join(new.select("ts_bucket", *keys), ["ts_bucket", *keys], "left_anti")
-            )
-            new = new.unionByName(keep)
-        new.write.mode("overwrite").partitionBy("__bucket_part").parquet(path)
-
+    # update mode emits each changed (bucket, keys) row with its full
+    # aggregate state, so an upsert on that grain is the whole refresh
     w = (
         bucketed.writeStream.outputMode("update")
-        .foreachBatch(refresh)
+        .foreachBatch(lambda batch, batch_id: view.append(batch, seq=batch_id))
         .option("checkpointLocation", checkpoint)
     )
     if trigger_available_now:
         w = w.trigger(availableNow=True)
     return w.start()
-
-
-def read_matview(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path).drop("__bucket_part")
 
 
 def latest_on_liveview(
@@ -132,14 +113,16 @@ def latest_on_liveview(
         if not batch.columns:
             return
         spark = batch.sparkSession
-        try:
-            existing = spark.read.parquet(path)
-        except Exception:
-            existing = None
         out = batch
-        if existing is not None:
-            keep = existing.join(batch.select(*keys), keys, "left_anti")
-            out = batch.unionByName(keep)
+        if _any_parquet(path):
+            # null-safe key match: a NULL key is one key, like the
+            # TimeTable merge (a name-based join never matches NULLs)
+            e, b = spark.read.parquet(path).alias("e"), batch.select(*keys).alias("b")
+            same = reduce(
+                lambda x, y: x & y,
+                [F.col(f"e.{k}").eqNullSafe(F.col(f"b.{k}")) for k in keys],
+            )
+            out = batch.unionByName(e.join(b, same, "left_anti"))
         tmp = path.rstrip("/") + ".lv_tmp"
         out.write.mode("overwrite").parquet(tmp)
         spark.read.parquet(tmp).write.mode("overwrite").parquet(path)

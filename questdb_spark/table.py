@@ -21,7 +21,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from calendar import monthrange
 from collections.abc import Sequence
+from datetime import datetime, timedelta
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,6 +80,17 @@ def _write_json(path: str, obj) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+
+
+def _minus_hours_or_months(dt: datetime, hours_or_months: int) -> datetime:
+    """Subtract a ``parse_ttl``-encoded span (hours > 0, months < 0), the
+    TableWriter.enforceTtl boundary arithmetic. A month step clamps the
+    day to the target month's length (Mar 31 − 1 month = Feb 29 in 2024)."""
+    if hours_or_months > 0:
+        return dt - timedelta(hours=hours_or_months)
+    yr, mo = divmod(dt.year * 12 + dt.month - 1 + hours_or_months, 12)
+    mo += 1
+    return dt.replace(year=yr, month=mo, day=min(dt.day, monthrange(yr, mo)[1]))
 
 
 class TimeTable:
@@ -1020,8 +1033,6 @@ class TimeTable:
         ``TableUtils.checkTtl``:395). Runs inside the ingest commit like
         the reference; cost is one max-ts lookup on the newest partition +
         directory removals, no data rewrite."""
-        from datetime import datetime, timedelta
-
         ttl = self.ttl_hours_or_months
         if ttl == 0:
             return []
@@ -1054,17 +1065,7 @@ class TimeTable:
                 return datetime(dt.year + (dt.month == 12), dt.month % 12 + 1, 1)
             return datetime(dt.year + 1, 1, 1)
 
-        def minus_ttl(dt: datetime) -> datetime:
-            if ttl > 0:
-                return dt - timedelta(hours=ttl)
-            months = -ttl
-            mo = (dt.month - 1 - months) % 12 + 1
-            yr = dt.year + (dt.month - 1 - months) // 12
-            from calendar import monthrange
-
-            return dt.replace(year=yr, month=mo, day=min(dt.day, monthrange(yr, mo)[1]))
-
-        boundary = minus_ttl(max_ts)
+        boundary = _minus_hours_or_months(max_ts, ttl)
         evicted = []
         for p in parts[:-1]:  # oldest first, never the active partition
             pv = p.split("=", 1)[1]

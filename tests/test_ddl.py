@@ -1194,6 +1194,31 @@ def test_alter_matview_set_ttl_evicts_old_buckets(eng):
     assert eng.sql("SELECT count(*) n FROM mvttl").first().n == 1
 
 
+def test_alter_matview_set_ttl_one_month_clamps_day(eng):
+    """A one-month TTL from a newest bucket on Mar 31 puts the boundary on
+    the last day of February (Feb 29 in 2024) instead of raising; day
+    partitions whose whole day ends by the boundary are evicted."""
+    eng.sql("CREATE TABLE tb (v DOUBLE, ts TIMESTAMP) TIMESTAMP(ts) PARTITION BY DAY")
+    eng.sql(
+        "INSERT INTO tb VALUES (1.0,'2024-01-31T00:10:00Z'),"
+        "(2.0,'2024-02-28T00:10:00Z'),(3.0,'2024-02-29T00:10:00Z'),"
+        "(4.0,'2024-03-01T00:10:00Z'),(5.0,'2024-03-31T00:10:00Z')"
+    )
+    eng.sql(
+        "CREATE MATERIALIZED VIEW mvttl WITH BASE tb AS ("
+        "SELECT ts, sum(v) s FROM tb SAMPLE BY 1h)"
+    )
+    eng.sql("ALTER MATERIALIZED VIEW mvttl SET TTL 1 MONTH")
+    got = [
+        (str(r.ts), r.s) for r in eng.sql("SELECT ts, s FROM mvttl ORDER BY ts").collect()
+    ]
+    assert got == [
+        ("2024-02-29 00:00:00", 3.0),
+        ("2024-03-01 00:00:00", 4.0),
+        ("2024-03-31 00:00:00", 5.0),
+    ]
+
+
 def test_alter_matview_column_forms_and_errors(eng):
     _mk_base(eng)
     eng.sql("ALTER TABLE tb ADD COLUMN sym SYMBOL")

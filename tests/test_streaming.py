@@ -6,11 +6,13 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from questdb_spark.sources.ilp import ilp_to_table, parse_ilp
-from questdb_spark.streaming.ingest import compact, read_deduped, write_stream_ingest
-from questdb_spark.streaming.matview import read_matview, sample_by_matview
+from questdb_spark.streaming.ingest import write_stream_ingest
+from questdb_spark.streaming.matview import sample_by_matview
+from questdb_spark.table import TimeTable
 
 ILP_LINES_A = [
     'trades,sym=AAPL,side=buy price=101.5,size=10i 1704067200000000000',
@@ -47,19 +49,17 @@ def test_ilp_to_table(spark):
     assert table.count() == 3
 
 
-def _run_ingest_batch(spark, lines, in_dir, out_dir, ckpt, fname):
+def _run_ingest_batch(spark, lines, in_dir, table, ckpt, fname):
     with open(os.path.join(in_dir, fname), "w") as f:
         f.write("\n".join(lines) + "\n")
     stream = spark.readStream.format("text").load(in_dir)
-    table = parse_ilp(stream).filter(F.col("measurement") == "trades").select(
+    stream_rows = parse_ilp(stream).filter(F.col("measurement") == "trades").select(
         F.col("tags")["sym"].alias("sym"),
         F.col("fields_double")["price"].alias("price"),
         F.col("fields_long")["size"].alias("size"),
         "ts",
     )
-    q = write_stream_ingest(
-        table, out_dir, "ts", ["sym"], ckpt, trigger_available_now=True
-    )
+    q = write_stream_ingest(stream_rows, table, ckpt, trigger_available_now=True)
     q.awaitTermination(120)
 
 
@@ -69,10 +69,11 @@ def test_ingest_dedup_upsert(spark):
         out_dir = os.path.join(tmp, "out")
         ckpt = os.path.join(tmp, "ckpt")
         os.makedirs(in_dir)
-        _run_ingest_batch(spark, ILP_LINES_A, in_dir, out_dir, ckpt, "a.txt")
-        _run_ingest_batch(spark, ILP_LINES_B, in_dir, out_dir, ckpt, "b.txt")
+        table = TimeTable(spark, out_dir, "ts", dedup_keys=["sym"])
+        _run_ingest_batch(spark, ILP_LINES_A, in_dir, table, ckpt, "a.txt")
+        _run_ingest_batch(spark, ILP_LINES_B, in_dir, table, ckpt, "b.txt")
 
-        view = read_deduped(spark, out_dir, "ts", ["sym"])
+        view = table.read()
         rows = {(r["sym"], str(r["ts"])): r for r in view.collect()}
         # 3 original trades + GOOG, with the AAPL@t0 row upserted
         assert len(rows) == 4
@@ -80,11 +81,8 @@ def test_ingest_dedup_upsert(spark):
         assert rows[("AAPL", "2024-01-01 00:00:00")]["size"] == 99
 
         # compaction materializes the same view
-        compact(spark, out_dir, "ts", ["sym"])
-        after = {
-            (r["sym"], str(r["ts"])): r
-            for r in read_deduped(spark, out_dir, "ts", ["sym"]).collect()
-        }
+        table.compact()
+        after = {(r["sym"], str(r["ts"])): r for r in table.read().collect()}
         assert {k: v["price"] for k, v in after.items()} == {
             k: v["price"] for k, v in rows.items()
         }
@@ -104,8 +102,9 @@ def test_ingest_intra_batch_dedup_order(spark):
         out_dir = os.path.join(tmp, "out")
         ckpt = os.path.join(tmp, "ckpt")
         os.makedirs(in_dir)
-        _run_ingest_batch(spark, dup_lines, in_dir, out_dir, ckpt, "dups.txt")
-        view = read_deduped(spark, out_dir, "ts", ["sym"]).collect()
+        table = TimeTable(spark, out_dir, "ts", dedup_keys=["sym"])
+        _run_ingest_batch(spark, dup_lines, in_dir, table, ckpt, "dups.txt")
+        view = table.read().collect()
         assert len(view) == 1
         assert view[0]["price"] == 3.0 and view[0]["size"] == 3
 
@@ -116,6 +115,7 @@ def test_sample_by_matview(spark):
         mv_dir = os.path.join(tmp, "mv")
         ckpt = os.path.join(tmp, "ckpt")
         os.makedirs(in_dir)
+        view = TimeTable(spark, mv_dir, "ts_bucket", dedup_keys=["sym"])
 
         def run(lines, fname):
             with open(os.path.join(in_dir, fname), "w") as f:
@@ -128,12 +128,11 @@ def test_sample_by_matview(spark):
             )
             q = sample_by_matview(
                 table,
-                mv_dir,
+                view,
                 ckpt,
                 "ts",
                 "1 minute",
                 {"n": F.count(F.lit(1)), "max_price": F.max("price")},
-                keys=["sym"],
                 watermark="2 days",  # o3MaxLag: late rows within it update their bucket
                 trigger_available_now=True,
             )
@@ -142,7 +141,7 @@ def test_sample_by_matview(spark):
         run(ILP_LINES_A, "a.txt")
         run(ILP_LINES_B, "b.txt")
         mv = {
-            (r["sym"], str(r["ts_bucket"])): r for r in read_matview(spark, mv_dir).collect()
+            (r["sym"], str(r["ts_bucket"])): r for r in view.read().collect()
         }
         # AAPL minute-0 bucket got the late 999.0 row merged in
         assert mv[("AAPL", "2024-01-01 00:00:00")]["n"] == 2
@@ -183,6 +182,141 @@ def test_latest_on_liveview(spark):
         lv2 = {r["sym"]: r["price"] for r in spark.read.parquet(lv_dir).collect()}
         # GOOG appears; AAPL's latest is still the ts=1min sell (999 was at ts=0)
         assert lv2 == {"AAPL": 102.0, "MSFT": 390.25, "GOOG": 140.0}
+
+
+def test_ingest_without_keys_keeps_rows_sharing_ts(spark, tmp_path):
+    """A table without dedup keys appends every row, as QuestDB does: two
+    distinct rows at the same timestamp are both stored."""
+    from questdb_spark.streaming.ingest import start_ilp_ingest
+
+    lines_dir = tmp_path / "lines"
+    lines_dir.mkdir()
+    (lines_dir / "b0.txt").write_text(
+        "trades,sym=A price=1.0 1704067200000000000\n"
+        "trades,sym=B price=2.0 1704067200000000000\n"
+    )
+    table = TimeTable(spark, str(tmp_path / "tbl"), "ts")
+    start_ilp_ingest(
+        spark, measurement="trades", table=table,
+        checkpoint=str(tmp_path / "ckpt"), lines_path=str(lines_dir),
+        trigger_available_now=True,
+    ).awaitTermination(120)
+    got = sorted((r["sym"], r["price"]) for r in table.read().collect())
+    assert got == [("A", 1.0), ("B", 2.0)]
+
+
+def test_ingest_hour_partitions_stay_hourly(spark, tmp_path):
+    """An hourly table streamed into keeps one partition per hour, not one
+    per day."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    table = TimeTable(
+        spark, str(tmp_path / "out"), "ts", partition_by="hour", dedup_keys=["sym"]
+    )
+    lines = [
+        "trades,sym=A price=1.0,size=1i 1704067800000000000",  # 00:10
+        "trades,sym=A price=2.0,size=1i 1704071400000000000",  # 01:10
+    ]
+    _run_ingest_batch(spark, lines, str(in_dir), table, str(tmp_path / "ckpt"), "a.txt")
+    parts = sorted(d for d in os.listdir(table.path) if d.startswith("part_date="))
+    assert parts == ["part_date=2024-01-01-00", "part_date=2024-01-01-01"]
+    assert table.read().count() == 2
+
+
+def test_ingest_stores_late_row(spark, tmp_path):
+    """A row two days older than anything already committed, arriving in a
+    later micro-batch, merges into its own partition."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    table = TimeTable(spark, str(tmp_path / "out"), "ts", dedup_keys=["sym"])
+    _run_ingest_batch(spark, ILP_LINES_A, str(in_dir), table, ckpt, "a.txt")
+    late = ["trades,sym=OLD price=1.0,size=1i 1703894400000000000"]  # Dec 30
+    _run_ingest_batch(spark, late, str(in_dir), table, ckpt, "b.txt")
+    got = {(r["sym"], str(r["ts"])) for r in table.read().collect()}
+    assert ("OLD", "2023-12-30 00:00:00") in got
+    assert len(got) == 4
+
+
+def test_sample_by_matview_null_key_one_row(spark, tmp_path):
+    """Two batches for the same (bucket, NULL key): the view keeps one row
+    carrying the latest aggregate, not a stale row beside it."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    view = TimeTable(spark, str(tmp_path / "mv"), "ts_bucket", dedup_keys=["sym"])
+
+    def run(line, fname):
+        (in_dir / fname).write_text(line + "\n")
+        rows = parse_ilp(spark.readStream.format("text").load(str(in_dir))).select(
+            F.col("tags")["sym"].alias("sym"),  # no sym tag → NULL key
+            F.col("fields_double")["price"].alias("price"),
+            "ts",
+        )
+        sample_by_matview(
+            rows, view, ckpt, "ts", "1 minute", {"n": F.count(F.lit(1))},
+            watermark="2 days", trigger_available_now=True,
+        ).awaitTermination(120)
+
+    run("trades price=1.0 1704067200000000000", "a.txt")
+    run("trades price=2.0 1704067210000000000", "b.txt")
+    got = [(r["sym"], str(r["ts_bucket"]), r["n"]) for r in view.read().collect()]
+    assert got == [(None, "2024-01-01 00:00:00", 2)]
+
+
+def test_latest_on_liveview_null_key_one_row(spark, tmp_path):
+    """A NULL ``sym`` key arriving in two batches is one key: the live view
+    ends with one row holding the later price."""
+    from questdb_spark.streaming.matview import latest_on_liveview
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    lv_dir = str(tmp_path / "lv")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run(line, fname):
+        (in_dir / fname).write_text(line + "\n")
+        rows = parse_ilp(spark.readStream.format("text").load(str(in_dir))).select(
+            F.col("tags")["sym"].alias("sym"),
+            F.col("fields_double")["price"].alias("price"),
+            "ts",
+        )
+        latest_on_liveview(
+            rows, lv_dir, ckpt, "ts", ["sym"], trigger_available_now=True
+        ).awaitTermination(120)
+
+    run("trades price=1.0 1704067200000000000", "a.txt")
+    run("trades price=2.0 1704067260000000000", "b.txt")
+    got = [(r["sym"], r["price"]) for r in spark.read.parquet(lv_dir).collect()]
+    assert got == [(None, 2.0)]
+
+
+def test_ilp_ingest_torn_schema_file_raises(spark, tmp_path):
+    """A torn ``_ilp_schema.json`` fails the restarted stream instead of
+    silently re-inferring a new layout from the next batch."""
+    from pyspark.errors import StreamingQueryException
+
+    from questdb_spark.streaming.ingest import start_ilp_ingest
+
+    lines_dir = tmp_path / "lines"
+    lines_dir.mkdir()
+    ckpt = tmp_path / "ckpt"
+    table = TimeTable(spark, str(tmp_path / "tbl"), "ts", dedup_keys=["sym", "side"])
+
+    def run():
+        start_ilp_ingest(
+            spark, measurement="trades", table=table, checkpoint=str(ckpt),
+            lines_path=str(lines_dir), trigger_available_now=True,
+        ).awaitTermination(120)
+
+    (lines_dir / "b0.txt").write_text("\n".join(ILP_LINES_A) + "\n")
+    run()
+    schema = ckpt / "_ilp_schema.json"
+    schema.write_text(schema.read_text()[:10])
+    (lines_dir / "b1.txt").write_text("\n".join(ILP_LINES_B) + "\n")
+    with pytest.raises(StreamingQueryException):
+        run()
+    assert table.read().count() == 3  # nothing from the second batch landed
 
 
 def test_ilp_fuzz_roundtrip(spark):
@@ -273,6 +407,7 @@ def test_sample_by_matview_tz_aligned(spark):
         mv_dir = os.path.join(tmp, "mv")
         ckpt = os.path.join(tmp, "ckpt")
         os.makedirs(in_dir)
+        view = TimeTable(spark, mv_dir, "ts_bucket", dedup_keys=["sym"])
 
         def run(lines, fname):
             with open(os.path.join(in_dir, fname), "w") as f:
@@ -284,7 +419,7 @@ def test_sample_by_matview_tz_aligned(spark):
                 "ts",
             )
             q = sample_by_matview(
-                table, mv_dir, ckpt, "ts", "1 day", aggs, keys=["sym"],
+                table, view, ckpt, "ts", "1 day", aggs,
                 watermark="2 days", tz="America/New_York",
                 trigger_available_now=True,
             )
@@ -295,7 +430,7 @@ def test_sample_by_matview_tz_aligned(spark):
 
         got = {
             (r["sym"], str(r["ts_bucket"])): (r["n"], r["max_price"])
-            for r in read_matview(spark, mv_dir).collect()
+            for r in view.read().collect()
         }
         # buckets start at NY local midnight = 05:00 UTC
         assert got[("AAPL", "2024-01-01 05:00:00")] == (2, 2.0)
@@ -877,15 +1012,17 @@ def test_streaming_horizon_join_matches_batch(spark):
 
 def test_ilp_ingest_end_to_end_file_stream(spark, tmp_path):
     """r8 verdict task 6: live lines → table → query round trip through
-    `start_ilp_ingest` — 3 micro-batches, out-of-order rows through the
-    watermark path, a RESTART from the checkpoint, and the streamed table
+    `start_ilp_ingest` — 3 micro-batches, out-of-order rows merged into
+    their partitions, a RESTART from the checkpoint, and the streamed table
     equal to the batch-parsed oracle."""
     from questdb_spark.sources.ilp import ilp_to_table, parse_ilp
-    from questdb_spark.streaming.ingest import read_deduped, start_ilp_ingest
+    from questdb_spark.streaming.ingest import start_ilp_ingest
 
     lines_dir = tmp_path / "lines"
     lines_dir.mkdir()
-    out = str(tmp_path / "trades_tbl")
+    table = TimeTable(
+        spark, str(tmp_path / "trades_tbl"), "ts", dedup_keys=["sym", "side"]
+    )
     ckpt = str(tmp_path / "ckpt")
 
     batches = [
@@ -902,10 +1039,9 @@ def test_ilp_ingest_end_to_end_file_stream(spark, tmp_path):
         q = start_ilp_ingest(
             spark,
             measurement="trades",
-            out_path=out,
+            table=table,
             checkpoint=ckpt,
             lines_path=str(lines_dir),
-            dedup_keys=["sym", "side"],
             trigger_available_now=True,
         )
         q.awaitTermination(120)
@@ -917,7 +1053,7 @@ def test_ilp_ingest_end_to_end_file_stream(spark, tmp_path):
     (lines_dir / "b2.txt").write_text("\n".join(batches[2]) + "\n")
     run(["b2"])  # fresh query, same checkpoint: resumes, doesn't re-ingest
 
-    got = read_deduped(spark, out, "ts", ["sym", "side"])
+    got = table.read()
     # oracle: upsert semantics applied by hand over ALL lines — the later
     # line wins per (sym, side, ts); ILP nanos floor to micros
     from datetime import datetime, timezone
@@ -953,7 +1089,7 @@ def test_ilp_ingest_socket_round_trip(spark, tmp_path):
     import threading
     import time as _time
 
-    from questdb_spark.streaming.ingest import read_deduped, start_ilp_ingest
+    from questdb_spark.streaming.ingest import start_ilp_ingest
 
     srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
     srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
@@ -970,26 +1106,26 @@ def test_ilp_ingest_socket_round_trip(spark, tmp_path):
     t.start()
 
     out = str(tmp_path / "sock_tbl")
+    table = TimeTable(spark, out, "ts", dedup_keys=["sym", "side"])
     q = start_ilp_ingest(
         spark,
         measurement="trades",
-        out_path=out,
+        table=table,
         checkpoint=str(tmp_path / "sock_ckpt"),
         host="127.0.0.1",
         port=port,
-        dedup_keys=["sym", "side"],
     )
     try:
         deadline = _time.time() + 60
         while _time.time() < deadline:
             if os.path.exists(out):
                 try:
-                    if read_deduped(spark, out, "ts", ["sym", "side"]).count() >= 3:
+                    if table.read().count() >= 3:
                         break
                 except Exception:
                     pass
             _time.sleep(1)
-        got = read_deduped(spark, out, "ts", ["sym", "side"])
+        got = table.read()
         assert got.count() == 3  # the three 'trades' lines
         assert {r["sym"] for r in got.collect()} == {"AAPL", "MSFT"}
     finally:
