@@ -1,27 +1,16 @@
-"""Aggregate long-tail: haversine distance, Kahan/Neumaier sums,
-sparkline, UNION type harmonization.
+"""Aggregate long-tail: haversine distance, sparkline, UNION type
+harmonization.
 
 Reference: ``griffin/engine/functions/groupby/`` — HaversineDistDegree...,
-KSumDouble/NSumDouble (compensated sums), Sparkline...;
-``griffin/engine/union/...CastRecordCursor`` (§2.7 type harmonization).
-
-ksum/nsum exist in QuestDB to reduce float error in single-threaded loops;
-in this engine exact summation is available by casting to DECIMAL, which is
-strictly stronger, so ksum/nsum lower to that.
+Sparkline...; ``griffin/engine/union/...CastRecordCursor`` (§2.7 type
+harmonization).  The compensated sums ksum/nsum (KSumDouble/NSumDouble)
+lower in the dialect, ``sqlfront/engine._compensated_sum``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def ksum(x: Column, scale: int = 6) -> Column:
-    """Kahan-compensated sum → exact decimal sum (stronger guarantee)."""
-    return F.sum(x.cast(f"decimal(30,{scale})")).cast("double")
-
-
-nsum = ksum  # Neumaier variant: same contract
 
 
 def haversine_dist_deg(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:

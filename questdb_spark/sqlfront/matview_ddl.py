@@ -14,16 +14,20 @@ Spark-first lowering (batch twin of ``streaming/matview.py``):
 
 - the view body is lowered through the engine's own dialect front-end, so
   everything a SAMPLE BY query supports works in a view;
-- storage is date-partitioned parquet under the engine warehouse;
+- storage is a ``TimeTable`` in ``__mv_<name>`` under the engine warehouse
+  (or the view's volume), like the reference's view, which is an ordinary
+  table written by the table writer: SAMPLE BY views are day-partitioned
+  on their bucket column, LATEST ON and generic live views are
+  unpartitioned;
 - incremental refresh tracks the base table's high-water mark (max
   designated ts at last refresh — the batch stand-in for WAL txn ranges)
-  and recomputes only buckets >= bucket_floor(hwm): the recomputed tail is
-  merged with the untouched head rows of the touched date partitions and
-  written with dynamic partition overwrite, so refresh I/O is proportional
-  to NEW data, not view size — the exact economics of the reference's
-  interval iterator. Out-of-order base writes older than the high-water
-  mark need ``REFRESH ... FULL`` (the streaming path covers bounded
-  lateness via watermarks instead).
+  and recomputes only buckets >= bucket_floor(hwm); ``TimeTable.replace_from``
+  swaps that tail into the day partitions it touches and never rewrites
+  the others, so refresh I/O is proportional to NEW data, not view size —
+  the exact economics of the reference's interval iterator.  Every other
+  refresh replaces the whole view with ``TimeTable.write``.  A changed
+  row count below the high-water mark escalates an incremental refresh to
+  a full one (the O3 guard in ``_refresh``).
 """
 
 from __future__ import annotations
@@ -39,12 +43,16 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.sample_by import _UNIT_MICROS, parse_interval
-from ..table import _minus_hours_or_months, _write_json
+from ..table import (
+    PARTITION_COL,
+    VIEW_STATE_FILE,
+    TimeTable,
+    _minus_hours_or_months,
+    _write_json,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     from .engine import QdbEngine
-
-_PART = "__mv_part"
 
 _CREATE_RE = re.compile(
     r"^create\s+(materialized|live)\s+view\s+(if\s+not\s+exists\s+)?(\w+)\s*"
@@ -70,7 +78,7 @@ class MatViewDef:
     interval: str  # SAMPLE BY interval spec ('1h', '30m', ...); '' non-sampled
     live: bool = False  # LIVE VIEW: incremental refresh on every read
     hwm: datetime | None = None  # base high-water mark at last refresh
-    path: str = field(default="")
+    table: TimeTable | None = None  # the view's storage
     # general live views (cairo/lv/): the stored query may be any dialect
     # query, with shape-specific incremental strategies
     shape: str = "sample_by"  # sample_by | latest_on | generic
@@ -89,9 +97,6 @@ class MatViewDef:
     period_length: str = ""  # '' = no PERIOD clause
     period_tz: str | None = None
     period_delay: str = ""
-    # storage schema captured at write time: lets _register skip the
-    # parquet footer-inference job on every re-registration
-    stored_schema: object = None
     # ALTER MATERIALIZED/LIVE VIEW state (r10 — SqlCompilerImpl.java:2145
     # compileAlterMatView, :2126 compileAlterLiveView):
     wal_suspended: bool = False  # SUSPEND WAL: refreshes park, reads serve stored
@@ -283,10 +288,10 @@ def _create(eng: QdbEngine, s: str) -> DataFrame:
             return _status(eng, "create", name, "exists")
         raise ValueError(f"view exists: {name}")
     inner, _rest = _balanced_group(s[m.end() - 1 :])  # trailing PARTITION BY ignored:
-    # storage is always date-partitioned parquet (PartitionBy is a native
-    # storage detail the parquet layout subsumes).  IN VOLUME on a mat
-    # view (SqlCompilerImpl.java:4589) relocates the view's storage like
-    # CREATE TABLE's form does, with the same unknown-alias error.
+    # the view's shape sets its storage layout (module docstring).  IN
+    # VOLUME on a mat view (SqlCompilerImpl.java:4589) relocates the view's
+    # storage like CREATE TABLE's form does, with the same unknown-alias
+    # error.
     volume = None
     vm = re.search(r"\bin\s+volume\s+('[^']*'|\w+)", _rest, re.IGNORECASE)
     if vm:
@@ -321,8 +326,11 @@ def _create(eng: QdbEngine, s: str) -> DataFrame:
     d = MatViewDef(
         name=name, base=base, inner_sql=inner, base_ts=base_ts, ts_out=ts_out,
         interval=interval, live=live, shape=shape,
-        path=os.path.join(
-            eng.volumes[volume] if volume else eng.warehouse, f"__mv_{name}"
+        table=TimeTable(
+            eng.spark,
+            os.path.join(eng.volumes[volume] if volume else eng.warehouse, f"__mv_{name}"),
+            ts_out,
+            "day" if shape == "sample_by" else "none",
         ),
         **refresh,
     )
@@ -335,7 +343,7 @@ def _create(eng: QdbEngine, s: str) -> DataFrame:
     if d.deferred:
         # DEFERRED: no refresh at creation — register the empty schema;
         # the first due read / manual REFRESH populates
-        _swap_write(d, _compute(eng, d, None).limit(0))
+        _write_view(d, _compute(eng, d, None).limit(0))
         _save_state(d)
         _register(eng, d)
     else:
@@ -373,7 +381,7 @@ def _drop(eng: QdbEngine, s: str) -> DataFrame:
         if re.search(r"if\s+exists", s, re.IGNORECASE):
             return _status(eng, "drop", name, "absent")
         raise ValueError(f"no such materialized view: {name}")
-    shutil.rmtree(d.path, ignore_errors=True)
+    shutil.rmtree(d.table.path, ignore_errors=True)
     eng.tables.pop(name, None)
     eng.spark.catalog.dropTempView(name)
     return _status(eng, "drop", name)
@@ -563,30 +571,29 @@ def _alter(eng: QdbEngine, s: str) -> DataFrame:
 
 
 def _enforce_view_ttl(eng: QdbEngine, d: MatViewDef) -> None:
-    """Evict view date-partitions older than TTL from the newest bucket
-    (TableWriter.enforceTtl economics on the view's own storage: directory
-    removals keyed off partition names, no data rewrite; the newest
-    partition is never evicted)."""
+    """Evict view day-partitions older than TTL from the newest bucket
+    (TableWriter.enforceTtl economics on the view's own storage: partition
+    drops keyed off partition names, no data rewrite; the newest partition
+    is never evicted)."""
     from datetime import timedelta
 
     ttl = d.ttl_hours_or_months
-    if ttl == 0 or not os.path.isdir(d.path):
+    if ttl == 0 or not os.path.isdir(d.table.path):
         return
-    parts = sorted(
-        p for p in os.listdir(d.path) if p.startswith(f"{_PART}=")
+    days = sorted(
+        p.split("=", 1)[1]
+        for p in os.listdir(d.table.path)
+        if p.startswith(f"{PARTITION_COL}=")
     )
-    if len(parts) < 2:
+    if len(days) < 2:
         return
-    newest = datetime.strptime(parts[-1].split("=", 1)[1], "%Y-%m-%d")
-    boundary = _minus_hours_or_months(newest, ttl)
-    evicted = False
-    for p in parts[:-1]:
-        start = datetime.strptime(p.split("=", 1)[1], "%Y-%m-%d")
-        if start + timedelta(days=1) <= boundary:
-            shutil.rmtree(os.path.join(d.path, p), ignore_errors=True)
-            evicted = True
-        else:
-            break
+    boundary = _minus_hours_or_months(datetime.strptime(days[-1], "%Y-%m-%d"), ttl)
+    evicted = [
+        p for p in days[:-1]
+        if datetime.strptime(p, "%Y-%m-%d") + timedelta(days=1) <= boundary
+    ]
+    for p in evicted:
+        d.table.force_drop_partition(p)
     if evicted:
         _register(eng, d)
 
@@ -749,7 +756,7 @@ def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> int:
         ):
             _register(eng, d)
             return 0
-        _swap_write(d, _compute(eng, d, None))
+        _write_view(d, _compute(eng, d, None))
         if new_hwm is not None:
             d.hwm = new_hwm if new_hwm.tzinfo else new_hwm.replace(tzinfo=timezone.utc)
         d.base_count = d.frozen_count = n_now
@@ -833,18 +840,7 @@ def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> int:
         if nxt_new is not None:
             observed = _observed_base(F.col(d.base_ts) < _ts_lit(nxt_new))
             obs_mode = "full"
-        out = _compute_with_swap(observed, None)
-        if d.shape == "sample_by":
-            # repartition on the storage key: one task per date dir
-            # instead of shuffle_partitions × dates tiny files (AQE
-            # coalesces small dates; write+commit time is file-bound)
-            out = out.withColumn(_PART, F.col(d.ts_out).cast("date"))
-            out.repartition(F.col(_PART)).write.partitionBy(_PART).mode(
-                "overwrite"
-            ).parquet(d.path)
-            d.stored_schema = out.schema
-        else:
-            _swap_write(d, out)
+        _write_view(d, _compute_with_swap(observed, None))
     elif not o3_escalated and new_hwm is not None and d.hwm is not None \
             and _same_hwm(new_hwm, d.hwm) and n_now == d.base_count:
         changed = 0
@@ -857,9 +853,9 @@ def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> int:
         q = _parse(eng._rewrite_intervals(d.inner_sql))
         ts_col, keys = q.latest_on
         tail = _compute(eng, d, cutoff)
-        state = spark.read.parquet(d.path).select(*tail.columns)
+        state = d.table.read().select(*tail.columns)
         merged = _latest(state.unionByName(tail), ts_col, keys)
-        _swap_write(d, merged.select(*tail.columns))
+        _write_view(d, merged.select(*tail.columns))
     else:  # sample_by bucket-window incremental
         observed = None
         # both are _bucket_floor outputs → tz-aware UTC, directly comparable
@@ -873,22 +869,7 @@ def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> int:
                 pre_filter=F.col(d.base_ts) >= _ts_lit(cutoff),
             )
             obs_mode = "tail"
-        tail = _compute_with_swap(observed, cutoff).withColumn(
-            _PART, F.col(d.ts_out).cast("date")
-        )
-        existing = spark.read.parquet(d.path)
-        # rows of the touched date partitions that precede the recomputed
-        # window must ride along in the overwrite; untouched date
-        # partitions are never rewritten
-        carry = existing.filter(F.col(d.ts_out) < _ts_lit(cutoff)).join(
-            tail.select(_PART).distinct(), _PART, "left_semi"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        merged = carry.unionByName(tail)
-        merged.repartition(F.col(_PART)).write.partitionBy(_PART).mode(
-            "overwrite"
-        ).parquet(d.path)
-        d.stored_schema = merged.schema
+        d.table.replace_from(_compute_with_swap(observed, cutoff), cutoff)
     if new_hwm is not None:
         d.hwm = new_hwm if new_hwm.tzinfo else new_hwm.replace(tzinfo=timezone.utc)
     d.base_count = n_now
@@ -942,31 +923,20 @@ def _same_hwm(a, b) -> bool:
     return a == b
 
 
-def _swap_write(d: MatViewDef, out: DataFrame) -> None:
-    """Overwrite unpartitioned view state via tmp-dir swap (the state may
-    be derived from the current files — never read+overwrite in place)."""
-    tmp = d.path.rstrip("/") + ".swap"
-    out.write.mode("overwrite").parquet(tmp)
-    d.stored_schema = out.schema
-    state = os.path.join(d.path, _STATE_FILE)
-    saved = None
-    if os.path.exists(state):
-        with open(state) as fh:
-            saved = json.load(fh)
-    shutil.rmtree(d.path, ignore_errors=True)
-    os.rename(tmp, d.path)
-    if saved is not None:
-        _write_json(state, saved)
-
-
-_STATE_FILE = "_lv_state.json"  # underscore: invisible to parquet discovery
+def _write_view(d: MatViewDef, out: DataFrame) -> None:
+    """Replace the whole view.  A live view whose output has no timestamp
+    sorts by its first column, the DDL layer's rule for tables without
+    one."""
+    if d.table.ts_col not in out.columns:
+        d.table.ts_col = out.columns[0]
+    d.table.write(out)
 
 
 def _save_state(d: MatViewDef) -> None:
     """Checkpoint (LiveViewCheckpointDataStore equivalent): enough state to
     resume incremental refresh in a NEW session over the same warehouse."""
     _write_json(
-        os.path.join(d.path, _STATE_FILE),
+        os.path.join(d.table.path, VIEW_STATE_FILE),
         {
             "inner_sql": d.inner_sql,
             "shape": d.shape,
@@ -987,11 +957,13 @@ def _restore_state(eng: QdbEngine, d: MatViewDef) -> bool:
     """Adopt a previous session's checkpoint when the stored query text
     matches — the restart path: no recompute, incremental refresh resumes
     from the persisted high-water mark."""
-    f = os.path.join(d.path, _STATE_FILE)
+    f = os.path.join(d.table.path, VIEW_STATE_FILE)
     try:
         with open(f) as fh:
             st = json.load(fh)
-    except (OSError, ValueError):
+    except FileNotFoundError:
+        # only a missing checkpoint means "none": a torn one raises rather
+        # than silently recompute over the view's ALTER state
         return False
     if st.get("inner_sql") != d.inner_sql or st.get("shape") != d.shape:
         return False
@@ -1011,13 +983,9 @@ def _restore_state(eng: QdbEngine, d: MatViewDef) -> bool:
 
 
 def _register(eng: QdbEngine, d: MatViewDef) -> None:
-    # explicit schema skips the footer/partition-inference job; restored
-    # sessions (no captured schema yet) fall back to inference once
-    reader = eng.spark.read
-    if d.stored_schema is not None:
-        reader = reader.schema(d.stored_schema)
-    df = reader.parquet(d.path).drop(_PART)
-    eng.register(d.name, df, designated_ts=d.ts_out)
+    # the table reads at its meta-cached schema: no inference job, also in
+    # a restored session
+    eng.register(d.name, d.table.read().drop(PARTITION_COL), designated_ts=d.ts_out)
 
 
 def read_with_live_refresh(eng: QdbEngine, name: str) -> None:

@@ -41,6 +41,13 @@ from .operators.latest import latest_on
 
 PARTITION_COL = "part_date"
 _UNITS = {"hour", "day", "month", "year", "none"}  # PartitionBy.java incl. NONE
+# a dialect view's refresh checkpoint (sqlfront/matview_ddl.py); the
+# underscore keeps it out of parquet discovery
+VIEW_STATE_FILE = "_lv_state.json"
+# sidecar state a whole-table rewrite carries into the new directory:
+# detached partitions, the WAL state and its parked txns, and the view
+# checkpoint
+_CARRIED = ("_detached", ".qdb_wal.json", ".qdb_wal_pending", VIEW_STATE_FILE)
 
 
 def _as_nullable(dt):
@@ -125,6 +132,7 @@ class TimeTable:
         # symbol tables and bitmap indexes (SURVEY §2.2)
         self.params: dict[str, str] = {}
         self._declared_cols: list[str] | None = None  # lazy, meta-backed
+        self._recover_swap()  # a whole-table rewrite cut short by a crash
 
     # -- write path --------------------------------------------------------
     def _with_partition(self, df: DataFrame, ts_col: str | None = None) -> DataFrame:
@@ -266,41 +274,45 @@ class TimeTable:
             return self.spark.read.schema(sch).parquet(self.path)
         return self.spark.read.option("mergeSchema", "true").parquet(self.path)
 
-    def write(self, df: DataFrame, mode: str = "overwrite") -> None:
-        """Create/replace the table: partition + sort discipline enforced."""
-        declared = None
-        if mode == "overwrite":
-            # fresh table definition — any pending DDL journal is void
-            # (declared_cols survives: it describes the CREATE, not the
-            # ops; re-persisted after the write since Spark's overwrite
-            # clears the directory)
-            declared = self._meta().get("declared_cols")
-            try:
-                os.remove(self._meta_path)
-            except OSError:
-                pass
-        # cache bookkeeping: a static overwrite (or a write into an empty
-        # dir) defines the directory contents; a dynamic-mode overwrite of
-        # a populated dir only replaces the partitions present in ``df``
-        had_files = _any_parquet(self.path)
-        full_replace = not had_files or (
-            mode == "overwrite"
-            and self.spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            ).lower()
-            != "dynamic"
-        )
+    def write(self, df: DataFrame) -> None:
+        """Replace the whole table with ``df``: partition + sort discipline
+        enforced.  The rows and a fresh meta journal land in a sibling
+        directory that ``_swap_in`` renames into place, so ``df`` may read
+        the table it replaces, and the old directory (meta journal
+        included) stays intact until the swap.  The DDL ops journal is
+        void; ``declared_cols`` carries over (it describes the CREATE, not
+        the ops)."""
+        tmp = self.path.rstrip("/") + ".rewrite"
+        shutil.rmtree(tmp, ignore_errors=True)  # a crashed rewrite's leftovers
         out = self._with_partition(df)
         (
             out.repartition(self._write_width(df), PARTITION_COL)
             .sortWithinPartitions(self.ts_col)
-            .write.mode(mode)
-            .partitionBy(PARTITION_COL)
-            .parquet(self.path)
+            .write.partitionBy(PARTITION_COL)
+            .parquet(tmp)
         )
+        meta = {"phys_schema": self._readback_schema(out.schema).jsonValue()}
+        declared = self._meta().get("declared_cols")
         if declared:
-            self._write_meta(declared_cols=declared)
-        self._note_write(out.schema, replace=full_replace, had_files=had_files)
+            meta["declared_cols"] = declared
+        _write_json(os.path.join(tmp, os.path.basename(self._meta_path)), meta)
+        self._swap_in(tmp)
+
+    def replace_from(self, df: DataFrame, since: datetime) -> None:
+        """Replace the rows at or after ``since`` with ``df``, only in the
+        partitions ``df`` touches: each keeps its rows before ``since`` and
+        takes ``df``'s rows for the rest; untouched partitions are never
+        rewritten.  ``since`` reads in the session time zone, like a
+        TIMESTAMP literal."""
+        phys_ts = self._physical_name(self.ts_col)
+        inc = self._with_partition(self._to_physical(df), phys_ts)
+        cut = F.lit(since.strftime("%Y-%m-%d %H:%M:%S.%f")).cast("timestamp")
+        head = (
+            self._read_physical()
+            .filter(F.col(phys_ts) < cut)
+            .join(inc.select(PARTITION_COL).distinct(), PARTITION_COL, "left_semi")
+        )
+        self._rewrite_partitions(head.unionByName(inc))
 
     def append(self, df: DataFrame, seq: int = 0) -> None:
         """WAL-style append; `seq` orders writes for dedup resolution.
@@ -412,7 +424,7 @@ class TimeTable:
         )
         added = inc.alias("i").join(ex.alias("e"), cond, "left_anti")
         merged = overwritten.select(*out_cols).unionByName(added.select(*out_cols))
-        self._rewrite_partitions(merged, parts)
+        self._rewrite_partitions(merged)
         inc_cached.unpersist()
 
     # -- WAL lifecycle: SUSPEND / RESUME ------------------------------------
@@ -593,20 +605,8 @@ class TimeTable:
         if name not in self._logical_columns():
             raise ValueError(f"no such column: {name}")
         df = self._logical(self._read_physical())
-        df = df.withColumn(name, F.col(name).cast(new_type))
-        tmp = self.path.rstrip("/") + ".convert"
-        out = df.drop(PARTITION_COL).transform(self._with_partition)
-        (
-            out.repartition(self._write_width(df), PARTITION_COL)
-            .sortWithinPartitions(self.ts_col)
-            .write.mode("overwrite")
-            .partitionBy(PARTITION_COL)
-            .parquet(tmp)
-        )
-        self._swap_in(tmp)
-        # the swap replaced the whole directory (and its meta journal) with
-        # files at the materialized logical schema
-        self._note_write(out.schema, replace=True)
+        # a whole-table rewrite at the materialized logical schema
+        self.write(df.withColumn(name, F.col(name).cast(new_type)))
 
     def _logical_columns(self) -> list[str]:
         import glob as _glob
@@ -764,7 +764,7 @@ class TimeTable:
         sub = df.join(F.broadcast(touched), PARTITION_COL, "left_semi")
         for name, expr in assignments.items():
             sub = sub.withColumn(name, F.when(predicate, expr).otherwise(F.col(name)))
-        self._rewrite_partitions(self._to_physical(sub), [])
+        self._rewrite_partitions(self._to_physical(sub))
 
     def update_from(
         self,
@@ -797,7 +797,7 @@ class TimeTable:
                 name, F.when(F.col("__match").isNotNull(), expr).otherwise(F.col(name))
             )
         sub = sub.drop(*other.columns).dropDuplicates(["__rid"]).drop("__rid")
-        self._rewrite_partitions(self._to_physical(sub), parts)
+        self._rewrite_partitions(self._to_physical(sub))
 
     def delete_where(self, predicate: Column) -> None:
         self._require_not_suspended()
@@ -819,7 +819,7 @@ class TimeTable:
         }
         emptied = [p for p in parts if p not in survived]
         if len(emptied) < len(parts):
-            self._rewrite_partitions(self._to_physical(sub), parts)
+            self._rewrite_partitions(self._to_physical(sub))
         for p in emptied:
             shutil.rmtree(
                 os.path.join(self.path, f"{PARTITION_COL}={p}"), ignore_errors=True
@@ -987,43 +987,36 @@ class TimeTable:
         at append time)."""
         if not self.dedup_enabled:
             return
-        out = self.read(dedup=True).withColumn(self.seq_col, F.lit(-1))
-        tmp = self.path.rstrip("/") + ".compact"
-        part = self._with_partition(out)
-        (
-            part.repartition(self._write_width(out), PARTITION_COL)
-            .sortWithinPartitions(self.ts_col)
-            .write.mode("overwrite")
-            .partitionBy(PARTITION_COL)
-            .parquet(tmp)
-        )
-        self._swap_in(tmp)
-        # whole-directory swap at the materialized logical schema
-        self._note_write(part.schema, replace=True)
+        self.write(self.read(dedup=True).withColumn(self.seq_col, F.lit(-1)))
+
+    @property
+    def _aside_path(self) -> str:
+        return self.path.rstrip("/") + ".aside"
 
     def _swap_in(self, tmp: str) -> None:
-        """Replace the table directory with a rewritten copy, carrying
-        sibling state across — detached partitions (r6 fuzz find) and the
-        WAL suspend state + parked txns (r6 fuzz find #2: compact while
-        suspended silently un-suspended the table and dropped its pending
-        queue). The DDL ops journal is deliberately NOT carried: both
-        callers (compact, alter_column_type) materialize the logical
-        schema into the rewrite."""
-        keep = [
-            (self._detached_root, os.path.basename(self._detached_root)),
-            (self._wal_state_path, os.path.basename(self._wal_state_path)),
-            (os.path.join(self.path, ".qdb_wal_pending"), ".qdb_wal_pending"),
-        ]
-        saved: list[tuple[str, str]] = []
-        for src, base in keep:
-            if os.path.exists(src):
-                hold = tmp.rstrip("/") + f".keep_{base}"
-                os.rename(src, hold)
-                saved.append((hold, base))
-        shutil.rmtree(self.path)
+        """Replace the table directory with the rewrite at ``tmp``: rename
+        the live directory aside, rename the rewrite in, move the sidecar
+        state in ``_CARRIED`` across, and only then delete the aside copy.
+        A crash at any step leaves the old table or the new one, and
+        ``_recover_swap`` undoes or finishes the swap when the table is
+        next opened."""
+        if os.path.exists(self.path):
+            os.rename(self.path, self._aside_path)
         os.rename(tmp, self.path)
-        for hold, base in saved:
-            os.rename(hold, os.path.join(self.path, base))
+        self._recover_swap()
+
+    def _recover_swap(self) -> None:
+        aside = self._aside_path
+        if not os.path.exists(aside):
+            return
+        if not os.path.exists(self.path):
+            os.rename(aside, self.path)  # the rewrite never went in
+            return
+        for name in _CARRIED:
+            src = os.path.join(aside, name)
+            if os.path.exists(src):
+                os.rename(src, os.path.join(self.path, name))
+        shutil.rmtree(aside)
 
     def enforce_ttl(self) -> list:
         """Evict partitions whose CEILING (start of the next logical
@@ -1105,12 +1098,14 @@ class TimeTable:
             compacted += 1
         return compacted
 
-    def _rewrite_partitions(self, sub: DataFrame, parts: list) -> None:
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    def _rewrite_partitions(self, sub: DataFrame) -> None:
         (
             sub.repartition(self._write_width(sub), PARTITION_COL)
             .sortWithinPartitions(self._physical_name(self.ts_col))
             .write.mode("overwrite")
+            # a write option, not the session conf: the session's later
+            # overwrites must keep their own mode
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(PARTITION_COL)
             .parquet(self.path)
         )

@@ -914,6 +914,49 @@ def test_matview_deferred_and_restart_state(eng, monkeypatch, spark, tmp_path):
     assert eng2.matviews["mvt2"].next_due == due
 
 
+def test_matview_full_refresh_after_incremental_drops_gone_day(eng):
+    """REFRESH FULL replaces the whole view, also after an incremental
+    refresh (which overwrites day partitions dynamically): a day whose
+    base partition was dropped leaves no bucket behind."""
+    _mk_base(eng)
+    eng.sql("INSERT INTO tb VALUES (3.0,'2024-01-02T00:10:00Z')")
+    eng.sql(
+        "CREATE MATERIALIZED VIEW mvf WITH BASE tb "
+        "AS (SELECT ts, sum(v) s FROM tb SAMPLE BY 1h)"
+    )
+    eng.sql("INSERT INTO tb VALUES (4.0,'2024-01-02T05:10:00Z')")
+    eng.sql("REFRESH MATERIALIZED VIEW mvf INCREMENTAL")
+    eng.sql("ALTER TABLE tb DROP PARTITION LIST '2024-01-01'")
+    eng.sql("REFRESH MATERIALIZED VIEW mvf FULL")
+    got = {str(r.ts): r.s for r in eng.sql("SELECT ts, s FROM mvf").collect()}
+    assert got == {"2024-01-02 00:00:00": 3.0, "2024-01-02 05:00:00": 4.0}
+
+
+def test_matview_torn_checkpoint_raises(eng, spark):
+    """A torn view checkpoint raises on the next CREATE instead of reading
+    as "no checkpoint", which would recompute the view and overwrite the
+    checkpoint, dropping its ALTER state."""
+    import os
+
+    _mk_base(eng)
+    create = (
+        "CREATE MATERIALIZED VIEW mvs WITH BASE tb "
+        "AS (SELECT ts, sum(v) s FROM tb SAMPLE BY 1h)"
+    )
+    eng.sql(create)
+    eng.sql("ALTER MATERIALIZED VIEW mvs SUSPEND WAL")
+    state = os.path.join(eng.warehouse, "__mv_mvs", "_lv_state.json")
+    with open(state, "r+") as f:
+        f.truncate(5)
+        f.seek(0)
+        torn = f.read()
+    eng2 = QdbEngine(spark, warehouse=eng.warehouse)
+    with pytest.raises(ValueError):
+        eng2.sql(create)
+    with open(state) as f:
+        assert f.read() == torn
+
+
 def test_matview_refresh_grammar_errors(eng):
     _mk_base(eng)
     body = "AS (SELECT ts, sum(v) s FROM tb SAMPLE BY 1h)"

@@ -1,12 +1,15 @@
-"""Dead-code gate: every top-level def or class in ``questdb_spark/`` must be
-referenced somewhere in the repo's Python — the package itself, ``tests/``,
-``perfbench/`` or the root scripts.  Pure AST scan, no Spark.
+"""Dead-code gate: every top-level def, class or name assignment
+(``x = y``) in ``questdb_spark/`` must be referenced somewhere in the repo's
+Python — the package itself, ``tests/``, ``perfbench/`` or the root
+scripts.  Pure AST scan, no Spark.
 
-A reference is a name, an attribute or an import of the def's name.  A def
-naming itself (recursion, a class using its own name in its methods) does
-not count, and neither does a string that happens to spell the name (the
-dialect's SQL-function tables are keyed by such strings).  Package
-``__init__`` re-exports count: they are the declared public API.
+A reference is a name, an attribute or an import of the defined name.  A
+statement naming what it defines (recursion, a class using its own name in
+its methods, ``X = X + 1``) does not count, and neither does a string that
+happens to spell the name (the dialect's SQL-function tables are keyed by
+such strings).  Package ``__init__`` re-exports count: they are the
+declared public API.  Dunder assignments (``__all__``) are read by Python
+itself and are not checked.
 """
 
 from __future__ import annotations
@@ -40,21 +43,38 @@ def _referenced_names(node: ast.AST) -> set[str]:
     return names
 
 
+def _defined_names(top: ast.stmt) -> frozenset[str]:
+    if isinstance(top, _DEFS):
+        return frozenset({top.name})
+    if isinstance(top, ast.Assign):
+        targets = top.targets
+    elif isinstance(top, ast.AnnAssign) and top.value is not None:
+        targets = [top.target]
+    else:
+        return frozenset()
+    return frozenset(
+        t.id
+        for t in targets
+        if isinstance(t, ast.Name) and not (t.id.startswith("__") and t.id.endswith("__"))
+    )
+
+
 def unreferenced_defs() -> list[str]:
     defs: dict[str, list[tuple[Path, int]]] = {}
-    refs: dict[str, set[tuple[Path, str | None]]] = {}
+    refs: dict[str, set[tuple[Path, frozenset[str]]]] = {}
     for path in _sources():
         tree = ast.parse(path.read_text(), filename=str(path))
         for top in tree.body:
-            owner = top.name if isinstance(top, _DEFS) else None
-            if owner and path.is_relative_to(PACKAGE):
-                defs.setdefault(owner, []).append((path, top.lineno))
+            owners = _defined_names(top)
+            if path.is_relative_to(PACKAGE):
+                for owner in owners:
+                    defs.setdefault(owner, []).append((path, top.lineno))
             for name in _referenced_names(top):
-                refs.setdefault(name, set()).add((path, owner))
+                refs.setdefault(name, set()).add((path, owners))
     dead = []
     for name, sites in defs.items():
         def_files = {p for p, _ in sites}
-        if all(o == name and p in def_files for p, o in refs.get(name, ())):
+        if all(name in o and p in def_files for p, o in refs.get(name, ())):
             dead += [f"{p.relative_to(ROOT)}:{line} {name}" for p, line in sites]
     return sorted(dead)
 

@@ -6,6 +6,10 @@ Every writer that lands time-partitioned data commits through
 copy of the table format with its own partition column, dedup and
 compaction.  Pure AST scan, no Spark.  ``Window.partitionBy`` chains are
 window specs, not writers, and are ignored.
+
+Nor may any module set ``spark.sql.sources.partitionOverwriteMode`` on the
+session: a partition rewrite passes it as a write option, so a later
+overwrite elsewhere in the session keeps its own mode.
 """
 
 from __future__ import annotations
@@ -16,13 +20,8 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "questdb_spark"
 
-ALLOWED = {
-    "questdb_spark/table.py",
-    # the dialect's mat-view storage keeps its own date partitions until it
-    # moves onto TimeTable with an A/B of its refresh cost (ROADMAP.md open
-    # item 2); it runs inside the measured wal_ingest loop
-    "questdb_spark/sqlfront/matview_ddl.py",
-}
+ALLOWED = {"questdb_spark/table.py"}
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
 def _chain_root(node: ast.AST) -> ast.AST:
@@ -31,13 +30,18 @@ def _chain_root(node: ast.AST) -> ast.AST:
     return node
 
 
-def writer_partition_calls() -> list[str]:
-    found = []
+def _modules():
     for path in sorted(PACKAGE.rglob("*.py")):
         rel = path.relative_to(ROOT).as_posix()
+        yield rel, ast.parse(path.read_text(), filename=rel)
+
+
+def writer_partition_calls() -> list[str]:
+    found = []
+    for rel, tree in _modules():
         if rel in ALLOWED:
             continue
-        for n in ast.walk(ast.parse(path.read_text(), filename=rel)):
+        for n in ast.walk(tree):
             if not (
                 isinstance(n, ast.Call)
                 and isinstance(n.func, ast.Attribute)
@@ -54,3 +58,26 @@ def writer_partition_calls() -> list[str]:
 def test_partitioned_writes_only_in_table_module():
     calls = writer_partition_calls()
     assert not calls, "partitionBy outside table.py:\n" + "\n".join(calls)
+
+
+def session_overwrite_mode_sets() -> list[str]:
+    found = []
+    for rel, tree in _modules():
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "set"
+                and isinstance(n.func.value, ast.Attribute)
+                and n.func.value.attr == "conf"
+                and n.args
+                and isinstance(n.args[0], ast.Constant)
+                and n.args[0].value == OVERWRITE_MODE
+            ):
+                found.append(f"{rel}:{n.lineno}")
+    return found
+
+
+def test_no_session_wide_partition_overwrite_mode():
+    calls = session_overwrite_mode_sets()
+    assert not calls, f"conf.set of {OVERWRITE_MODE}:\n" + "\n".join(calls)

@@ -201,7 +201,7 @@ def test_matview_incremental_overwrites_only_touched_partitions(spark, tmp_path)
     eng.register("src", eng.ddl_read("src"), designated_ts="ts")
     eng.sql("CREATE MATERIALIZED VIEW mv AS (SELECT ts, sum(v) AS sv FROM src SAMPLE BY 1h)")
     d = eng.matviews["mv"]
-    old_dir = os.path.join(d.path, "__mv_part=2024-01-01")
+    old_dir = os.path.join(d.table.path, "part_date=2024-01-01")
     mtime_before = max(os.path.getmtime(os.path.join(old_dir, f)) for f in os.listdir(old_dir))
     time.sleep(1.1)
     eng.sql("INSERT INTO src VALUES (TIMESTAMP '2024-01-06 01:00:00', 6.0)")

@@ -363,3 +363,80 @@ def test_state_json_torn_write_raises(spark, tmppath):
             f.truncate(5)
         with pytest.raises(ValueError):
             read()
+
+
+def test_write_replaces_after_dedup_upserts(spark, tmppath):
+    """``write`` replaces the whole table even after dedup upserts, which
+    overwrite partitions dynamically: none of the earlier rows survive."""
+    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    cols = ["id", "sym", "ts", "price"]
+    t.append(spark.createDataFrame([(1, "a", datetime(2024, 1, 1, 10), 1.0)], cols), seq=1)
+    t.append(spark.createDataFrame([(2, "a", datetime(2024, 1, 2, 10), 2.0)], cols), seq=2)
+    t.write(spark.createDataFrame([(3, "a", datetime(2024, 1, 3, 10), 3.0)], cols))
+    assert [r["id"] for r in t.read().collect()] == [3]
+
+
+def test_upsert_leaves_session_overwrite_mode(spark, tmppath):
+    """A dedup upsert rewrites partitions with a per-write overwrite mode;
+    the session's ``partitionOverwriteMode`` reads the same afterwards."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+        df = spark.createDataFrame(_mk_rows(), ["id", "sym", "ts", "price"])
+        t.append(df, seq=1)
+        t.append(df.withColumn("price", F.col("price") + 1), seq=2)
+        assert spark.conf.get(key) == "static"
+        assert sorted(r["price"] for r in t.read().collect()) == [2.0, 3.0, 4.0, 5.0, 6.0]
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_compact_crash_at_rename_in_keeps_old_table(spark, tmppath, monkeypatch):
+    """A crash between moving the live directory out and the rewrite in:
+    a table opened afterwards reads the rows as they were before
+    ``compact``."""
+    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    df = spark.createDataFrame(_mk_rows(), ["id", "sym", "ts", "price"])
+    t.append(df, seq=1)
+    t.append(df.filter(F.col("id") == 5).withColumn("price", F.lit(50.0)), seq=2)
+    want = sorted(tuple(r) for r in t.read().collect())
+    rename = os.rename
+
+    def rename_in_fails(src, dst):
+        if os.fspath(dst) == tmppath:
+            raise OSError("injected crash at the rename-in")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename_in_fails)
+    with pytest.raises(OSError, match="injected"):
+        t.compact()
+    monkeypatch.undo()
+    t2 = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    assert sorted(tuple(r) for r in t2.read().collect()) == want
+
+
+def test_compact_crash_after_rename_in_finishes_on_open(spark, tmppath, monkeypatch):
+    """A crash after the rewrite went in but before the sidecar state moved
+    across: opening the table finishes the swap, so the detached partition
+    and the compacted rows are both there."""
+    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    t.append(spark.createDataFrame(_mk_rows(), ["id", "sym", "ts", "price"]), seq=0)
+    t.detach_partition("2024-01-01")
+    want = sorted(tuple(r) for r in t.read().collect())
+    rename = os.rename
+
+    def carry_fails(src, dst):
+        if os.fspath(src).startswith(tmppath + ".aside" + os.sep):
+            raise OSError("injected crash while carrying sidecars")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", carry_fails)
+    with pytest.raises(OSError, match="injected"):
+        t.compact()
+    monkeypatch.undo()
+    t2 = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    assert not os.path.exists(tmppath + ".aside")
+    assert sorted(tuple(r) for r in t2.read().collect()) == want
+    assert t2.attach_partition("2024-01-01") == ["2024-01-01"]
