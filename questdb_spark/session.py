@@ -20,8 +20,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_session(
     app_name: str = "questdb-spark",
@@ -32,11 +30,14 @@ def get_session(
     """Create (or fetch) a SparkSession configured for this engine.
 
     On a real cluster the same configs apply unchanged; only ``master``
-    differs. Tests run on ``local[$SPARK_GRAFT_CPUS]``.
+    differs. Tests run on ``local[$SPARK_GRAFT_CPUS]``; without that
+    variable the default master is ``local[*]``.  The shuffle width is
+    ``shuffle_partitions`` when given, else the started context's
+    ``defaultParallelism`` (N for ``local[N]``, the executors' cores on a
+    cluster), so a shuffle is as wide as the cores that run it.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -52,19 +53,14 @@ def get_session(
         # (in-row pair enumeration, decimal-limb folds: dedup_jaccard
         # 2.3x, l2price 2.0x, regr_bit_aggs 1.7x slower) — byte-based
         # coalescing is blind to CPU density.  This engine keeps the
-        # default (true: respect parallelism) and exposes the knob; at
-        # cluster scale those same stages carry real bytes and either
-        # setting yields advisory-sized partitions.
+        # default (true: respect parallelism); at cluster scale those same
+        # stages carry real bytes and either setting yields advisory-sized
+        # partitions.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY_BYTES", str(64 * 1024 * 1024)),
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(64 * 1024 * 1024)
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # openCostInBytes is Spark's per-file seek model (default 4 MB): it
@@ -77,10 +73,7 @@ def get_session(
         # kernel maps (simhash warm 1.13s -> 0.77s).  Large files split by
         # maxPartitionBytes regardless, so cluster-scale plans are
         # unchanged.
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", str(1024 * 1024)),
-        )
+        .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
         # Python-worker channel over a Unix domain socket instead of TCP
         # loopback (Spark 4 feature): every Arrow-UDF task pays a
         # JVM<->worker handshake, and the suite runs hundreds of Arrow
@@ -107,6 +100,14 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if shuffle_partitions:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in conf:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
+    return spark

@@ -165,10 +165,11 @@ def execute(eng: QdbEngine, sql: str) -> DataFrame:
 def _reindex(eng: QdbEngine, s: str) -> DataFrame:
     """``REINDEX TABLE t [COLUMN c] [LOCK EXCLUSIVE]``
     (SqlCompilerImpl.compileReindex + IndexBuilder): the reference rebuilds
-    a symbol column's bitmap index files. This engine's "index" is parquet
-    row-group statistics + dictionary pages, so the honest rebuild is a
-    partition compaction pass — fragmented partitions are rewritten as one
-    sorted file, refreshing exactly the structures pruning reads."""
+    a symbol column's bitmap index files. This engine's "index" is a
+    symbol column's parquet row-group statistics + dictionary pages, so the
+    honest rebuild is a partition compaction pass — fragmented partitions
+    are rewritten as one sorted file, refreshing those structures (the
+    INT96 ts column carries no row-group statistics to refresh)."""
     m = re.match(
         r"^reindex\s+table\s+(\w+)(?:\s+column\s+(\w+))?"
         r"(?:\s+partition\s+'[^']*')?(?:\s+lock\s+exclusive)?$",
@@ -577,21 +578,21 @@ def _insert(eng: QdbEngine, s: str) -> DataFrame:
             sel.append(F.lit(None).cast(tgt_fields[c]).alias(c))
     aligned = df.select(*sel)
 
-    merge_path = t.dedup_enabled and _has_files(t)
+    merged = False
     if _has_files(t) or t.dedup_enabled:
         # dedup tables always go through append: the first commit needs
         # the in-batch last-write-wins pass too (string_dedup.test)
         eng.ddl_seq[name] = eng.ddl_seq.get(name, 0) + 1
-        t.append(aligned, seq=eng.ddl_seq[name])
+        merged = t.append(aligned, seq=eng.ddl_seq[name])
     else:
         t.write(aligned)
     # table_writer_metrics counters: one commit; rows only when statically
     # sized (VALUES) — see the status-row note below for why INSERT SELECT
-    # is never re-counted; the dedup merge-on-append path IS the O3/WAL
-    # merge machinery, so it counts as an o3 commit
+    # is never re-counted; a commit that ran the O3 merge (rows at or
+    # before the table's max ts) counts as an o3 commit
     wm = eng.writer_metrics
     wm["total_commits"] += 1
-    if merge_path:
+    if merged:
         wm["o3commits"] += 1
     if n_rows is not None:
         wm["committed_rows"] += n_rows
@@ -688,9 +689,10 @@ def _alter_column_hint(t: TimeTable, rest: str) -> str:
     """ALTER COLUMN storage hints (alterTableColumnAddIndex/
     ColumnDropIndex/ColumnCacheFlag/ChangeSymbolCapacity): validated and
     recorded in table params, physically no-ops — parquet dictionary
-    encoding substitutes for the symbol table (capacity/cache) and
-    row-group min/max + dictionary pushdown for the bitmap index
-    (SURVEY §2.2's declared mapping)."""
+    encoding substitutes for the symbol table (capacity/cache) and the
+    symbol column's row-group min/max + dictionary pushdown for the bitmap
+    index (SURVEY §2.2's declared mapping; the INT96 ts column has no
+    row-group statistics)."""
     hm = re.match(
         r"alter\s+column\s+(\w+)\s+"
         r"(add\s+index(?:\s+capacity\s+(\d+))?|drop\s+index"

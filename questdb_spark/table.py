@@ -9,11 +9,12 @@ its designated timestamp with optional dedup keys
 
 Spark mapping: a parquet directory partitioned by `part_date =
 date_trunc(unit, ts)`, rows sorted by ts within files. That layout gives
-Catalyst partition pruning + row-group min/max pruning on every time
-predicate — the interval-scan machinery of the reference for free. Writes
-go through append (WAL-style) or upsert-compaction; UPDATE/DELETE are
-partition rewrites touching only affected partitions (the O3 merge
-discipline).
+Catalyst partition pruning on every time predicate — the interval scan of
+the reference at partition grain.  Row groups are NOT pruned by ts: Spark
+writes the ts column as INT96, which carries no min/max statistics.
+Writes go through append (WAL-style): in-order DEDUP commits add files,
+O3 ones merge into their partitions; UPDATE/DELETE are partition rewrites
+touching only affected partitions (the O3 merge discipline).
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
 from .operators.intervals import parse_interval_string
@@ -128,11 +130,13 @@ class TimeTable:
         # table params (alterTableSetParam: maxUncommittedRows, o3MaxLag)
         # and column storage hints (symbol capacity / index / cache) — all
         # recorded, none change this engine's physical plan: parquet
-        # dictionary encoding + row-group min/max pruning substitute for
-        # symbol tables and bitmap indexes (SURVEY §2.2)
+        # dictionary encoding + row-group min/max pruning (which symbol
+        # columns carry) substitute for symbol tables and bitmap indexes
+        # (SURVEY §2.2)
         self.params: dict[str, str] = {}
         self._declared_cols: list[str] | None = None  # lazy, meta-backed
         self._recover_swap()  # a whole-table rewrite cut short by a crash
+        self._recover_vacuum()
 
     # -- write path --------------------------------------------------------
     def _with_partition(self, df: DataFrame, ts_col: str | None = None) -> DataFrame:
@@ -304,6 +308,7 @@ class TimeTable:
         takes ``df``'s rows for the rest; untouched partitions are never
         rewritten.  ``since`` reads in the session time zone, like a
         TIMESTAMP literal."""
+        self._set_max_ts(None)  # ``df`` may carry any ts
         phys_ts = self._physical_name(self.ts_col)
         inc = self._with_partition(self._to_physical(df), phys_ts)
         cut = F.lit(since.strftime("%Y-%m-%d %H:%M:%S.%f")).cast("timestamp")
@@ -314,10 +319,11 @@ class TimeTable:
         )
         self._rewrite_partitions(head.unionByName(inc))
 
-    def append(self, df: DataFrame, seq: int = 0) -> None:
+    def append(self, df: DataFrame, seq: int = 0) -> bool:
         """WAL-style append; `seq` orders writes for dedup resolution.
         Incoming frames use the LOGICAL schema; renamed columns are mapped
         back to their on-disk names so every partition stays mergeable.
+        Returns True when the commit ran the O3 merge.
 
         With DEDUP UPSERT KEYS this applies the reference's WAL-merge
         semantics EAGERLY (``ApplyWal2TableJob.java:87`` + ``dedup.cpp``,
@@ -332,16 +338,21 @@ class TimeTable:
           ``change_dedup_cols.test``);
         - non-matching incoming rows are appended.
 
-        Only partitions containing incoming keys are rewritten (ts is part
-        of the dedup grain, so a key match can never live in another
-        partition) — partition-granular like the O3 merge, so a 100 TB
-        table pays for touched partitions only and reads stay merge-free
-        (no per-read window shuffle)."""
+        The commit splits like the reference's WAL apply (``TxWriter``
+        max timestamp, ``O3PartitionJob``): the meta journal's ``max_ts``
+        bounds every live row's ts from above, and a batch whose min ts
+        is past it cannot share a (keys, ts) with a stored row, so it is
+        appended in one write job without reading storage.  Any other
+        batch is merged: only partitions containing incoming keys are
+        rewritten (ts is part of the dedup grain, so a key match can never
+        live in another partition) — partition-granular like the O3 merge,
+        so a 100 TB table pays for touched partitions only and reads stay
+        merge-free (no per-read window shuffle)."""
         if self._wal_state()["suspended"]:
             # suspended WAL (alterTableSuspend): commits park in the
             # pending queue — durable, invisible to reads — until RESUME
             self._buffer_wal_txn(df, seq)
-            return
+            return False
         base = df
         replayed = "__wal_ord" in base.columns  # parked txn being resumed
         if replayed:
@@ -361,40 +372,82 @@ class TimeTable:
             # latest_on emits keys-first — restore the incoming column order
             # so every partition file keeps ONE schema order (mergeSchema
             # reads, and positional INSERTs, depend on it)
-            base = base.select(*df.columns, self.seq_col)
-            if _any_parquet(self.path):
-                self._merge_upsert(base)
-                return
-        elif replayed:
+            return self._upsert(base.select(*df.columns, self.seq_col))
+        if replayed:
             base = base.drop("__wal_ord")
-        base = self._to_physical(base)  # dedup first: keys are logical names
+        # rows of a plain append may land anywhere, and the bound goes
+        # first: a crash after the data write must not leave rows above it
+        self._set_max_ts(None)
         phys_ts = self._physical_name(self.ts_col)
+        self._append_rows(self._with_partition(self._to_physical(base), phys_ts))
+        return False
+
+    def _append_rows(self, out: DataFrame) -> None:
+        """Add ``out`` (physical schema, partition column set) as new files;
+        no stored file is read or rewritten."""
         had_files = _any_parquet(self.path)
-        out = self._with_partition(base, phys_ts)
         (
-            out.repartition(self._write_width(base), PARTITION_COL)
-            .sortWithinPartitions(phys_ts)
+            out.repartition(self._write_width(out), PARTITION_COL)
+            .sortWithinPartitions(self._physical_name(self.ts_col))
             .write.mode("append")
             .partitionBy(PARTITION_COL)
             .parquet(self.path)
         )
         self._note_write(out.schema, replace=not had_files, had_files=had_files)
 
-    def _merge_upsert(self, inc: DataFrame) -> None:
-        """Merge an (in-batch-deduped, seq-stamped, logical-schema) frame
-        into existing storage under the current dedup keys."""
-        from functools import reduce
-
+    def _upsert(self, inc: DataFrame) -> bool:
+        """Commit an (in-batch-deduped, seq-stamped, logical-schema) frame
+        under the current dedup keys: appended when every row is past the
+        table's ``max_ts``, merged into its partitions otherwise.  Returns
+        True when it merged."""
         phys_ts = self._physical_name(self.ts_col)
         inc = self._with_partition(self._to_physical(inc), phys_ts)
         # the incoming frame's lineage (often an INSERT SELECT over a real
-        # query) is consumed three times below — partition listing, the
-        # overwrite join, the anti join — persist it for the merge
-        inc_cached = inc.persist()
-        inc = inc_cached
-        # touched partitions: one value per incoming partition (metadata-
-        # scale collect, same economics as update_where)
-        parts = [r[0] for r in inc.select(PARTITION_COL).distinct().collect()]
+        # query) is consumed more than once below — persist it
+        inc = inc.persist()
+        try:
+            # one metadata-scale collect: the touched partitions and the
+            # batch's ts range (a null ts leaves lo unset: it merges)
+            ts_us = self._ts_us(inc, phys_ts)
+            stats = (
+                inc.groupBy(PARTITION_COL)
+                .agg(
+                    F.min(ts_us).alias("lo"),
+                    F.max(ts_us).alias("hi"),
+                    (F.count(F.lit(1)) - F.count(phys_ts)).alias("nulls"),
+                )
+                .collect()
+            )
+            parts = [r[0] for r in stats]
+            nulls = any(r["nulls"] for r in stats)
+            lo = None if nulls else min((r["lo"] for r in stats), default=None)
+            hi = max((r["hi"] for r in stats if r["hi"] is not None), default=None)
+            has_files = _any_parquet(self.path)
+            bound = self._meta().get("max_ts") if has_files else None
+            if has_files and bound is None:
+                # no bound (a legacy directory, or after a write that
+                # dropped it): merge, then take it from the newest partition
+                self._merge_into(inc, parts)
+                self._set_max_ts(self._newest_max_us())
+                return True
+            # raise the bound BEFORE the data write: a crash after the
+            # write then leaves no row above it, and a resent batch merges
+            if hi is not None:
+                self._set_max_ts(hi if bound is None else max(hi, bound))
+            if not has_files or (lo is not None and lo > bound):
+                self._append_rows(inc)  # no stored row can match
+                return False
+            self._merge_into(inc, parts)
+            return True
+        finally:
+            inc.unpersist()
+
+    def _merge_into(self, inc: DataFrame, parts: list) -> None:
+        """The O3 merge: rewrite the partitions ``parts`` with ``inc``
+        (physical schema, partition column set) upserted into them."""
+        from functools import reduce
+
+        phys_ts = self._physical_name(self.ts_col)
         ex = self._read_physical()
         ex = ex.filter(F.col(PARTITION_COL).isin(parts))
         # align schemas both ways (column tops: partitions written before an
@@ -425,7 +478,46 @@ class TimeTable:
         added = inc.alias("i").join(ex.alias("e"), cond, "left_anti")
         merged = overwritten.select(*out_cols).unionByName(added.select(*out_cols))
         self._rewrite_partitions(merged)
-        inc_cached.unpersist()
+
+    # -- max_ts: the reference's _txn max timestamp ------------------------
+    # An upper bound on the designated ts of every live row, in epoch
+    # micros, kept in the meta journal.  A bound that is too high only
+    # costs a merge; one that is too low would let a batch skip the merge
+    # and duplicate rows.  So a DEDUP commit raises it before its data
+    # write; plain appends, ``replace_from`` and ``attach_partition`` drop
+    # it before they write; ``write()`` starts a journal without it; ops
+    # that only remove rows or keep every ts (delete, drop, detach, TTL,
+    # UPDATE, ``vacuum``, ``compact``) keep it.
+
+    def _ts_us(self, df: DataFrame, phys_ts: str) -> Column:
+        """The designated ts as epoch micros; null when the column is not a
+        TIMESTAMP (a ts-less table), which keeps every commit on the merge."""
+        if isinstance(df.schema[phys_ts].dataType, TimestampType):
+            return F.unix_micros(F.col(phys_ts))
+        return F.lit(None).cast("long")
+
+    def _set_max_ts(self, us: int | None) -> None:
+        meta = self._meta()
+        if meta.get("max_ts") == us:
+            return
+        if us is None:
+            meta.pop("max_ts")
+        else:
+            meta["max_ts"] = us
+        _write_json(self._meta_path, meta)
+
+    def _newest_max_us(self) -> int | None:
+        """Max ts (epoch micros) of the newest partition directory — the
+        table's max ts, since partitions are ts-ordered.  One small job
+        over that directory only."""
+        parts = sorted(
+            p for p in os.listdir(self.path) if p.startswith(f"{PARTITION_COL}=")
+        )
+        if not parts:
+            return None
+        newest = self.spark.read.parquet(os.path.join(self.path, parts[-1]))
+        phys_ts = self._physical_name(self.ts_col)
+        return newest.agg(F.max(self._ts_us(newest, phys_ts))).collect()[0][0]
 
     # -- WAL lifecycle: SUSPEND / RESUME ------------------------------------
     # Reference model (alterTableSuspend/alterTableResume,
@@ -718,15 +810,16 @@ class TimeTable:
         return df
 
     def scan_interval(self, interval: str, dedup: bool = True) -> DataFrame:
-        """QuestDB interval scan: `'2024-01'`-style strings become partition
-        + row-group pruned range reads (IntervalFwdPartitionFrameCursor)."""
+        """QuestDB interval scan: `'2024-01'`-style strings become
+        partition-pruned range reads (IntervalFwdPartitionFrameCursor)."""
         from datetime import timedelta
 
         lo, hi = parse_interval_string(interval)
         ts = F.col(self.ts_col)
         # Spark can't derive part_date bounds from the ts predicate — add the
         # partition filter explicitly so whole partition dirs are skipped
-        # (the ts PushedFilters then prune row groups within survivors).
+        # (the ts PushedFilters prune no row groups: the INT96 ts column
+        # has no min/max statistics, so survivors are read whole).
         # Filter BEFORE dedup: ts is part of the dedup grain, so range-
         # filtering first is semantics-preserving and keeps the pushdown.
         # Bounds are truncated to the PARTITION unit: a partition's value is
@@ -752,6 +845,7 @@ class TimeTable:
         """UPDATE ... SET ... WHERE ...: rewrite ONLY partitions containing
         matching rows (UpdateOperatorImpl; partition-granular like O3)."""
         self._require_not_suspended()
+        self._refuse_ts_update(assignments)
         df = self._logical(
             self._read_physical()
         )
@@ -779,6 +873,7 @@ class TimeTable:
         multiple FROM matches per row one arbitrary match applies (the
         reference updates the row once per join match in storage order; a
         batch rewrite keeps exactly one row)."""
+        self._refuse_ts_update(assignments)
         df = self._logical(
             self._read_physical()
         ).withColumn("__rid", F.monotonically_increasing_id())
@@ -798,6 +893,15 @@ class TimeTable:
             )
         sub = sub.drop(*other.columns).dropDuplicates(["__rid"]).drop("__rid")
         self._rewrite_partitions(self._to_physical(sub))
+
+    def _refuse_ts_update(self, assignments: dict[str, Column]) -> None:
+        """The reference refuses an UPDATE of the designated timestamp: a
+        new ts would belong in another partition, which an in-place
+        partition rewrite cannot move it to."""
+        if self.ts_col.lower() in (name.lower() for name in assignments):
+            raise ValueError(
+                f"cannot update designated timestamp column: {self.ts_col}"
+            )
 
     def delete_where(self, predicate: Column) -> None:
         self._require_not_suspended()
@@ -923,6 +1027,7 @@ class TimeTable:
         from datetime import datetime
 
         lo, hi = parse_interval_string(interval)
+        self._set_max_ts(None)  # attached rows may lie past the bound
 
         def start_of(name: str) -> datetime:
             v = name.split("=", 1)[1]
@@ -987,7 +1092,10 @@ class TimeTable:
         at append time)."""
         if not self.dedup_enabled:
             return
+        bound = self._meta().get("max_ts")
         self.write(self.read(dedup=True).withColumn(self.seq_col, F.lit(-1)))
+        if bound is not None:
+            self._set_max_ts(bound)  # every ts kept: the bound still holds
 
     @property
     def _aside_path(self) -> str:
@@ -1035,14 +1143,10 @@ class TimeTable:
         if len(parts) < 2:
             return []  # only the active partition
         # max ts lives in the newest partition — scan just that directory
-        newest = os.path.join(self.path, parts[-1])
-        max_ts = (
-            self.spark.read.parquet(newest)
-            .agg(F.max(self._physical_name(self.ts_col)))
-            .collect()[0][0]
-        )
-        if max_ts is None:
+        max_us = self._newest_max_us()
+        if max_us is None:
             return []
+        max_ts = datetime(1970, 1, 1) + timedelta(microseconds=max_us)
 
         def start_of(pv: str) -> datetime:
             if self.partition_by == "hour":
@@ -1069,6 +1173,11 @@ class TimeTable:
                 break  # partitions are time-sorted; the rest are younger
         return evicted
 
+    @property
+    def _vacuum_root(self) -> str:
+        # dot prefix: Spark's discovery and ``_any_parquet`` skip it
+        return os.path.join(self.path, ".vacuum")
+
     def vacuum(self, max_files_per_partition: int = 1) -> int:
         """VACUUM TABLE: reclaim storage (``VacuumColumnVersions.java``;
         the parquet analog of purging superseded column versions is
@@ -1076,7 +1185,16 @@ class TimeTable:
         Partitions holding more than ``max_files_per_partition`` parquet
         files are rewritten as one sorted file; returns the number of
         partitions compacted. Partition-granular — a 100 TB table vacuums
-        only its fragmented partitions."""
+        only its fragmented partitions.
+
+        Each copy is staged in ``.vacuum/new/`` and swapped in like
+        ``_swap_in``: the live partition is renamed aside to
+        ``.vacuum/old/``, the copy renamed in, and only then the aside
+        copy deleted; ``_recover_vacuum`` finishes or undoes a swap a
+        crash cut short."""
+        self._recover_vacuum()
+        new_root = os.path.join(self._vacuum_root, "new")
+        old_root = os.path.join(self._vacuum_root, "old")
         compacted = 0
         for p in sorted(os.listdir(self.path)):
             if not p.startswith(f"{PARTITION_COL}="):
@@ -1085,18 +1203,38 @@ class TimeTable:
             files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
             if len(files) <= max_files_per_partition:
                 continue
-            tmp = pdir + ".vacuum"
+            new, old = os.path.join(new_root, p), os.path.join(old_root, p)
             (
                 self.spark.read.option("mergeSchema", "true").parquet(pdir)
                 .sort(self._physical_name(self.ts_col))
                 .coalesce(1)
                 .write.mode("overwrite")
-                .parquet(tmp)
+                .parquet(new)
             )
-            shutil.rmtree(pdir)
-            os.rename(tmp, pdir)
+            os.makedirs(old_root, exist_ok=True)
+            os.rename(pdir, old)
+            os.rename(new, pdir)
+            shutil.rmtree(old)
             compacted += 1
+        shutil.rmtree(self._vacuum_root, ignore_errors=True)
         return compacted
+
+    def _recover_vacuum(self) -> None:
+        """Put back every partition a cut-short ``vacuum`` left aside: its
+        staged copy when one is there (it was complete before the live
+        directory moved), else the aside original; then drop the staging
+        area."""
+        old_root = os.path.join(self._vacuum_root, "old")
+        if os.path.isdir(old_root):
+            for p in os.listdir(old_root):
+                live = os.path.join(self.path, p)
+                if not os.path.exists(live):
+                    new = os.path.join(self._vacuum_root, "new", p)
+                    if not os.path.exists(new):
+                        new = os.path.join(old_root, p)
+                    os.rename(new, live)
+        if os.path.exists(self._vacuum_root):
+            shutil.rmtree(self._vacuum_root)
 
     def _rewrite_partitions(self, sub: DataFrame) -> None:
         (

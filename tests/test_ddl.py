@@ -1330,3 +1330,54 @@ def test_dml_on_views_rejected(eng):
     ):
         with pytest.raises(ValueError, match=r"cannot modify materialized view \[view=mvg\]"):
             eng.sql(stmt)
+
+
+def test_o3commits_counts_only_merging_commits(eng):
+    """``o3commits`` counts the commits that carried rows at or before the
+    table's max ts (the O3 merge), not every commit into a DEDUP table."""
+    eng.sql(
+        "CREATE TABLE o3 (ts TIMESTAMP, k SYMBOL, v DOUBLE) TIMESTAMP(ts) "
+        "PARTITION BY DAY WAL DEDUP UPSERT KEYS(ts, k)"
+    )
+    eng.sql("INSERT INTO o3 VALUES (TIMESTAMP '2024-01-01 10:00:00', 'a', 1.0)")
+    eng.sql("INSERT INTO o3 VALUES (TIMESTAMP '2024-01-02 10:00:00', 'a', 2.0)")
+    eng.sql("INSERT INTO o3 VALUES (TIMESTAMP '2024-01-01 10:00:00', 'a', 3.0)")
+    got = dict(rows(eng.sql("SELECT * FROM table_writer_metrics()")))
+    assert (got["total_commits"], got["o3commits"]) == (3, 1)
+    assert sorted(rows(eng.sql("SELECT v FROM o3"))) == [(2.0,), (3.0,)]
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "UPDATE t SET ts = TIMESTAMP '2024-01-05 01:00:00' WHERE k = 'a'",
+        "UPDATE t SET v = u.v, ts = u.ts FROM u WHERE t.k = u.k",
+    ],
+    ids=["where", "from"],
+)
+def test_update_of_designated_ts_is_refused(eng, stmt):
+    """An UPDATE that assigns the designated timestamp raises, like the
+    reference, and leaves the table as it was: a partition rewrite cannot
+    move a row to the partition its new ts belongs in."""
+    import os
+
+    eng.sql(
+        "CREATE TABLE t (ts TIMESTAMP, k SYMBOL, v DOUBLE) TIMESTAMP(ts) "
+        "PARTITION BY DAY WAL DEDUP UPSERT KEYS(ts, k)"
+    )
+    eng.sql(
+        "INSERT INTO t VALUES (TIMESTAMP '2024-01-01 01:00:00', 'a', 1.0), "
+        "(TIMESTAMP '2024-01-01 02:00:00', 'b', 2.0)"
+    )
+    eng.sql("CREATE TABLE u (ts TIMESTAMP, k SYMBOL, v DOUBLE) TIMESTAMP(ts)")
+    eng.sql("INSERT INTO u VALUES (TIMESTAMP '2024-01-05 01:00:00', 'a', 9.0)")
+    path = eng.ddl_tables["t"].path
+    before = sorted(rows(eng.sql("SELECT * FROM t")))
+    files = sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+    with pytest.raises(ValueError, match="designated timestamp"):
+        eng.sql(stmt)
+    assert sorted(rows(eng.sql("SELECT * FROM t"))) == before
+    assert sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs) == files
+    eng.sql("INSERT INTO t VALUES (TIMESTAMP '2024-01-05 01:00:00', 'a', 9.0)")
+    assert eng.sql("SELECT * FROM t WHERE k = 'a'").count() == 2
+    assert rows(eng.sql("SELECT k FROM t WHERE ts IN '2024-01-05'")) == [("a",)]

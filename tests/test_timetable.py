@@ -3,7 +3,9 @@ DELETE/DROP PARTITION partition-rewrite maintenance."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import tempfile
 from datetime import datetime
 
@@ -440,3 +442,166 @@ def test_compact_crash_after_rename_in_finishes_on_open(spark, tmppath, monkeypa
     assert not os.path.exists(tmppath + ".aside")
     assert sorted(tuple(r) for r in t2.read().collect()) == want
     assert t2.attach_partition("2024-01-01") == ["2024-01-01"]
+
+
+# -- in-order commits and the max_ts bound --------------------------------
+
+_COLS = ["id", "sym", "ts", "price"]
+
+
+def _parquet_mtimes(path):
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+def _keyed(t):
+    return sorted((r["sym"], r["ts"], r["price"]) for r in t.read().collect())
+
+
+def test_in_order_commit_only_adds_files(spark, tmppath):
+    """A DEDUP batch whose every ts is past the table's max is appended:
+    every stored file stays in place, same name and mtime, even in the
+    partition the batch lands in."""
+    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    t.append(spark.createDataFrame(_mk_rows(), _COLS), seq=1)
+    before = _parquet_mtimes(tmppath)
+    batch = [
+        (6, "a", datetime(2024, 1, 3, 10), 6.0),  # into the newest partition
+        (7, "b", datetime(2024, 1, 4, 8), 7.0),  # a new partition
+    ]
+    merged = t.append(spark.createDataFrame(batch, _COLS), seq=2)
+    after = _parquet_mtimes(tmppath)
+    assert {p: after.get(p) for p in before} == before
+    assert len(after) > len(before)
+    assert merged is False
+    assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 3, 4, 5, 6, 7]
+
+
+def test_batch_starting_at_max_ts_upserts(spark, tmppath):
+    """A batch whose min ts EQUALS the table's max may share a (keys, ts)
+    with a stored row, so it merges: the stored key upserts to one row."""
+    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    t.append(spark.createDataFrame(_mk_rows(), _COLS), seq=1)
+    batch = [
+        (50, "a", datetime(2024, 1, 3, 9), 50.0),  # the max ts, stored key
+        (60, "b", datetime(2024, 1, 3, 10), 60.0),
+    ]
+    t.append(spark.createDataFrame(batch, _COLS), seq=2)
+    got = _keyed(t)
+    assert len(got) == 6
+    assert [p for s, ts, p in got if s == "a" and ts == datetime(2024, 1, 3, 9)] == [50.0]
+
+
+def test_resend_after_crash_past_data_write_upserts(spark, tmppath, monkeypatch):
+    """The bound is raised BEFORE the data write: a commit that dies right
+    after writing its rows, resent through a new table handle, merges and
+    leaves the row count unchanged."""
+    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    t.append(spark.createDataFrame(_mk_rows(), _COLS), seq=1)
+    batch = spark.createDataFrame(
+        [(6, "a", datetime(2024, 1, 4, 1), 6.0), (7, "b", datetime(2024, 1, 4, 2), 7.0)],
+        _COLS,
+    )
+
+    def crash(*_a, **_k):
+        raise OSError("injected crash after the data write")
+
+    monkeypatch.setattr(TimeTable, "_note_write", crash)
+    with pytest.raises(OSError, match="injected"):
+        t.append(batch, seq=2)
+    monkeypatch.undo()
+    t2 = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    n = t2.read().count()
+    assert n == 7
+    t2.append(batch, seq=2)
+    assert t2.read().count() == n
+
+
+def test_attach_newest_partition_then_commit_upserts(spark, tmppath):
+    """Attaching drops the bound: the attached newest partition holds rows
+    past the bound a commit after the detach derived, and a commit into
+    its range must merge with them."""
+    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    t.append(spark.createDataFrame(_mk_rows(), _COLS), seq=1)
+    t.detach_partition("2024-01-03")
+    # a directory written before the bound existed: the next commit merges
+    # and derives the bound from the newest live partition (2024-01-02)
+    meta = t._meta()
+    meta.pop("max_ts", None)
+    with open(t._meta_path, "w") as f:
+        json.dump(meta, f)
+    late = [(8, "b", datetime(2024, 1, 2, 1), 8.0)]
+    t.append(spark.createDataFrame(late, _COLS), seq=2)
+    assert t.attach_partition("2024-01-03") == ["2024-01-03"]
+    upsert = [(9, "b", datetime(2024, 1, 3, 8), 90.0)]  # stored in 2024-01-03
+    t.append(spark.createDataFrame(upsert, _COLS), seq=3)
+    got = _keyed(t)
+    assert len(got) == 6
+    assert [p for s, ts, p in got if s == "b" and ts == datetime(2024, 1, 3, 8)] == [90.0]
+
+
+def test_dedup_enabled_after_plain_appends_merges(spark, tmppath):
+    """Plain appends drop the bound, so the first commit after DEDUP is
+    turned back on merges with the rows they wrote."""
+    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    t.append(spark.createDataFrame(_mk_rows(), _COLS), seq=1)
+    t.dedup_keys, t.dedup_enabled = [], False
+    plain = [(6, "a", datetime(2024, 1, 4, 9), 6.0)]
+    t.append(spark.createDataFrame(plain, _COLS), seq=2)
+    t.dedup_keys, t.dedup_enabled = ["sym"], True
+    again = [(7, "a", datetime(2024, 1, 4, 9), 70.0)]
+    t.append(spark.createDataFrame(again, _COLS), seq=3)
+    got = _keyed(t)
+    assert len(got) == 6
+    assert [p for s, ts, p in got if ts == datetime(2024, 1, 4, 9)] == [70.0]
+
+
+@pytest.mark.parametrize("step", ["write", "rename_aside", "rename_in", "drop_aside"])
+def test_vacuum_crash_keeps_rows(spark, tmppath, monkeypatch, step):
+    """A crash at any filesystem step of ``vacuum``: a table opened
+    afterwards reads exactly the rows from before the vacuum, and a second
+    vacuum completes."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    t = TimeTable(spark, tmppath, "ts")
+    df = spark.createDataFrame(_mk_rows(), _COLS)
+    for i in range(3):  # three files in each partition
+        t.append(df.withColumn("price", F.col("price") + i))
+    want = sorted(tuple(r) for r in t.read().collect())
+
+    def fail_on(name, real, nth=1):
+        seen = []
+
+        def wrapped(*a, **k):
+            if any(".vacuum" in os.fspath(x) for x in a if isinstance(x, (str, os.PathLike))):
+                seen.append(a)
+                if len(seen) == nth:
+                    if name == "write":
+                        real(*a, **k)  # the copy is complete, then the crash
+                    raise OSError(f"injected crash at {step}")
+            return real(*a, **k)
+
+        return wrapped
+
+    if step == "write":
+        monkeypatch.setattr(
+            DataFrameWriter, "parquet", fail_on("write", DataFrameWriter.parquet)
+        )
+    elif step in ("rename_aside", "rename_in"):
+        monkeypatch.setattr(
+            os, "rename", fail_on("rename", os.rename, 1 if step == "rename_aside" else 2)
+        )
+    else:
+        monkeypatch.setattr(shutil, "rmtree", fail_on("rmtree", shutil.rmtree))
+    with pytest.raises(OSError, match="injected"):
+        t.vacuum()
+    monkeypatch.undo()
+    t2 = TimeTable(spark, tmppath, "ts")
+    assert sorted(tuple(r) for r in t2.read().collect()) == want
+    assert not os.path.exists(os.path.join(tmppath, ".vacuum"))
+    t2.vacuum()
+    assert sorted(tuple(r) for r in t2.read().collect()) == want
