@@ -68,8 +68,9 @@ def sql_matview(spark: SparkSession, sf: str) -> DataFrame:
     (SqlCompilerImpl.java:3338 CREATE_MAT_VIEW dispatch,
     cairo/mv/MatViewRefreshJob.java:77 interval refresh). The view is built
     over the first ~2/3 of events, the rest is appended, and an INCREMENTAL
-    refresh brings it current — so the oracle equality proves the
-    bucket-merge path, not just create."""
+    refresh brings it current — so the oracle equality proves the refresh,
+    not just create.  The base is a registered frame, which has no change
+    log (only DDL tables keep one): a different frame refreshes FULL."""
     eng = _engine(spark, sf, {})
     ev = load_table(spark, sf, "events")
     # fixed cut ≈ 2/3 of the events span (2024-01-01..31). The oracle

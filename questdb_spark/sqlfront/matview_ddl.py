@@ -19,15 +19,20 @@ Spark-first lowering (batch twin of ``streaming/matview.py``):
   table written by the table writer: SAMPLE BY views are day-partitioned
   on their bucket column, LATEST ON and generic live views are
   unpartitioned;
-- incremental refresh tracks the base table's high-water mark (max
-  designated ts at last refresh — the batch stand-in for WAL txn ranges)
-  and recomputes only buckets >= bucket_floor(hwm); ``TimeTable.replace_from``
-  swaps that tail into the day partitions it touches and never rewrites
-  the others, so refresh I/O is proportional to NEW data, not view size —
-  the exact economics of the reference's interval iterator.  Every other
-  refresh replaces the whole view with ``TimeTable.write``.  A changed
-  row count below the high-water mark escalates an incremental refresh to
-  a full one (the O3 guard in ``_refresh``).
+- a refresh reads the base table's change log (``TimeTable.changes_since``,
+  the batch stand-in for the WAL txn ranges the reference's refresh job
+  reads) from the txn the view last consumed, kept in its checkpoint.
+  Nothing logged: the view stands.  Only added or upserted rows since, at
+  designated ts >= lo: a SAMPLE BY view recomputes the buckets >=
+  bucket_floor(lo), which ``TimeTable.replace_from`` swaps into the day
+  partitions they touch without rewriting the others, so refresh I/O is
+  proportional to the CHANGED data, not view size — the economics of the
+  reference's interval iterator; a LATEST ON view merges its stored rows
+  below lo with the base's latest rows at or above it.  Anything else (an
+  UPDATE, DELETE, dropped partition or column change, a log that does not
+  continue from the view's txn, a generic view's body) replaces the whole
+  view with ``TimeTable.write``.  A base that is not a DDL table has no
+  log: a different registered frame refreshes in full.
 """
 
 from __future__ import annotations
@@ -37,7 +42,7 @@ import os
 import re
 import shutil
 from dataclasses import dataclass, field
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F
@@ -77,13 +82,14 @@ class MatViewDef:
     ts_out: str  # output column carrying the bucket timestamp
     interval: str  # SAMPLE BY interval spec ('1h', '30m', ...); '' non-sampled
     live: bool = False  # LIVE VIEW: incremental refresh on every read
-    hwm: datetime | None = None  # base high-water mark at last refresh
     table: TimeTable | None = None  # the view's storage
     # general live views (cairo/lv/): the stored query may be any dialect
     # query, with shape-specific incremental strategies
     shape: str = "sample_by"  # sample_by | latest_on | generic
-    frozen_count: int = -1  # base rows below the incremental cutoff
-    base_count: int = -1  # total base rows at last refresh
+    # what the last refresh consumed: a DDL base's change-log position
+    # (log id, txn), or a registered base's frame (not checkpointed)
+    base_txn: tuple | None = None
+    base_frame: DataFrame | None = None
     # refresh scheduling (SqlParser.java:2590-2717, MatViewDefinition
     # REFRESH_TYPE_TIMER/PERIOD): TIMER views refresh when a read arrives
     # at/after next_due (the batch twin of the reference's timer job);
@@ -367,8 +373,7 @@ def _refresh_stmt(eng: QdbEngine, s: str) -> DataFrame:
         # table-level queue): the view keeps serving its stored state
         # until ALTER ... RESUME WAL applies the backlog
         return _status(eng, f"refresh_{mode}", name, "wal suspended; refresh parked")
-    n = _refresh(eng, d, full=mode == "full")
-    return _status(eng, f"refresh_{mode}", name, f"{n} buckets-window rows")
+    return _status(eng, f"refresh_{mode}", name, _refresh(eng, d, full=mode == "full"))
 
 
 def _drop(eng: QdbEngine, s: str) -> DataFrame:
@@ -445,9 +450,9 @@ def _alter(eng: QdbEngine, s: str) -> DataFrame:
         d.wal_suspended = False
         # apply the parked backlog: one catch-up refresh brings the view
         # current (the batch analog of replaying queued WAL txns)
-        n = _refresh(eng, d, full=False)
+        route = _refresh(eng, d, full=False)
         _save_state(d)
-        return _status(eng, "alter", name, f"wal resumed; applied {n}")
+        return _status(eng, "alter", name, f"wal resumed; refresh {route}")
     if low.startswith("rebase wal"):
         rm = re.fullmatch(r"rebase\s+wal(?:\s+into\s+('[^']*'|\S+))?", low)
         if not rm:
@@ -456,10 +461,10 @@ def _alter(eng: QdbEngine, s: str) -> DataFrame:
         if tgt and ("/" in tgt or "\\" in tgt or ".." in tgt):
             raise ValueError(f"invalid rebase target directory [dir={tgt}]")
         # rebase mints a fresh WAL lineage past a poison txn: the batch
-        # analog clears suspension and re-adopts the stored state as the
-        # new base point (next refresh recomputes bookkeeping from it)
+        # analog clears suspension and forgets the consumed base position,
+        # so the next refresh recomputes the view in full
         d.wal_suspended = False
-        d.frozen_count = -1
+        d.base_txn = d.base_frame = None
         _save_state(d)
         return _status(eng, "alter", name, "wal rebased")
 
@@ -575,8 +580,6 @@ def _enforce_view_ttl(eng: QdbEngine, d: MatViewDef) -> None:
     (TableWriter.enforceTtl economics on the view's own storage: partition
     drops keyed off partition names, no data rewrite; the newest partition
     is never evicted)."""
-    from datetime import timedelta
-
     ttl = d.ttl_hours_or_months
     if ttl == 0 or not os.path.isdir(d.table.path):
         return
@@ -627,15 +630,14 @@ def _now() -> datetime:
 
 
 def _tz_offset(tz: str | None, at: datetime):
-    from datetime import timedelta
-    from zoneinfo import ZoneInfo
+    from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
     if not tz:
         return timedelta(0)
     try:
         off = at.astimezone(ZoneInfo(tz)).utcoffset()
         return off if off is not None else timedelta(0)
-    except Exception:
+    except (ZoneInfoNotFoundError, ValueError):
         # fixed offsets like '+02:00' (Dates.parseOffset)
         m = re.fullmatch(r"([+-])(\d{2}):?(\d{2})", tz)
         if m:
@@ -648,8 +650,6 @@ def _next_tick(d: MatViewDef, now: datetime) -> datetime:
     """First timer tick strictly after ``now`` on the grid
     start + k*every (MatViewTimerJob equivalent; calendar units step by
     month/year arithmetic)."""
-    from datetime import timedelta
-
     start = d.timer_start or now
     if start.tzinfo is None:
         start = start.replace(tzinfo=timezone.utc)
@@ -680,8 +680,6 @@ def _period_cutoff(d: MatViewDef, now: datetime) -> datetime | None:
     largest local-time boundary B with B + delay <= now_local
     (MatViewRefreshJob period semantics — an in-progress period is never
     served)."""
-    from datetime import timedelta
-
     if not d.period_length:
         return None
     off = _tz_offset(d.period_tz, now)
@@ -702,7 +700,7 @@ def _compute(eng: QdbEngine, d: MatViewDef, since: datetime | None) -> DataFrame
 
     q = parse(eng._rewrite_intervals(d.inner_sql))
     if since is not None:
-        cond = f"{d.base_ts} >= TIMESTAMP '{since.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
+        cond = f"{d.base_ts} >= TIMESTAMP '{_ts_text(since)}'"
         q.where = f"({q.where}) AND {cond}" if q.where else cond
     if d.period_length:
         # PERIOD views never serve the in-progress period: every refresh
@@ -710,217 +708,100 @@ def _compute(eng: QdbEngine, d: MatViewDef, since: datetime | None) -> DataFrame
         # local-time period boundary
         cut = _period_cutoff(d, _now())
         if cut is not None:
-            cond = (
-                f"{d.base_ts} < TIMESTAMP "
-                f"'{cut.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
-            )
+            cond = f"{d.base_ts} < TIMESTAMP '{_ts_text(cut)}'"
             q.where = f"({q.where}) AND {cond}" if q.where else cond
     return eng._lower(q)
 
 
-def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> int:
-    spark = eng.spark
+def _base_changes(eng: QdbEngine, d: MatViewDef):
+    """The base's position now, and what changed since the view's last
+    refresh, in ``TimeTable.changes_since`` form: ``()`` nothing, ``(lo,
+    hi)`` epoch micros, None anything.  A DDL table answers from its change
+    log; any other base (a registered frame) is unchanged only while it is
+    the very frame the view last consumed."""
+    t = eng.ddl_tables.get(d.base)
+    if t is not None:
+        return t.log_mark(), t.changes_since(d.base_txn)
+    frame = eng.tables.get(d.base)
+    unchanged = frame is not None and frame is d.base_frame
+    return frame, () if unchanged else None
+
+
+def _from_us(us: int) -> datetime:
+    return datetime(1970, 1, 1, tzinfo=timezone.utc) + timedelta(microseconds=us)
+
+
+def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> str:
+    """Bring the view up to its base and return the route taken:
+    ``unchanged``, ``full``, or ``from <since>`` (only rows at or after
+    ``since`` recomputed)."""
     if d.base in eng._dirty_views:  # stale DDL-table temp view
         eng._flush_dirty_views(d.base)
-    base_df = eng.tables.get(d.base) or spark.table(d.base)
-    frozen_now = None
-    if d.base_ts in base_df.columns:
-        # one pass: high-water mark, total rows, AND the frozen-region
-        # count for the O3 guard (cutoff is derived from the PREVIOUS
-        # hwm, so it is known before the scan)
-        aggs = [F.max(d.base_ts).alias("m"), F.count(F.lit(1)).alias("n")]
-        prev_cut = _incr_cutoff(d)
-        if prev_cut is not None:
-            pred = (
-                F.col(d.base_ts) < _ts_lit(prev_cut)
-                if d.shape == "sample_by"
-                else F.col(d.base_ts) <= _ts_lit(prev_cut)
-            )
-            aggs.append(F.count_if(pred).alias("f"))
-        stats = base_df.agg(*aggs).collect()[0]
-        new_hwm, n_now = stats["m"], stats["n"]
-        if prev_cut is not None:
-            frozen_now = stats["f"]
-    else:  # generic view over a base without the designated ts column
-        new_hwm, n_now = None, base_df.count()
-
-    if d.shape == "generic":
-        # no incremental form: change-gated recompute (max-ts + row count
-        # catch appends AND out-of-order writes); the checkpoint makes the
-        # common no-change read free
-        if (
-            not full
-            and d.base_count >= 0
-            and n_now == d.base_count
-            and _same_hwm(new_hwm, d.hwm)
-        ):
-            _register(eng, d)
-            return 0
-        _write_view(d, _compute(eng, d, None))
-        if new_hwm is not None:
-            d.hwm = new_hwm if new_hwm.tzinfo else new_hwm.replace(tzinfo=timezone.utc)
-        d.base_count = d.frozen_count = n_now
-        _save_state(d)
-        _register(eng, d)
-        return 1
-
-    cutoff = None if full or d.hwm is None else _incr_cutoff(d)
-    o3_escalated = False
-    if cutoff is not None and d.frozen_count >= 0 and frozen_now is not None:
-        # O3 guard (WalTxnRangeLoader stand-in): rows landed BELOW the
-        # incremental cutoff since the last refresh are invisible to a
-        # tail recompute — a changed frozen-region count escalates to FULL
-        if frozen_now != d.frozen_count:
-            cutoff = None
-            o3_escalated = True
-            if d.refresh_limit and d.shape == "sample_by":
-                # SET REFRESH LIMIT (ofSetMatViewRefreshLimit): bound how
-                # far back the O3 escalation recomputes — buckets older
-                # than hwm - limit keep their stored values instead of a
-                # FULL recompute (the point of the limit on huge views)
-                lim = _minus_hours_or_months(
-                    d.hwm if d.hwm.tzinfo else d.hwm.replace(tzinfo=timezone.utc),
-                    d.refresh_limit,
-                )
-                lim_cut = _bucket_floor(lim, d.interval)
-                base_cut = _incr_cutoff(d)
-                if lim_cut is not None and base_cut is not None:
-                    cutoff = min(base_cut, lim_cut)
-
-    # Fold the post-refresh frozen-region count into the compute/write pass
-    # (r10): the NEXT cutoff is already derivable from the stats pass's
-    # new_hwm, so an Observation on the base scan counts the frozen rows
-    # for free during the write job.  Without this fold the count was its
-    # own full base scan — which on the INCREMENTAL path defeats the whole
-    # point of incremental refresh at scale (tail-pruned compute followed
-    # by an unpruned count).  On the incremental path the observation rides
-    # the already-pruned tail scan (filter BELOW the CollectMetrics node,
-    # so parquet pushdown is preserved) and counts tail rows >= next
-    # cutoff; frozen = n_now - that.
-    obs = None
-    obs_mode = None  # "full": metric IS frozen; "tail": frozen = n_now - metric
-    nxt_new = None
-    if d.shape == "sample_by" and new_hwm is not None and d.base in eng.tables:
-        hwm_utc = new_hwm if new_hwm.tzinfo else new_hwm.replace(tzinfo=timezone.utc)
-        nxt_new = _bucket_floor(hwm_utc, d.interval)
-
-    def _observed_base(pred_col, pre_filter=None):
-        from pyspark.sql import Observation
-
-        nonlocal obs
-        obs = Observation()
-        base = base_df if pre_filter is None else base_df.filter(pre_filter)
-        return base.observe(obs, F.count_if(pred_col).alias("frozen_metric"))
-
-    def _compute_with_swap(observed, since):
-        """Swap the base for its observed twin only while the PLAN is
-        built, under the engine's refresh lock — concurrent refreshes of
-        views over the same base (two CREATEs on two threads) must not
-        capture each other's Observation, or the loser's obs.get() would
-        block forever waiting for an action that never runs.  The write
-        action itself happens outside the lock, so only driver-side plan
-        building is serialized."""
-        if observed is None:
-            return _compute(eng, d, since)
-        with eng._mv_refresh_lock:
-            eng.tables[d.base] = observed
-            try:
-                return _compute(eng, d, since)
-            finally:
-                eng.tables[d.base] = base_df
-
-    if not hasattr(eng, "_mv_refresh_lock"):
-        import threading
-
-        eng._mv_refresh_lock = threading.Lock()
-
-    changed = 1
-    if cutoff is None:
-        observed = None
-        if nxt_new is not None:
-            observed = _observed_base(F.col(d.base_ts) < _ts_lit(nxt_new))
-            obs_mode = "full"
-        _write_view(d, _compute_with_swap(observed, None))
-    elif not o3_escalated and new_hwm is not None and d.hwm is not None \
-            and _same_hwm(new_hwm, d.hwm) and n_now == d.base_count:
-        changed = 0
-    elif d.shape == "latest_on":
-        # per-key state merge: latest over (stored state ∪ new tail)
-        from ..operators.latest import latest_on as _latest
-
-        from .parser import parse as _parse
-
-        q = _parse(eng._rewrite_intervals(d.inner_sql))
-        ts_col, keys = q.latest_on
-        tail = _compute(eng, d, cutoff)
-        state = d.table.read().select(*tail.columns)
-        merged = _latest(state.unionByName(tail), ts_col, keys)
-        _write_view(d, merged.select(*tail.columns))
-    else:  # sample_by bucket-window incremental
-        observed = None
-        # both are _bucket_floor outputs → tz-aware UTC, directly comparable
-        if nxt_new is not None and nxt_new >= cutoff:
-            # observation rides the tail scan: pre-filter keeps pushdown,
-            # and every base row >= nxt_new is >= cutoff (nxt_new >= cutoff
-            # checked above — hwm can regress if rows above the cutoff were
-            # deleted) so the tail sees all of them
-            observed = _observed_base(
-                F.col(d.base_ts) >= _ts_lit(nxt_new),
-                pre_filter=F.col(d.base_ts) >= _ts_lit(cutoff),
-            )
-            obs_mode = "tail"
-        d.table.replace_from(_compute_with_swap(observed, cutoff), cutoff)
-    if new_hwm is not None:
-        d.hwm = new_hwm if new_hwm.tzinfo else new_hwm.replace(tzinfo=timezone.utc)
-    d.base_count = n_now
-    if changed or d.frozen_count < 0:
+    # read the base's position BEFORE the compute: an op committed while
+    # the view computes is then seen again by the next refresh
+    mark, change = _base_changes(eng, d)
+    if change == () and not full:
+        return "unchanged"
+    since = None
+    if change and not full and d.shape != "generic":
+        lo, hi = change
+        since = _from_us(lo)
         if d.shape == "sample_by":
-            # frozen region = rows below the NEXT bucket-floor cutoff —
-            # read from the write pass's Observation when it ran; the
-            # standalone scan remains only as the fallback (base not in
-            # eng.tables, or the no-op-refresh/first-population edges)
-            if obs_mode == "full":
-                d.frozen_count = int(obs.get["frozen_metric"])
-            elif obs_mode == "tail":
-                d.frozen_count = int(n_now - obs.get["frozen_metric"])
-            else:
-                nxt = _incr_cutoff(d)
-                d.frozen_count = (
-                    base_df.filter(F.col(d.base_ts) < _ts_lit(nxt)).count()
-                    if nxt is not None
-                    else n_now
-                )
-        else:
-            # frozen region = rows <= hwm, which is every row: free
-            d.frozen_count = n_now
+            # only added or upserted rows at ts >= lo: no bucket below
+            # floor(lo) changed, and none at or above it can vanish
+            since = _bucket_floor(since, d.interval)
+            if d.refresh_limit:
+                # SET REFRESH LIMIT: buckets older than the newest logged
+                # ts - limit keep their stored values
+                lim = _minus_hours_or_months(_from_us(hi), d.refresh_limit)
+                since = max(since, _bucket_floor(lim, d.interval))
+    if since is None:
+        _write_view(d, _compute(eng, d, None))
+    elif d.shape == "latest_on":
+        if not _merge_latest(eng, d, since):
+            since = None
+            _write_view(d, _compute(eng, d, None))
+    else:
+        d.table.replace_from(_compute(eng, d, since), since)
+    if isinstance(mark, DataFrame):
+        d.base_frame, d.base_txn = mark, None
+    else:
+        d.base_frame, d.base_txn = None, mark
     _save_state(d)
     _register(eng, d)
-    if changed and d.ttl_hours_or_months:
+    if d.ttl_hours_or_months:
         _enforce_view_ttl(eng, d)
-    return changed
+    return "full" if since is None else f"from {_ts_text(since)}"
 
 
-def _incr_cutoff(d: MatViewDef) -> datetime | None:
-    """Timestamp below which the view's stored state is frozen: the bucket
-    floor of the high-water mark for SAMPLE BY shapes, the mark itself
-    otherwise."""
-    if d.hwm is None:
-        return None
-    if d.shape == "sample_by":
-        return _bucket_floor(d.hwm, d.interval)
-    return d.hwm
+def _merge_latest(eng: QdbEngine, d: MatViewDef, since: datetime) -> bool:
+    """LATEST ON refresh after add/upsert-only base changes at ts >= since:
+    the stored rows below ``since`` stand, the rows at or above it give
+    way to the latest rows the base holds there (so incoming rows win every
+    ts tie).  An upsert can move a stored row out of the query's filter or
+    key; when a key's stored row at or above ``since`` has no successor
+    there, its latest row lies below ``since`` and only a full recompute
+    finds it — returns False and writes nothing."""
+    from ..operators.latest import latest_on as _latest
+    from .parser import parse as _parse
+
+    ts_col, keys = _parse(eng._rewrite_intervals(d.inner_sql)).latest_on
+    tail = _compute(eng, d, since)
+    state = d.table.read().select(*tail.columns)
+    recent = F.col(ts_col) >= _ts_lit(since)
+    if state.filter(recent).join(tail, keys, "left_anti").limit(1).collect():
+        return False
+    merged = _latest(state.filter(~recent).unionByName(tail), ts_col, keys)
+    _write_view(d, merged.select(*tail.columns))
+    return True
+
+
+def _ts_text(dt: datetime) -> str:
+    return dt.strftime("%Y-%m-%d %H:%M:%S.%f")
 
 
 def _ts_lit(dt: datetime):
-    return F.lit(dt.strftime("%Y-%m-%d %H:%M:%S.%f")).cast("timestamp")
-
-
-def _same_hwm(a, b) -> bool:
-    if a is None or b is None:
-        return a is None and b is None
-    a = a.replace(tzinfo=timezone.utc) if a.tzinfo is None else a
-    b = b.replace(tzinfo=timezone.utc) if b.tzinfo is None else b
-    return a == b
+    return F.lit(_ts_text(dt)).cast("timestamp")
 
 
 def _write_view(d: MatViewDef, out: DataFrame) -> None:
@@ -940,9 +821,7 @@ def _save_state(d: MatViewDef) -> None:
         {
             "inner_sql": d.inner_sql,
             "shape": d.shape,
-            "hwm": d.hwm.isoformat() if d.hwm else None,
-            "frozen_count": d.frozen_count,
-            "base_count": d.base_count,
+            "base_txn": d.base_txn,
             "next_due": d.next_due.isoformat() if d.next_due else None,
             "wal_suspended": d.wal_suspended,
             "refresh_limit": d.refresh_limit,
@@ -956,7 +835,8 @@ def _save_state(d: MatViewDef) -> None:
 def _restore_state(eng: QdbEngine, d: MatViewDef) -> bool:
     """Adopt a previous session's checkpoint when the stored query text
     matches — the restart path: no recompute, incremental refresh resumes
-    from the persisted high-water mark."""
+    from the persisted base txn (a checkpoint without one refreshes in
+    full first)."""
     f = os.path.join(d.table.path, VIEW_STATE_FILE)
     try:
         with open(f) as fh:
@@ -967,9 +847,7 @@ def _restore_state(eng: QdbEngine, d: MatViewDef) -> bool:
         return False
     if st.get("inner_sql") != d.inner_sql or st.get("shape") != d.shape:
         return False
-    d.hwm = datetime.fromisoformat(st["hwm"]) if st.get("hwm") else None
-    d.frozen_count = st.get("frozen_count", -1)
-    d.base_count = st.get("base_count", -1)
+    d.base_txn = tuple(st["base_txn"]) if st.get("base_txn") else None
     d.next_due = (
         datetime.fromisoformat(st["next_due"]) if st.get("next_due") else None
     )

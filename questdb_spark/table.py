@@ -14,7 +14,9 @@ the reference at partition grain.  Row groups are NOT pruned by ts: Spark
 writes the ts column as INT96, which carries no min/max statistics.
 Writes go through append (WAL-style): in-order DEDUP commits add files,
 O3 ones merge into their partitions; UPDATE/DELETE are partition rewrites
-touching only affected partitions (the O3 merge discipline).
+touching only affected partitions (the O3 merge discipline).  Every op that
+changes rows logs what it touched in the meta journal's change log (the
+reference's txn log), which dialect view refreshes read.
 """
 
 from __future__ import annotations
@@ -22,11 +24,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 from calendar import monthrange
 from collections.abc import Sequence
 from datetime import datetime, timedelta
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -50,6 +53,10 @@ VIEW_STATE_FILE = "_lv_state.json"
 # detached partitions, the WAL state and its parked txns, and the view
 # checkpoint
 _CARRIED = ("_detached", ".qdb_wal.json", ".qdb_wal_pending", VIEW_STATE_FILE)
+# change-log entries the meta journal keeps; a reader further behind than
+# this sees a gap and recomputes in full
+_LOG_KEEP = 64
+_LOG_KEYS = ("log_id", "txn", "log")
 
 
 def _as_nullable(dt):
@@ -213,7 +220,7 @@ class TimeTable:
             return None
         try:
             return StructType.fromJson(js)
-        except Exception:
+        except (KeyError, TypeError, ValueError):  # a malformed cache
             return None
 
     def _readback_schema(self, written: StructType) -> StructType:
@@ -284,8 +291,14 @@ class TimeTable:
         directory that ``_swap_in`` renames into place, so ``df`` may read
         the table it replaces, and the old directory (meta journal
         included) stays intact until the swap.  The DDL ops journal is
-        void; ``declared_cols`` carries over (it describes the CREATE, not
-        the ops)."""
+        void; ``declared_cols`` (it describes the CREATE, not the ops) and
+        the change log carry over."""
+        self._log_change()
+        self._replace_all(df, ("declared_cols", *_LOG_KEYS))
+
+    def _replace_all(self, df: DataFrame, carry: tuple[str, ...]) -> None:
+        """``write`` without its log entry; the new meta journal keeps the
+        old one's ``carry`` keys."""
         tmp = self.path.rstrip("/") + ".rewrite"
         shutil.rmtree(tmp, ignore_errors=True)  # a crashed rewrite's leftovers
         out = self._with_partition(df)
@@ -295,28 +308,32 @@ class TimeTable:
             .write.partitionBy(PARTITION_COL)
             .parquet(tmp)
         )
-        meta = {"phys_schema": self._readback_schema(out.schema).jsonValue()}
-        declared = self._meta().get("declared_cols")
-        if declared:
-            meta["declared_cols"] = declared
+        old = self._meta()
+        meta = {k: old[k] for k in carry if k in old}
+        meta["phys_schema"] = self._readback_schema(out.schema).jsonValue()
         _write_json(os.path.join(tmp, os.path.basename(self._meta_path)), meta)
         self._swap_in(tmp)
 
     def replace_from(self, df: DataFrame, since: datetime) -> None:
-        """Replace the rows at or after ``since`` with ``df``, only in the
-        partitions ``df`` touches: each keeps its rows before ``since`` and
-        takes ``df``'s rows for the rest; untouched partitions are never
-        rewritten.  ``since`` reads in the session time zone, like a
+        """Replace the rows at or after ``since`` with ``df`` (rows at or
+        after ``since``): the partition holding ``since`` keeps its rows
+        before it, each partition ``df`` touches takes ``df``'s rows, and
+        later partitions ``df`` does not touch go; earlier partitions are
+        never rewritten.  ``since`` reads in the session time zone, like a
         TIMESTAMP literal."""
-        self._set_max_ts(None)  # ``df`` may carry any ts
+        self._log_change(max_ts=None)  # ``df`` may carry any ts
         phys_ts = self._physical_name(self.ts_col)
         inc = self._with_partition(self._to_physical(df), phys_ts)
         cut = F.lit(since.strftime("%Y-%m-%d %H:%M:%S.%f")).cast("timestamp")
-        head = (
-            self._read_physical()
-            .filter(F.col(phys_ts) < cut)
-            .join(inc.select(PARTITION_COL).distinct(), PARTITION_COL, "left_semi")
+        first = self._part_bound(since)
+        head = self._read_physical().filter(
+            (F.col(PARTITION_COL) == F.lit(first)) & (F.col(phys_ts) < cut)
         )
+        # every row of a later partition is at or after ``since``; the
+        # scan above prunes to ``first``, so these files are never read
+        for p in os.listdir(self.path):
+            if p.startswith(f"{PARTITION_COL}=") and p.split("=", 1)[1] > str(first):
+                shutil.rmtree(os.path.join(self.path, p), ignore_errors=True)
         self._rewrite_partitions(head.unionByName(inc))
 
     def append(self, df: DataFrame, seq: int = 0) -> bool:
@@ -375,11 +392,29 @@ class TimeTable:
             return self._upsert(base.select(*df.columns, self.seq_col))
         if replayed:
             base = base.drop("__wal_ord")
-        # rows of a plain append may land anywhere, and the bound goes
-        # first: a crash after the data write must not leave rows above it
-        self._set_max_ts(None)
+        # rows of a plain append may land anywhere, and the bound and the
+        # log entry go first: a crash after the data write must leave no
+        # row above the bound, and an unbounded entry.  The write observes
+        # its own ts range, which then narrows the entry.
+        txn = self._log_change(max_ts=None)
         phys_ts = self._physical_name(self.ts_col)
-        self._append_rows(self._with_partition(self._to_physical(base), phys_ts))
+        out = self._with_partition(self._to_physical(base), phys_ts)
+        obs = Observation()
+        ts_us = self._ts_us(out, phys_ts)
+        self._append_rows(
+            out.observe(
+                obs,
+                F.min(ts_us).alias("lo"),
+                F.max(ts_us).alias("hi"),
+                (F.count(F.lit(1)) - F.count(phys_ts)).alias("nulls"),
+            )
+        )
+        # an action whose plan lost the metrics node (an empty local
+        # relation) completes the observation with an empty row
+        if obs._jo.getRow().size():
+            m = obs.get
+            if m["lo"] is not None and not m["nulls"]:
+                self._narrow_change(txn, m["lo"], m["hi"])
         return False
 
     def _append_rows(self, out: DataFrame) -> None:
@@ -422,18 +457,24 @@ class TimeTable:
             nulls = any(r["nulls"] for r in stats)
             lo = None if nulls else min((r["lo"] for r in stats), default=None)
             hi = max((r["hi"] for r in stats if r["hi"] is not None), default=None)
+            # the log entry: the batch's range, unbounded with a null ts
+            rng = (lo, hi) if lo is not None else ()
             has_files = _any_parquet(self.path)
             bound = self._meta().get("max_ts") if has_files else None
             if has_files and bound is None:
                 # no bound (a legacy directory, or after a write that
                 # dropped it): merge, then take it from the newest partition
+                self._log_change(*rng)
                 self._merge_into(inc, parts)
-                self._set_max_ts(self._newest_max_us())
+                self._write_meta(max_ts=self._newest_max_us())
                 return True
-            # raise the bound BEFORE the data write: a crash after the
-            # write then leaves no row above it, and a resent batch merges
-            if hi is not None:
-                self._set_max_ts(hi if bound is None else max(hi, bound))
+            # log the batch's range and raise the bound BEFORE the data
+            # write: a crash after the write then leaves no row above the
+            # bound, an entry covering the rows, and a resent batch merges
+            new_bound = {} if hi is None else {
+                "max_ts": hi if bound is None else max(hi, bound)
+            }
+            self._log_change(*rng, **new_bound)
             if not has_files or (lo is not None and lo > bound):
                 self._append_rows(inc)  # no stored row can match
                 return False
@@ -488,6 +529,71 @@ class TimeTable:
     # it before they write; ``write()`` starts a journal without it; ops
     # that only remove rows or keep every ts (delete, drop, detach, TTL,
     # UPDATE, ``vacuum``, ``compact``) keep it.
+    #
+    # -- the change log: the reference's txn log, cut to what a view
+    # refresh reads.  ``txn`` counts the ops that changed rows or columns;
+    # ``log`` keeps the last ``_LOG_KEEP`` entries ``{txn, lo, hi}``: with
+    # [lo, hi] (epoch micros) the op only added or upserted rows with
+    # designated ts in that range, with ``lo = hi = None`` it may have done
+    # anything else.  ``log_id`` names this log, so a re-created table is
+    # not mistaken for a continuation.  An entry is written BEFORE the
+    # data: a range that is too wide costs a recompute, a missing entry
+    # would be a stale view.  ``vacuum`` and ``compact`` change no rows and
+    # log nothing.
+
+    def _log_change(
+        self, lo: int | None = None, hi: int | None = None, **updates
+    ) -> int:
+        """Append one change-log entry and return its txn.  ``updates``
+        ride the same meta write; a None value removes its key."""
+        meta = self._meta()
+        for k, v in updates.items():
+            if v is None:
+                meta.pop(k, None)
+            else:
+                meta[k] = v
+        txn = meta.get("txn", 0) + 1
+        meta.setdefault("log_id", uuid.uuid4().hex)
+        meta["txn"] = txn
+        meta["log"] = [
+            *meta.get("log", [])[1 - _LOG_KEEP :],
+            {"txn": txn, "lo": lo, "hi": hi},
+        ]
+        _write_json(self._meta_path, meta)
+        return txn
+
+    def _narrow_change(self, txn: int, lo: int, hi: int) -> None:
+        meta = self._meta()
+        for e in meta.get("log", []):
+            if e["txn"] == txn:
+                e["lo"], e["hi"] = lo, hi
+        _write_json(self._meta_path, meta)
+
+    def log_mark(self) -> tuple[str | None, int]:
+        """The log's position: (log id, last txn)."""
+        meta = self._meta()
+        return meta.get("log_id"), meta.get("txn", 0)
+
+    def changes_since(self, mark) -> tuple[int, int] | tuple[()] | None:
+        """What changed after ``mark`` (an earlier ``log_mark()``): ``()``
+        for nothing; ``(lo, hi)`` when every op since only added or upserted
+        rows with designated ts in that range, ``hi`` being the newest ts
+        the kept log names; None when anything else happened, or the log
+        cannot tell (no mark, another log, entries past the kept tail)."""
+        meta = self._meta()
+        txn, log = meta.get("txn", 0), meta.get("log", [])
+        if not mark or mark[0] != meta.get("log_id") or mark[1] > txn:
+            return None
+        new = [e for e in log if e["txn"] > mark[1]]
+        if len(new) != txn - mark[1]:
+            return None
+        if not new:
+            return ()
+        if any(e["lo"] is None for e in new):
+            return None
+        return min(e["lo"] for e in new), max(
+            e["hi"] for e in log if e["hi"] is not None
+        )
 
     def _ts_us(self, df: DataFrame, phys_ts: str) -> Column:
         """The designated ts as epoch micros; null when the column is not a
@@ -495,16 +601,6 @@ class TimeTable:
         if isinstance(df.schema[phys_ts].dataType, TimestampType):
             return F.unix_micros(F.col(phys_ts))
         return F.lit(None).cast("long")
-
-    def _set_max_ts(self, us: int | None) -> None:
-        meta = self._meta()
-        if meta.get("max_ts") == us:
-            return
-        if us is None:
-            meta.pop("max_ts")
-        else:
-            meta["max_ts"] = us
-        _write_json(self._meta_path, meta)
 
     def _newest_max_us(self) -> int | None:
         """Max ts (epoch micros) of the newest partition directory — the
@@ -642,9 +738,7 @@ class TimeTable:
         return self._meta().get("ops", [])
 
     def _append_op(self, op: dict) -> None:
-        ops = self._ops()
-        ops.append(op)
-        self._write_meta(ops=ops)
+        self._log_change(ops=[*self._ops(), op])
 
     # declared column list (CREATE TABLE order) — persisted alongside the
     # ops journal so an EMPTY table's schema survives a new engine/process
@@ -858,6 +952,7 @@ class TimeTable:
         sub = df.join(F.broadcast(touched), PARTITION_COL, "left_semi")
         for name, expr in assignments.items():
             sub = sub.withColumn(name, F.when(predicate, expr).otherwise(F.col(name)))
+        self._log_change()
         self._rewrite_partitions(self._to_physical(sub))
 
     def update_from(
@@ -892,6 +987,7 @@ class TimeTable:
                 name, F.when(F.col("__match").isNotNull(), expr).otherwise(F.col(name))
             )
         sub = sub.drop(*other.columns).dropDuplicates(["__rid"]).drop("__rid")
+        self._log_change()
         self._rewrite_partitions(self._to_physical(sub))
 
     def _refuse_ts_update(self, assignments: dict[str, Column]) -> None:
@@ -922,6 +1018,7 @@ class TimeTable:
             for r in sub.select(PARTITION_COL).distinct().collect()
         }
         emptied = [p for p in parts if p not in survived]
+        self._log_change()
         if len(emptied) < len(parts):
             self._rewrite_partitions(self._to_physical(sub))
         for p in emptied:
@@ -957,7 +1054,10 @@ class TimeTable:
         """ALTER TABLE DROP PARTITION equivalents: remove partition dirs in
         a time range (no data rewrite)."""
         self._require_not_suspended()
-        for p in self._partitions_in(interval):
+        parts = self._partitions_in(interval)
+        if parts:
+            self._log_change()
+        for p in parts:
             shutil.rmtree(os.path.join(self.path, f"{PARTITION_COL}={p}"), ignore_errors=True)
 
     def force_drop_partition(self, name: str) -> list[str]:
@@ -970,6 +1070,7 @@ class TimeTable:
         O(1) directory removals, no data rewrite."""
         exact = os.path.join(self.path, f"{PARTITION_COL}={name}")
         if os.path.isdir(exact):
+            self._log_change()
             shutil.rmtree(exact, ignore_errors=True)
             return [name]
         dropped = []
@@ -977,6 +1078,8 @@ class TimeTable:
             parts = self._partitions_in(name)
         except ValueError:
             parts = []
+        if parts:
+            self._log_change()
         for p in parts:
             shutil.rmtree(
                 os.path.join(self.path, f"{PARTITION_COL}={p}"), ignore_errors=True
@@ -998,7 +1101,10 @@ class TimeTable:
         Returns the detached partition names."""
         self._require_not_suspended()
         moved = []
-        for p in self._partitions_in(interval):
+        parts = self._partitions_in(interval)
+        if parts:
+            self._log_change()
+        for p in parts:
             src = os.path.join(self.path, f"{PARTITION_COL}={p}")
             dst = os.path.join(self._detached_root, f"{PARTITION_COL}={p}")
             os.makedirs(self._detached_root, exist_ok=True)
@@ -1027,7 +1133,7 @@ class TimeTable:
         from datetime import datetime
 
         lo, hi = parse_interval_string(interval)
-        self._set_max_ts(None)  # attached rows may lie past the bound
+        self._log_change(max_ts=None)  # attached rows may lie past the bound
 
         def start_of(name: str) -> datetime:
             v = name.split("=", 1)[1]
@@ -1092,10 +1198,11 @@ class TimeTable:
         at append time)."""
         if not self.dedup_enabled:
             return
-        bound = self._meta().get("max_ts")
-        self.write(self.read(dedup=True).withColumn(self.seq_col, F.lit(-1)))
-        if bound is not None:
-            self._set_max_ts(bound)  # every ts kept: the bound still holds
+        # every row and ts kept: the bound still holds, and nothing to log
+        self._replace_all(
+            self.read(dedup=True).withColumn(self.seq_col, F.lit(-1)),
+            ("declared_cols", "max_ts", *_LOG_KEYS),
+        )
 
     @property
     def _aside_path(self) -> str:
@@ -1166,11 +1273,15 @@ class TimeTable:
         evicted = []
         for p in parts[:-1]:  # oldest first, never the active partition
             pv = p.split("=", 1)[1]
-            if ceiling(start_of(pv)) <= boundary:
-                shutil.rmtree(os.path.join(self.path, p), ignore_errors=True)
-                evicted.append(pv)
-            else:
+            if ceiling(start_of(pv)) > boundary:
                 break  # partitions are time-sorted; the rest are younger
+            evicted.append(pv)
+        if evicted:
+            self._log_change()
+        for pv in evicted:
+            shutil.rmtree(
+                os.path.join(self.path, f"{PARTITION_COL}={pv}"), ignore_errors=True
+            )
         return evicted
 
     @property

@@ -184,7 +184,8 @@ def test_matview_create_query_refresh_drop(eng):
     )
     eng.register("ev", eng.ddl_read("ev"), designated_ts="ts")
 
-    # stale until refreshed (manual refresh type)
+    # stale until refreshed: an IMMEDIATE view does not refresh on a base
+    # commit or on read
     stale = {str(r["ts"]) for r, in zip(eng.sql("SELECT ts FROM hourly").collect())}
     assert "2024-01-01 03:00:00" not in stale
 
@@ -207,8 +208,8 @@ def test_matview_full_refresh_covers_o3(eng):
         "CREATE MATERIALIZED VIEW mv2 AS ("
         "SELECT ts, sum(v) AS total FROM ev2 SAMPLE BY 1h)"
     )
-    # out-of-order insert BEFORE the high-water mark: incremental misses it,
-    # FULL repairs — the documented contract
+    # out-of-order insert BEFORE the view's newest bucket: FULL recomputes
+    # every bucket
     eng.sql("INSERT INTO ev2 VALUES (TIMESTAMP '2024-01-01 00:30:00', 'c', 100.0)")
     eng.register("ev2", eng.ddl_read("ev2"), designated_ts="ts")
     eng.sql("REFRESH MATERIALIZED VIEW mv2 FULL")
@@ -442,8 +443,8 @@ def test_detach_attach_partition(eng):
 
 def test_live_view_latest_on_incremental_and_o3(eng):
     """LATEST ON live view: per-key state merge on append; an out-of-order
-    write below the high-water mark is auto-detected by the frozen-region
-    count and escalates to a full recompute (WalTxnRangeLoader analogue)."""
+    write below the newest stored row is in the base's change log, and the
+    merge starts at its ts (WalTxnRangeLoader analogue)."""
     _seed_events(eng, "ev4")
     eng.sql(
         "CREATE LIVE VIEW lvl AS (SELECT ts, sym, v FROM ev4 "
@@ -516,7 +517,7 @@ def test_live_view_generic_query_and_gating(eng):
 def test_live_view_restart_resumes_checkpoint(eng, spark):
     """A new session over the same warehouse adopts the persisted
     checkpoint (LiveViewCheckpointDataStore): no initial recompute, and
-    incremental refresh resumes from the stored high-water mark."""
+    incremental refresh resumes from the stored base position."""
     from questdb_spark.sqlfront.engine import QdbEngine
 
     _seed_events(eng, "ev6")
@@ -1381,3 +1382,159 @@ def test_update_of_designated_ts_is_refused(eng, stmt):
     eng.sql("INSERT INTO t VALUES (TIMESTAMP '2024-01-05 01:00:00', 'a', 9.0)")
     assert eng.sql("SELECT * FROM t WHERE k = 'a'").count() == 2
     assert rows(eng.sql("SELECT k FROM t WHERE ts IN '2024-01-05'")) == [("a",)]
+
+
+# -- view refresh reads the base table's change log --------------------------
+
+
+def _dedup_base(eng, name="db"):
+    eng.sql(
+        f"CREATE TABLE {name} (ts TIMESTAMP, k SYMBOL, v DOUBLE) TIMESTAMP(ts) "
+        "PARTITION BY DAY WAL DEDUP UPSERT KEYS(ts, k)"
+    )
+    eng.sql(
+        f"INSERT INTO {name} VALUES (TIMESTAMP '2024-01-01 00:10:00', 'a', 1.0), "
+        "(TIMESTAMP '2024-01-01 01:10:00', 'b', 2.0)"
+    )
+
+
+def _sums(eng, view):
+    return {str(r.ts): r.s for r in eng.sql(f"SELECT ts, s FROM {view}").collect()}
+
+
+def _route(eng, view, mode="INCREMENTAL"):
+    return eng.sql(f"REFRESH MATERIALIZED VIEW {view} {mode}").first().detail
+
+
+def test_matview_incremental_applies_upserted_values(eng):
+    """An upsert that keeps the row count still reaches the view: the
+    refresh recomputes from the bucket of the lowest logged ts."""
+    _dedup_base(eng)
+    eng.sql("CREATE MATERIALIZED VIEW dv AS (SELECT ts, sum(v) s FROM db SAMPLE BY 1h)")
+    assert _route(eng, "dv") == "unchanged"
+    eng.sql(
+        "INSERT INTO db VALUES (TIMESTAMP '2024-01-01 00:10:00', 'a', 100.0), "
+        "(TIMESTAMP '2024-01-02 00:10:00', 'a', 5.0)"
+    )
+    assert _route(eng, "dv") == "from 2024-01-01 00:00:00.000000"
+    got = _sums(eng, "dv")
+    assert got == {
+        "2024-01-01 00:00:00": 100.0,
+        "2024-01-01 01:00:00": 2.0,
+        "2024-01-02 00:00:00": 5.0,
+    }
+    assert _route(eng, "dv", "FULL") == "full"
+    assert _sums(eng, "dv") == got
+
+
+def test_matview_incremental_after_update_is_full(eng):
+    """An UPDATE below the view's newest bucket logs an unbounded change:
+    the next refresh recomputes the whole view, and later appends go back
+    to the incremental route."""
+    _dedup_base(eng)
+    eng.sql("CREATE MATERIALIZED VIEW uv AS (SELECT ts, sum(v) s FROM db SAMPLE BY 1h)")
+    eng.sql("UPDATE db SET v = 50.0 WHERE k = 'a'")
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-01 03:10:00', 'c', 3.0)")
+    assert _route(eng, "uv") == "full"
+    assert _sums(eng, "uv")["2024-01-01 00:00:00"] == 50.0
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-01 04:10:00', 'c', 4.0)")
+    assert _route(eng, "uv") == "from 2024-01-01 04:00:00.000000"
+    assert _sums(eng, "uv") == {
+        "2024-01-01 00:00:00": 50.0,
+        "2024-01-01 01:00:00": 2.0,
+        "2024-01-01 03:00:00": 3.0,
+        "2024-01-01 04:00:00": 4.0,
+    }
+
+
+def test_live_view_generic_sees_upsert(eng):
+    """A generic live view recomputes when the base logged any change,
+    also one that keeps the row count and the max ts."""
+    _dedup_base(eng)
+    eng.sql("CREATE LIVE VIEW gv AS (SELECT k, sum(v) AS s FROM db GROUP BY k)")
+    assert sorted(rows(eng.sql("SELECT k, s FROM gv"))) == [("a", 1.0), ("b", 2.0)]
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-01 00:10:00', 'a', 7.0)")
+    assert _route(eng, "gv") == "full"
+    assert _route(eng, "gv") == "unchanged"
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-01 00:10:00', 'a', 8.0)")
+    assert sorted(rows(eng.sql("SELECT k, s FROM gv"))) == [("a", 8.0), ("b", 2.0)]
+
+
+def test_live_view_latest_on_sees_upserts(eng):
+    """A LATEST ON live view takes upserted values of the latest row at
+    the base's newest ts and of an older latest row; the merge starts at
+    the lowest logged ts."""
+    _dedup_base(eng)
+    body = "SELECT ts, k, v FROM db LATEST ON ts PARTITION BY k"
+    eng.sql(f"CREATE LIVE VIEW lv AS ({body})")
+
+    def snap():
+        return {r.k: r.v for r in eng.sql("SELECT k, v FROM lv").collect()}
+
+    assert snap() == {"a": 1.0, "b": 2.0}
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-01 01:10:00', 'b', 20.0)")
+    assert _route(eng, "lv") == "from 2024-01-01 01:10:00.000000"
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-01 00:10:00', 'a', 10.0)")
+    assert _route(eng, "lv") == "from 2024-01-01 00:10:00.000000"
+    assert snap() == {"a": 10.0, "b": 20.0}
+    assert snap() == {r.k: r.v for r in eng.sql(body).collect()}
+
+
+def test_live_view_latest_on_upsert_out_of_filter_is_full(eng):
+    """An upsert that moves a key's stored latest row out of the view's
+    filter leaves that key's answer below the merge point: full refresh."""
+    _dedup_base(eng)
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-01 02:10:00', 'a', 3.0)")
+    body = "SELECT ts, k, v FROM db WHERE v < 50 LATEST ON ts PARTITION BY k"
+    eng.sql(f"CREATE LIVE VIEW lf AS ({body})")
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-01 02:10:00', 'a', 99.0)")
+    assert _route(eng, "lf") == "full"
+    got = {r.k: (str(r.ts), r.v) for r in eng.sql("SELECT ts, k, v FROM lf").collect()}
+    assert got == {
+        "a": ("2024-01-01 00:10:00", 1.0),
+        "b": ("2024-01-01 01:10:00", 2.0),
+    }
+
+
+def test_matview_upsert_out_of_filter_drops_later_bucket(eng):
+    """An upsert can move every row of a later day's bucket out of a
+    SAMPLE BY view's filter: the incremental refresh drops that bucket,
+    as FULL does."""
+    _dedup_base(eng)
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-02 00:10:00', 'b', 4.0)")
+    eng.sql(
+        "CREATE MATERIALIZED VIEW wv AS ("
+        "SELECT ts, sum(v) s FROM db WHERE v < 50 SAMPLE BY 1h)"
+    )
+    eng.sql(
+        "INSERT INTO db VALUES (TIMESTAMP '2024-01-01 00:10:00', 'a', 3.0), "
+        "(TIMESTAMP '2024-01-02 00:10:00', 'b', 99.0)"
+    )
+    assert _route(eng, "wv") == "from 2024-01-01 00:00:00.000000"
+    got = _sums(eng, "wv")
+    assert got == {"2024-01-01 00:00:00": 3.0, "2024-01-01 01:00:00": 2.0}
+    assert _route(eng, "wv", "FULL") == "full"
+    assert _sums(eng, "wv") == got
+
+
+def test_matview_registered_frame_base_refreshes_full(eng):
+    """A base registered as a frame has no change log: the same frame is
+    unchanged, a different one refreshes in full."""
+    df = eng.spark.sql("SELECT TIMESTAMP '2024-01-01 00:10:00' AS ts, 1.0 AS v")
+    eng.register("fr", df, designated_ts="ts")
+    eng.sql("CREATE MATERIALIZED VIEW fv AS (SELECT ts, sum(v) s FROM fr SAMPLE BY 1h)")
+    assert _route(eng, "fv") == "unchanged"
+    eng.register("fr", df.selectExpr("ts", "v * 2 AS v"), designated_ts="ts")
+    assert _route(eng, "fv") == "full"
+    assert _sums(eng, "fv") == {"2024-01-01 00:00:00": 2.0}
+
+
+def test_unknown_time_zone_raises():
+    from datetime import datetime, timezone
+
+    from questdb_spark.sqlfront.matview_ddl import _tz_offset
+
+    now = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    assert _tz_offset("+02:00", now).total_seconds() == 7200
+    with pytest.raises(ValueError, match="invalid timezone"):
+        _tz_offset("Mars/Olympus_Mons", now)

@@ -14,6 +14,11 @@ escalation guard) must land on exactly the same state as a full
 recompute — so the shadow never models the incremental machinery, which
 is the point: any divergence is an engine bug, not a shadow bug.
 
+``test_matview_dedup_fuzz`` points the same contract at a DEDUP base:
+in-order and late upserts (half of them re-sending stored keys with new
+values), UPDATE, DELETE and DROP PARTITION, checked on a SAMPLE BY view's
+``count(*)`` and ``sum(v)`` and on a LATEST ON live view's values.
+
 Tunables: SPARK_GRAFT_FUZZ_SEEDS (default 3), SPARK_GRAFT_FUZZ_OPS
 (default 40 — each op can cost a refresh write).
 """
@@ -27,6 +32,7 @@ from datetime import datetime, timedelta
 
 import pytest
 
+from questdb_spark.sqlfront.ddl import _refresh_view
 from questdb_spark.sqlfront.engine import QdbEngine
 
 SEEDS = int(os.environ.get("SPARK_GRAFT_FUZZ_SEEDS", "3"))
@@ -140,6 +146,116 @@ def test_matview_lifecycle_fuzz(spark, tmp_path, seed):
                 continue
             ttl_hours = rng.choice(choices)
             eng.sql(f"ALTER MATERIALIZED VIEW fmv SET TTL {ttl_hours} HOURS")
+        else:
+            check()
+    check()
+
+
+@pytest.mark.parametrize("seed", range(SEEDS))
+def test_matview_dedup_fuzz(spark, tmp_path, seed):
+    from pyspark.sql import functions as F
+
+    rng = random.Random(20_241_100 + seed)
+    eng = QdbEngine(spark, warehouse=str(tmp_path / f"wd{seed}"))
+    eng.sql(
+        "CREATE TABLE fd (ts TIMESTAMP, k SYMBOL, v DOUBLE) TIMESTAMP(ts) "
+        "PARTITION BY DAY WAL DEDUP UPSERT KEYS(ts, k)"
+    )
+    stored: dict[tuple[datetime, str], float] = {}  # (ts, k) -> v
+
+    def rand_ts(below: datetime | None = None) -> datetime:
+        for _ in range(8):
+            ts = BASE + timedelta(
+                days=rng.randrange(DAYS - 1), minutes=rng.randrange(24 * 60)
+            )
+            if below is None or ts < below:
+                break
+        return ts
+
+    def value() -> float:
+        return float(rng.randrange(1, 100))
+
+    def insert(batch: list[tuple[datetime, str, float]]) -> None:
+        eng.sql(
+            "INSERT INTO fd VALUES "
+            + ",".join(f"('{ts.isoformat()}','{k}',{v})" for ts, k, v in batch)
+        )
+        for ts, k, v in batch:  # in-batch last write wins
+            stored[(ts, k)] = v
+
+    def resend_or_new(ts: datetime) -> tuple[datetime, str, float]:
+        if stored and rng.random() < 0.5:
+            key = rng.choice(sorted(stored))
+            return (*key, value())
+        return (ts, rng.choice("abc"), value())
+
+    insert([(rand_ts(), rng.choice("abc"), value()) for _ in range(6)])
+    eng.sql(
+        "CREATE MATERIALIZED VIEW fdv WITH BASE fd AS ("
+        "SELECT ts, count(*) AS n, sum(v) AS s FROM fd SAMPLE BY 1h)"
+    )
+    eng.sql(
+        "CREATE LIVE VIEW fdl AS (SELECT ts, k, v FROM fd LATEST ON ts PARTITION BY k)"
+    )
+    applied = dict(stored)  # the base at the last refresh
+
+    def check() -> None:
+        got = {r.ts: (r.n, r.s) for r in eng.sql("SELECT ts, n, s FROM fdv").collect()}
+        want: dict[datetime, tuple[int, float]] = {}
+        for (ts, _k), v in applied.items():
+            b = ts.replace(minute=0, second=0, microsecond=0)
+            n, s = want.get(b, (0, 0.0))
+            want[b] = (n + 1, s + v)
+        assert got == want, f"seed={seed} SAMPLE BY view diverged"
+        latest: dict[str, tuple[datetime, float]] = {}
+        for (ts, k), v in stored.items():
+            if k not in latest or ts > latest[k][0]:
+                latest[k] = (ts, v)
+        got_l = {r.k: (r.ts, r.v) for r in eng.sql("SELECT ts, k, v FROM fdl").collect()}
+        assert got_l == latest, f"seed={seed} LATEST ON view diverged"
+
+    for _step in range(OPS):
+        op = rng.choices(
+            ["insert", "late", "update", "delete", "drop", "refresh_incr",
+             "refresh_full", "read"],
+            weights=[4, 4, 1, 1, 1, 4, 1, 3],
+        )[0]
+        newest = max((ts for ts, _k in stored), default=BASE)
+        if op == "insert":
+            # in order: at or past the newest stored ts
+            nxt = newest + timedelta(minutes=rng.randrange(1, 180))
+            insert([
+                (newest, k, value())
+                if rng.random() < 0.5 and (newest, k) in stored
+                else (nxt, k, value())
+                for k in rng.sample("abc", rng.randrange(1, 3))
+            ])
+        elif op == "late":
+            insert([resend_or_new(rand_ts(below=newest)) for _ in range(2)])
+        elif op == "update":
+            k = rng.choice("abc")
+            eng.sql(f"UPDATE fd SET v = v + 1 WHERE k = '{k}'")
+            stored.update({key: v + 1 for key, v in stored.items() if key[1] == k})
+        elif op == "delete":
+            k, day = rng.choice("abc"), BASE + timedelta(days=rng.randrange(DAYS))
+            eng.ddl_tables["fd"].delete_where(
+                (F.col("k") == k) & (F.to_date("ts") == F.lit(day.date()))
+            )
+            _refresh_view(eng, "fd")
+            for key in [key for key in stored if key[1] == k and key[0].date() == day.date()]:
+                del stored[key]
+        elif op == "drop":
+            days = sorted({ts.date() for ts, _k in stored})
+            if len(days) < 2:
+                continue
+            day = rng.choice(days[:-1])
+            eng.sql(f"ALTER TABLE fd DROP PARTITION LIST '{day.isoformat()}'")
+            for key in [key for key in stored if key[0].date() == day]:
+                del stored[key]
+        elif op in ("refresh_incr", "refresh_full"):
+            mode = "INCREMENTAL" if op == "refresh_incr" else "FULL"
+            eng.sql(f"REFRESH MATERIALIZED VIEW fdv {mode}")
+            applied = dict(stored)
         else:
             check()
     check()

@@ -605,3 +605,154 @@ def test_vacuum_crash_keeps_rows(spark, tmppath, monkeypatch, step):
     assert not os.path.exists(os.path.join(tmppath, ".vacuum"))
     t2.vacuum()
     assert sorted(tuple(r) for r in t2.read().collect()) == want
+
+
+# -- the change log under a crash, read by a dialect view refresh ------------
+
+
+def _engine_with_view(spark, tmppath, dedup):
+    from questdb_spark.sqlfront.engine import QdbEngine
+
+    eng = QdbEngine(spark, warehouse=tmppath)
+    keys = " DEDUP UPSERT KEYS(ts, k)" if dedup else ""
+    eng.sql(
+        "CREATE TABLE cb (ts TIMESTAMP, k SYMBOL, v DOUBLE) TIMESTAMP(ts) "
+        f"PARTITION BY DAY WAL{keys}"
+    )
+    eng.sql(
+        "INSERT INTO cb VALUES (TIMESTAMP '2024-01-01 00:10:00', 'a', 1.0), "
+        "(TIMESTAMP '2024-01-02 00:10:00', 'b', 2.0)"
+    )
+    eng.sql("CREATE MATERIALIZED VIEW cv AS (SELECT ts, sum(v) s FROM cb SAMPLE BY 1h)")
+    return eng
+
+
+def _reopen_base(eng):
+    """A new ``TimeTable`` handle on the base, as after a restart."""
+    from questdb_spark.sqlfront.ddl import _refresh_view
+
+    t = eng.ddl_tables["cb"]
+    t2 = TimeTable(t.spark, t.path, t.ts_col, t.partition_by, t.dedup_keys)
+    t2.dedup_enabled = t.dedup_enabled
+    eng.ddl_tables["cb"] = t2
+    _refresh_view(eng, "cb")
+
+
+def _view_sums(eng):
+    return {str(r.ts): r.s for r in eng.sql("SELECT ts, s FROM cv").collect()}
+
+
+@pytest.mark.parametrize("dedup", [True, False], ids=["upsert", "append"])
+def test_view_refresh_after_commit_crash_equals_full(spark, tmppath, monkeypatch, dedup):
+    """A commit that dies right after its data write has logged its entry
+    first: the DEDUP upsert's range, or the plain append's unbounded entry
+    (never narrowed).  A refresh through a reopened table equals FULL."""
+    eng = _engine_with_view(spark, tmppath, dedup)
+
+    def crash(*_a, **_k):
+        raise OSError("injected crash after the data write")
+
+    monkeypatch.setattr(TimeTable, "_note_write", crash)
+    with pytest.raises(OSError, match="injected"):
+        eng.sql(
+            "INSERT INTO cb VALUES (TIMESTAMP '2024-01-01 00:10:00', 'a', 100.0), "
+            "(TIMESTAMP '2024-01-03 00:10:00', 'c', 3.0)"
+        )
+    monkeypatch.undo()
+    _reopen_base(eng)
+    route = eng.sql("REFRESH MATERIALIZED VIEW cv INCREMENTAL").first().detail
+    assert route == ("from 2024-01-01 00:00:00.000000" if dedup else "full")
+    got = _view_sums(eng)
+    assert got["2024-01-01 00:00:00"] == (100.0 if dedup else 101.0)
+    eng.sql("REFRESH MATERIALIZED VIEW cv FULL")
+    assert _view_sums(eng) == got
+
+
+def test_view_checkpoint_without_base_txn_refreshes_full_then_incrementally(
+    spark, tmppath
+):
+    """A checkpoint in the format before the change log (no ``base_txn``)
+    restores, refreshes in full once, then incrementally."""
+    eng = _engine_with_view(spark, tmppath, dedup=True)
+    d = eng.matviews.pop("cv")
+    state = os.path.join(d.table.path, "_lv_state.json")
+    with open(state) as f:
+        st = json.load(f)
+    st.pop("base_txn")
+    st.update(hwm="2024-01-02T00:10:00+00:00", frozen_count=1, base_count=2)
+    with open(state, "w") as f:
+        json.dump(st, f)
+    restored = eng.sql(
+        "CREATE MATERIALIZED VIEW cv AS (SELECT ts, sum(v) s FROM cb SAMPLE BY 1h)"
+    ).first()
+    assert restored.detail == "restored from checkpoint"
+    eng.sql("INSERT INTO cb VALUES (TIMESTAMP '2024-01-01 00:10:00', 'a', 7.0)")
+    assert eng.sql("REFRESH MATERIALIZED VIEW cv INCREMENTAL").first().detail == "full"
+    eng.sql("INSERT INTO cb VALUES (TIMESTAMP '2024-01-02 05:10:00', 'a', 4.0)")
+    route = eng.sql("REFRESH MATERIALIZED VIEW cv INCREMENTAL").first().detail
+    assert route == "from 2024-01-02 05:00:00.000000"
+    assert _view_sums(eng) == {
+        "2024-01-01 00:00:00": 7.0,
+        "2024-01-02 00:00:00": 2.0,
+        "2024-01-02 05:00:00": 4.0,
+    }
+
+
+def test_change_log_entries(spark, tmppath):
+    """Each op's entry: ranges for DEDUP commits and plain appends (the
+    append's narrowed after its write), unbounded for UPDATE, DELETE and
+    column DDL; ``vacuum`` and ``compact`` log nothing; the log keeps its
+    tail and a gap reads as unknown."""
+    us = lambda dt: int((dt - datetime(1970, 1, 1)).total_seconds()) * 1_000_000  # noqa: E731
+    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    t.append(spark.createDataFrame(_mk_rows(), _COLS), seq=1)
+    m0 = t.log_mark()
+    assert t.changes_since(m0) == ()
+    late = [(6, "a", datetime(2024, 1, 2, 9), 60.0)]
+    t.append(spark.createDataFrame(late, _COLS), seq=2)
+    lo = hi = us(datetime(2024, 1, 2, 9))
+    assert t.changes_since(m0) == (lo, us(datetime(2024, 1, 3, 9)))
+    m1 = t.log_mark()
+    t.compact()
+    t.vacuum()
+    assert t.changes_since(m1) == ()
+    t.update_where(F.col("sym") == "a", {"price": F.lit(0.0)})
+    assert t.changes_since(m1) is None
+    m2 = t.log_mark()
+    t.add_column("note", "string")
+    assert t.changes_since(m2) is None
+    assert t.changes_since(None) is None
+    assert t.changes_since(("another-log", m2[1])) is None
+    plain = TimeTable(spark, tmppath + "_plain", "ts")
+    plain.append(spark.createDataFrame(_mk_rows(), _COLS))
+    m3 = plain.log_mark()
+    plain.append(spark.createDataFrame(late, _COLS))
+    assert plain.changes_since(m3) == (lo, us(datetime(2024, 1, 3, 9)))
+    plain.delete_where(F.col("sym") == "a")
+    assert plain.changes_since(m3) is None
+    for _ in range(70):  # past the kept tail
+        plain._log_change(lo, hi)
+    assert plain.changes_since(m3) is None
+    m4 = plain.log_mark()
+    plain._log_change(lo, hi)
+    assert plain.changes_since(m4)[0] == lo
+
+
+def test_replace_from_keeps_rows_before_since(spark, tmppath):
+    """``replace_from`` rewrites the partition holding ``since`` (its rows
+    before ``since`` kept) and the partitions the new rows touch; earlier
+    partitions keep their files."""
+    t = TimeTable(spark, tmppath, "ts")
+    t.write(spark.createDataFrame(_mk_rows(), _COLS))
+    before = _parquet_mtimes(tmppath)
+    new = [(7, "c", datetime(2024, 1, 3, 12), 7.0)]
+    t.replace_from(spark.createDataFrame(new, _COLS), datetime(2024, 1, 2, 12))
+    got = sorted((r.id, str(r.ts)) for r in t.read().collect())
+    assert got == [
+        (1, "2024-01-01 10:00:00"),
+        (2, "2024-01-01 11:00:00"),
+        (3, "2024-01-02 09:00:00"),
+        (7, "2024-01-03 12:00:00"),
+    ]
+    day1 = {f: m for f, m in before.items() if "part_date=2024-01-01" in f}
+    assert day1 and all(_parquet_mtimes(tmppath).get(f) == m for f, m in day1.items())
