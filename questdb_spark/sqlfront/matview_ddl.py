@@ -32,7 +32,9 @@ Spark-first lowering (batch twin of ``streaming/matview.py``):
   UPDATE, DELETE, dropped partition or column change, a log that does not
   continue from the view's txn, a generic view's body) replaces the whole
   view with ``TimeTable.write``.  A base that is not a DDL table has no
-  log: a different registered frame refreshes in full.
+  log: a different registered frame refreshes in full.  A PERIOD view
+  also checkpoints the cut-off it last served; when the clock has moved
+  the cut-off on, the base rows between the two count as a logged range.
 """
 
 from __future__ import annotations
@@ -103,6 +105,7 @@ class MatViewDef:
     period_length: str = ""  # '' = no PERIOD clause
     period_tz: str | None = None
     period_delay: str = ""
+    period_cut: datetime | None = None  # the cut-off the last refresh served
     # ALTER MATERIALIZED/LIVE VIEW state (r10 — SqlCompilerImpl.java:2145
     # compileAlterMatView, :2126 compileAlterLiveView):
     wal_suspended: bool = False  # SUSPEND WAL: refreshes park, reads serve stored
@@ -727,8 +730,15 @@ def _base_changes(eng: QdbEngine, d: MatViewDef):
     return frame, () if unchanged else None
 
 
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
 def _from_us(us: int) -> datetime:
-    return datetime(1970, 1, 1, tzinfo=timezone.utc) + timedelta(microseconds=us)
+    return _EPOCH + timedelta(microseconds=us)
+
+
+def _to_us(dt: datetime) -> int:
+    return (dt - _EPOCH) // timedelta(microseconds=1)
 
 
 def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> str:
@@ -740,6 +750,15 @@ def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> str:
     # read the base's position BEFORE the compute: an op committed while
     # the view computes is then seen again by the next refresh
     mark, change = _base_changes(eng, d)
+    # a PERIOD view's cut-off moves with the clock: base rows in [the cut
+    # the view last served, the current one) count as logged
+    cut = _period_cutoff(d, _now())
+    if cut != d.period_cut and change is not None:
+        if cut is None or d.period_cut is None or cut < d.period_cut:
+            change = None
+        else:
+            lo, hi = _to_us(d.period_cut), _to_us(cut) - 1
+            change = (min(change[0], lo), max(change[1], hi)) if change else (lo, hi)
     if change == () and not full:
         return "unchanged"
     since = None
@@ -767,6 +786,7 @@ def _refresh(eng: QdbEngine, d: MatViewDef, full: bool) -> str:
         d.base_frame, d.base_txn = mark, None
     else:
         d.base_frame, d.base_txn = None, mark
+    d.period_cut = cut
     _save_state(d)
     _register(eng, d)
     if d.ttl_hours_or_months:
@@ -822,6 +842,7 @@ def _save_state(d: MatViewDef) -> None:
             "inner_sql": d.inner_sql,
             "shape": d.shape,
             "base_txn": d.base_txn,
+            "period_cut": d.period_cut.isoformat() if d.period_cut else None,
             "next_due": d.next_due.isoformat() if d.next_due else None,
             "wal_suspended": d.wal_suspended,
             "refresh_limit": d.refresh_limit,
@@ -848,6 +869,11 @@ def _restore_state(eng: QdbEngine, d: MatViewDef) -> bool:
     if st.get("inner_sql") != d.inner_sql or st.get("shape") != d.shape:
         return False
     d.base_txn = tuple(st["base_txn"]) if st.get("base_txn") else None
+    # a checkpoint without the served cut-off refreshes a PERIOD view in
+    # full once
+    d.period_cut = (
+        datetime.fromisoformat(st["period_cut"]) if st.get("period_cut") else None
+    )
     d.next_due = (
         datetime.fromisoformat(st["next_due"]) if st.get("next_due") else None
     )

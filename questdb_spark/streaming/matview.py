@@ -93,10 +93,12 @@ def latest_on_liveview(
     trigger_available_now: bool = False,
 ):
     """Live view (QuestDB ``cairo/lv/`` checkpointed incremental state):
-    continuously maintain LATEST ON ts PARTITION BY keys as a parquet table.
+    continuously maintain LATEST ON ts PARTITION BY keys as an
+    unpartitioned ``TimeTable`` at ``path``.
 
     Stateful streaming max_by per key in update mode; each micro-batch
-    merges its changed keys into the result (checkpoint = the live-view
+    merges its changed keys into the result and replaces the view with
+    ``TimeTable.write``, one partition commit (checkpoint = the live-view
     checkpoint store)."""
     keys = list(keys)
     payload = [c for c in stream.columns if c not in keys]
@@ -108,24 +110,23 @@ def latest_on_liveview(
         )
         .select(*keys, *[F.col("__row")[c].alias(c) for c in payload])
     )
+    view = TimeTable(stream.sparkSession, path, ts_col, "none")
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
         if not batch.columns:
             return
-        spark = batch.sparkSession
         out = batch
         if _any_parquet(path):
             # null-safe key match: a NULL key is one key, like the
             # TimeTable merge (a name-based join never matches NULLs)
-            e, b = spark.read.parquet(path).alias("e"), batch.select(*keys).alias("b")
+            e = view.read().select(*batch.columns).alias("e")
+            b = batch.select(*keys).alias("b")
             same = reduce(
                 lambda x, y: x & y,
                 [F.col(f"e.{k}").eqNullSafe(F.col(f"b.{k}")) for k in keys],
             )
             out = batch.unionByName(e.join(b, same, "left_anti"))
-        tmp = path.rstrip("/") + ".lv_tmp"
-        out.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
+        view.write(out)
 
     w = (
         latest.writeStream.outputMode("update")

@@ -1538,3 +1538,82 @@ def test_unknown_time_zone_raises():
     assert _tz_offset("+02:00", now).total_seconds() == 7200
     with pytest.raises(ValueError, match="invalid timezone"):
         _tz_offset("Mars/Olympus_Mons", now)
+
+
+def test_matview_upsert_out_of_filter_empties_since_partition(eng):
+    """An upsert moves the only row of the partition holding the refresh's
+    ``since`` out of the view's filter: INCREMENTAL drops its bucket, as
+    FULL does."""
+    _dedup_base(eng)
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-02 00:10:00', 'c', 4.0)")
+    eng.sql(
+        "CREATE MATERIALIZED VIEW ov AS ("
+        "SELECT ts, sum(v) s FROM db WHERE v < 50 SAMPLE BY 1h)"
+    )
+    eng.sql("INSERT INTO db VALUES (TIMESTAMP '2024-01-02 00:10:00', 'c', 99.0)")
+    assert _route(eng, "ov") == "from 2024-01-02 00:00:00.000000"
+    got = _sums(eng, "ov")
+    assert got == {"2024-01-01 00:00:00": 1.0, "2024-01-01 01:00:00": 2.0}
+    assert _route(eng, "ov", "FULL") == "full"
+    assert _sums(eng, "ov") == got
+
+
+def test_matview_zero_row_append_leaves_view_unchanged(eng):
+    """A plain INSERT ... SELECT that matches no row changes nothing: the
+    next incremental refresh is ``unchanged``."""
+    eng.sql("CREATE TABLE pt (ts TIMESTAMP, v DOUBLE) TIMESTAMP(ts) PARTITION BY DAY")
+    eng.sql("INSERT INTO pt VALUES (TIMESTAMP '2024-01-01 00:10:00', 1.0)")
+    eng.sql("CREATE MATERIALIZED VIEW zv AS (SELECT ts, sum(v) s FROM pt SAMPLE BY 1h)")
+    eng.sql("INSERT INTO pt SELECT * FROM pt WHERE v < 0")
+    assert _route(eng, "zv") == "unchanged"
+    assert _sums(eng, "zv") == {"2024-01-01 00:00:00": 1.0}
+
+
+def _period_view(eng, monkeypatch):
+    from datetime import datetime, timezone
+
+    _mk_base(eng)
+    eng.sql("INSERT INTO tb VALUES (3.0,'2024-01-01T02:10:00Z')")
+    _fix_now(monkeypatch, datetime(2024, 1, 1, 2, 30, tzinfo=timezone.utc))
+    eng.sql(
+        "CREATE MATERIALIZED VIEW mvp WITH BASE tb "
+        "REFRESH IMMEDIATE PERIOD (LENGTH 1h DELAY 5m) AS ("
+        "SELECT ts, sum(v) s FROM tb SAMPLE BY 1h)"
+    )
+    assert eng.sql("SELECT count(*) n FROM mvp").first().n == 2
+    # now past 03:05: the third period is complete
+    _fix_now(monkeypatch, datetime(2024, 1, 1, 3, 6, tzinfo=timezone.utc))
+
+
+def test_matview_period_incremental_follows_cutoff(eng, monkeypatch):
+    """The clock moves a PERIOD view's cut-off on with no base change: an
+    incremental refresh recomputes from the cut-off it last served."""
+    _period_view(eng, monkeypatch)
+    assert _route(eng, "mvp") == "from 2024-01-01 02:00:00.000000"
+    assert eng.sql("SELECT count(*) n FROM mvp").first().n == 3
+    assert _route(eng, "mvp") == "unchanged"
+
+
+def test_matview_period_checkpoint_without_cutoff_refreshes_full(eng, monkeypatch):
+    """A checkpoint without the served cut-off restores, then refreshes a
+    PERIOD view in full once."""
+    import json
+    import os
+
+    _period_view(eng, monkeypatch)
+    d = eng.matviews.pop("mvp")
+    state = os.path.join(d.table.path, "_lv_state.json")
+    with open(state) as f:
+        st = json.load(f)
+    st.pop("period_cut")
+    with open(state, "w") as f:
+        json.dump(st, f)
+    restored = eng.sql(
+        "CREATE MATERIALIZED VIEW mvp WITH BASE tb "
+        "REFRESH IMMEDIATE PERIOD (LENGTH 1h DELAY 5m) AS ("
+        "SELECT ts, sum(v) s FROM tb SAMPLE BY 1h)"
+    ).first()
+    assert restored.detail == "restored from checkpoint"
+    assert _route(eng, "mvp") == "full"
+    assert eng.sql("SELECT count(*) n FROM mvp").first().n == 3
+    assert _route(eng, "mvp") == "unchanged"

@@ -356,7 +356,7 @@ def test_fuzz_op_sequence(spark, seed, dedup, unit):
                 # SQUASH PARTITIONS: compaction only, never a semantic
                 # change — and legal while suspended (parked txns live in
                 # the pending queue, not in partition dirs)
-                t.vacuum(max_files_per_partition=1)
+                t.vacuum()
             elif op == "forcedrop":
                 # FORCE DROP PARTITION bypasses the suspension guard
                 live_days = sorted({sh.part_of(r["ts"]) for r in sh.rows})
@@ -487,3 +487,155 @@ def test_fuzz_in_order_commits(spark, seed, unit):
             assert got == want, f"seed={seed} unit={unit} step={step} op={op}"
     finally:
         shutil.rmtree(path, ignore_errors=True)
+
+
+# -- crash points of the partition commit -------------------------------------
+# Every op that replaces or drops partitions commits through one record.
+# Each op runs once to count the steps it reaches — staged writes, the
+# record write, renames, the schema-cache fold, the stage delete — then
+# once per step with that step raising.  A reopened table must read the
+# shadow from before the op when the crash came before the record, and
+# from after it otherwise, with no stage left behind.
+
+_STEPS_BEFORE_RECORD = ("write", "record")
+_DAY = timedelta(days=1)
+
+
+def _crash_template(spark, path) -> Shadow:
+    """A DEDUP day table over three partitions, each written by two
+    in-order commits (two files each, so ``vacuum`` has work)."""
+    t = TimeTable(spark, path, "ts", "day", dedup_keys=["k"])
+    sh = Shadow(True)
+    hours = [[0, 6, 12], [18, 30], [42, 54], [66]]
+    for seq, hs in enumerate(hours):
+        b = [
+            {"ts": BASE + timedelta(hours=h), "k": KEYS[(h // 6) % 3], "v": float(h)}
+            for h in hs
+        ]
+        t.append(_spark_batch(spark, sh, b), seq=seq)
+        sh.append(b)
+    return sh
+
+
+def _crash_op(spark, t: TimeTable, sh: Shadow, op: str) -> Shadow:
+    """Apply ``op`` to ``t``; return the shadow after it."""
+    import copy
+
+    after = copy.deepcopy(sh)
+    if op == "merge":  # late rows into two partitions, one an upsert
+        b = [
+            {"ts": BASE + timedelta(hours=6), "k": KEYS[1], "v": 600.0},
+            {"ts": BASE + timedelta(hours=31), "k": "d", "v": 31.0},
+        ]
+        t.append(_spark_batch(spark, sh, b), seq=9)
+        after.append(b)
+    elif op == "update":
+        t.update_where(F.col("k") == "a", {"v": F.lit(-1.0)})
+        after.update("a", "v", -1.0)
+    elif op == "delete":  # empties the first partition, thins the second
+        t.delete_where((F.col("ts") < F.lit(BASE + _DAY)) | (F.col("v") == 30.0))
+        after.rows = [
+            r for r in after.rows if r["ts"] >= BASE + _DAY and r["v"] != 30.0
+        ]
+    elif op == "replace_from":  # the stored rows carry the seq column
+        since = BASE + timedelta(hours=24)
+        b = [{"ts": BASE + timedelta(hours=50), "k": "d", "v": 50.0}]
+        t.replace_from(
+            _spark_batch(spark, sh, b).withColumn(t.seq_col, F.lit(0)), since
+        )
+        after.rows = [r for r in after.rows if r["ts"] < since] + b
+    elif op == "write":
+        b = [{"ts": BASE + timedelta(hours=30), "k": "d", "v": 1.0}]
+        t.write(_spark_batch(spark, sh, b))
+        after.rows = b
+    elif op == "compact":
+        t.compact()
+    elif op == "vacuum":
+        assert t.vacuum() == 3
+    elif op == "droppart":
+        t.drop_partition(_part_str(sh, (BASE + _DAY).date()))
+        after.drop_partition((BASE + _DAY).date())
+    else:  # ttl: evicts the two older partitions
+        t.ttl_hours_or_months = after.ttl_hours = 12
+        assert len(t.enforce_ttl()) == 2
+        after.enforce_ttl()
+    return after
+
+
+def _instrument(monkeypatch, crash_at=None):
+    """Count the commit's steps, and raise at ``crash_at`` = (step, k)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from questdb_spark import table as table_mod
+
+    seen: dict[str, int] = {}
+
+    def in_stage(args):
+        return any(
+            ".stage" in os.fspath(x) for x in args if isinstance(x, (str, os.PathLike))
+        )
+
+    def step(kind, real, match):
+        def wrapped(*a, **k):
+            if not match(a):
+                return real(*a, **k)
+            seen[kind] = seen.get(kind, 0) + 1
+            if crash_at == (kind, seen[kind]):
+                if kind == "write":
+                    real(*a, **k)  # the staged copy is complete, then the crash
+                raise OSError(f"injected crash at {kind} {seen[kind]}")
+            return real(*a, **k)
+
+        return wrapped
+
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet",
+        step("write", DataFrameWriter.parquet, lambda a: in_stage(a[1:2])),
+    )
+    monkeypatch.setattr(
+        table_mod, "_write_json",
+        step("record", table_mod._write_json, lambda a: a[0].endswith("commit.json")),
+    )
+    monkeypatch.setattr(os, "rename", step("rename", os.rename, in_stage))
+    monkeypatch.setattr(
+        TimeTable, "_note_write", step("note", TimeTable._note_write, lambda a: True)
+    )
+    monkeypatch.setattr(shutil, "rmtree", step("delete", shutil.rmtree, in_stage))
+    return seen
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["merge", "update", "delete", "replace_from", "write", "compact", "vacuum",
+     "droppart", "ttl"],
+)
+def test_crash_point_every_rewrite(spark, tmp_path, monkeypatch, op):
+    template = str(tmp_path / "template")
+    sh = _crash_template(spark, template)
+
+    def run(name, crash_at=None):
+        path = str(tmp_path / name)
+        shutil.copytree(template, path)
+        t = TimeTable(spark, path, "ts", "day", dedup_keys=["k"])
+        seen = _instrument(monkeypatch, crash_at)
+        try:
+            after = _crash_op(spark, t, sh, op)
+        finally:
+            monkeypatch.undo()
+        return path, after, seen
+
+    path, after, counts = run("clean")
+    assert not os.path.exists(os.path.join(path, ".stage"))
+    assert _snapshot_table(TimeTable(spark, path, "ts", "day", ["k"]), sh) == (
+        _snapshot_shadow(after)
+    )
+    assert "record" in counts and "rename" in counts and "delete" in counts
+    for kind, n in sorted(counts.items()):
+        for k in range(1, n + 1):
+            with pytest.raises(OSError, match="injected"):
+                run(f"{kind}{k}", (kind, k))
+            path = str(tmp_path / f"{kind}{k}")
+            t = TimeTable(spark, path, "ts", "day", dedup_keys=["k"])
+            want = sh if kind in _STEPS_BEFORE_RECORD else after
+            assert not os.path.exists(os.path.join(path, ".stage")), (kind, k)
+            assert _snapshot_table(t, sh) == _snapshot_shadow(want), (kind, k)

@@ -369,7 +369,7 @@ def test_state_json_torn_write_raises(spark, tmppath):
 
 def test_write_replaces_after_dedup_upserts(spark, tmppath):
     """``write`` replaces the whole table even after dedup upserts, which
-    overwrite partitions dynamically: none of the earlier rows survive."""
+    rewrite partitions: none of the earlier rows survive."""
     t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
     cols = ["id", "sym", "ts", "price"]
     t.append(spark.createDataFrame([(1, "a", datetime(2024, 1, 1, 10), 1.0)], cols), seq=1)
@@ -379,7 +379,7 @@ def test_write_replaces_after_dedup_upserts(spark, tmppath):
 
 
 def test_upsert_leaves_session_overwrite_mode(spark, tmppath):
-    """A dedup upsert rewrites partitions with a per-write overwrite mode;
+    """A dedup upsert rewrites partitions through the partition commit;
     the session's ``partitionOverwriteMode`` reads the same afterwards."""
     key = "spark.sql.sources.partitionOverwriteMode"
     before = spark.conf.get(key)
@@ -396,18 +396,18 @@ def test_upsert_leaves_session_overwrite_mode(spark, tmppath):
 
 
 def test_compact_crash_at_rename_in_keeps_old_table(spark, tmppath, monkeypatch):
-    """A crash between moving the live directory out and the rewrite in:
-    a table opened afterwards reads the rows as they were before
-    ``compact``."""
+    """A crash at the rename of a staged partition into the table: a table
+    opened afterwards reads the rows as they were before ``compact``."""
     t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
     df = spark.createDataFrame(_mk_rows(), ["id", "sym", "ts", "price"])
     t.append(df, seq=1)
     t.append(df.filter(F.col("id") == 5).withColumn("price", F.lit(50.0)), seq=2)
     want = sorted(tuple(r) for r in t.read().collect())
     rename = os.rename
+    staged = os.path.join(tmppath, ".stage", "new") + os.sep
 
     def rename_in_fails(src, dst):
-        if os.fspath(dst) == tmppath:
+        if os.fspath(src).startswith(staged):
             raise OSError("injected crash at the rename-in")
         rename(src, dst)
 
@@ -417,31 +417,6 @@ def test_compact_crash_at_rename_in_keeps_old_table(spark, tmppath, monkeypatch)
     monkeypatch.undo()
     t2 = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
     assert sorted(tuple(r) for r in t2.read().collect()) == want
-
-
-def test_compact_crash_after_rename_in_finishes_on_open(spark, tmppath, monkeypatch):
-    """A crash after the rewrite went in but before the sidecar state moved
-    across: opening the table finishes the swap, so the detached partition
-    and the compacted rows are both there."""
-    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
-    t.append(spark.createDataFrame(_mk_rows(), ["id", "sym", "ts", "price"]), seq=0)
-    t.detach_partition("2024-01-01")
-    want = sorted(tuple(r) for r in t.read().collect())
-    rename = os.rename
-
-    def carry_fails(src, dst):
-        if os.fspath(src).startswith(tmppath + ".aside" + os.sep):
-            raise OSError("injected crash while carrying sidecars")
-        rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", carry_fails)
-    with pytest.raises(OSError, match="injected"):
-        t.compact()
-    monkeypatch.undo()
-    t2 = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
-    assert not os.path.exists(tmppath + ".aside")
-    assert sorted(tuple(r) for r in t2.read().collect()) == want
-    assert t2.attach_partition("2024-01-01") == ["2024-01-01"]
 
 
 # -- in-order commits and the max_ts bound --------------------------------
@@ -577,7 +552,7 @@ def test_vacuum_crash_keeps_rows(spark, tmppath, monkeypatch, step):
         seen = []
 
         def wrapped(*a, **k):
-            if any(".vacuum" in os.fspath(x) for x in a if isinstance(x, (str, os.PathLike))):
+            if any(".stage" in os.fspath(x) for x in a if isinstance(x, (str, os.PathLike))):
                 seen.append(a)
                 if len(seen) == nth:
                     if name == "write":
@@ -602,7 +577,7 @@ def test_vacuum_crash_keeps_rows(spark, tmppath, monkeypatch, step):
     monkeypatch.undo()
     t2 = TimeTable(spark, tmppath, "ts")
     assert sorted(tuple(r) for r in t2.read().collect()) == want
-    assert not os.path.exists(os.path.join(tmppath, ".vacuum"))
+    assert not os.path.exists(os.path.join(tmppath, ".stage"))
     t2.vacuum()
     assert sorted(tuple(r) for r in t2.read().collect()) == want
 
@@ -756,3 +731,53 @@ def test_replace_from_keeps_rows_before_since(spark, tmppath):
     ]
     day1 = {f: m for f, m in before.items() if "part_date=2024-01-01" in f}
     assert day1 and all(_parquet_mtimes(tmppath).get(f) == m for f, m in day1.items())
+
+
+# -- the partition commit ------------------------------------------------------
+
+
+def test_added_column_value_survives_crash_at_schema_fold(spark, tmppath, monkeypatch):
+    """An O3 commit that sets a column added by ADD COLUMN, cut short at
+    the schema-cache fold after its renames: the commit record still holds
+    the fold, so a reopened table reads the value."""
+    t = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    t.append(spark.createDataFrame(_mk_rows(), _COLS), seq=1)
+    t.add_column("c", "double")
+    late = spark.createDataFrame(
+        [(1, "a", datetime(2024, 1, 1, 10), 1.0, 7.0)], [*_COLS, "c"]
+    )
+
+    def crash(*_a, **_k):
+        raise OSError("injected crash at the schema fold")
+
+    monkeypatch.setattr(TimeTable, "_note_write", crash)
+    with pytest.raises(OSError, match="injected"):
+        t.append(late, seq=2)
+    monkeypatch.undo()
+    t2 = TimeTable(spark, tmppath, "ts", dedup_keys=["sym"])
+    assert not os.path.exists(os.path.join(tmppath, ".stage"))
+    got = {r["id"]: r["c"] for r in t2.read().collect()}
+    assert got == {1: 7.0, 2: None, 3: None, 4: None, 5: None}
+
+
+def test_zero_row_append_logs_nothing_changed(spark, tmppath, monkeypatch):
+    """A plain append that writes no row narrows its entry to "nothing
+    changed"; cut short before the narrowing, the entry stays unbounded."""
+    t = TimeTable(spark, tmppath, "ts")
+    t.append(spark.createDataFrame(_mk_rows(), _COLS))
+    mark = t.log_mark()
+
+    def nothing():
+        return t.read().drop("part_date").filter(F.col("price") < 0)
+
+    t.append(nothing())
+    assert t.changes_since(mark) == ()
+
+    def crash(*_a, **_k):
+        raise OSError("injected crash before the narrowing")
+
+    monkeypatch.setattr(TimeTable, "_narrow_change", crash)
+    with pytest.raises(OSError, match="injected"):
+        t.append(nothing())
+    assert t.changes_since(mark) is None
+
